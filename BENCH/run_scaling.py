@@ -66,9 +66,10 @@ def main() -> None:
     # epoch change, so record entry and exit.
     # ALSO measure the host's own 2-thread and 8-thread sha256
     # throughput: their ratio is the ceiling ANY 2v8 sweep can show on
-    # this box (probe_stage02c: even idle, the host scales 1->8
-    # threads at only 0.64 on embarrassingly-parallel work — a real
-    # cluster's executors do not share a throttled hypervisor).  The
+    # this box (BENCH/BASELINE.md r6e probes: even idle, the host
+    # scales 1->8 threads at only 0.64 on embarrassingly-parallel work
+    # — a real cluster's executors do not share a throttled
+    # hypervisor).  The
     # summary reports raw efficiency AND efficiency normalized by this
     # same-window host ceiling.
     calib_start = cpu_calibration()

@@ -121,9 +121,10 @@ GATE
     # pin GC threads to the task-core count: a real cluster's executor
     # JVM sizes GC workers to its container cores, but local[N] on this
     # 32-core guest defaults to 23 ParallelGCThreads at BOTH levels —
-    # probe_stage02c caught young-GC pause time inflating ~25x at
-    # local[8] when the host throttled (32-wide GC pauses are the most
-    # host-parallelism-sensitive op in the JVM), old-gen count 0.
+    # the r6e GC probe (BENCH/BASELINE.md) caught young-GC pause time
+    # inflating ~25x at local[8] when the host throttled (32-wide GC
+    # pauses are the most host-parallelism-sensitive op in the JVM),
+    # old-gen count 0.
     # Matching GC width to task width removes that asymmetric amplifier.
     CONC=$(( CORES / 4 )); [ "$CONC" -lt 1 ] && CONC=1
     GCOPTS="-XX:ParallelGCThreads=$CORES -XX:ConcGCThreads=$CONC"
@@ -175,9 +176,9 @@ out = {f"local{n}": rN, f"local{n4}": r4N,
 # ratio a PERFECT job could show on this shared host right now.  It is
 # an epoch property: a healthy window measures ~0.98 on pure sha256
 # (throttle_probe_result.json) but a degraded one ~0.68
-# (probe_stage02c's bracket).  Normalized efficiency reads the engine
-# against the host it actually ran on; raw efficiency stays the
-# headline, this contextualizes it.
+# (the r6e GC probe's bracket, BENCH/BASELINE.md).  Normalized
+# efficiency reads the engine against the host it actually ran on; raw
+# efficiency stays the headline, this contextualizes it.
 ceil = [r.get("host_2v8_ceiling") for r in (rN, r4N) if r.get("host_2v8_ceiling")]
 if ceil:
     out["host_2v8_ceiling_avg"] = round(sum(ceil) / len(ceil), 3)

@@ -81,10 +81,10 @@ def parse_v4_strict(arr: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     form for the valid rows — zero per-row Python.  Measured 21 ms vs
     67 ms for the r6 per-row ``inet_aton`` loop on a 65k bench-shaped
     batch; profiling showed this parse was >80% of the geoip / is_in /
-    to_address batch kernels.  Batches Arrow cannot ingest as strings
-    (mixed object types) fall back to the per-row parser, preserving
-    the non-str -> invalid contract.  Equivalence with V4_FULLMATCH
-    (and with the fallback) is property-tested in
+    to_address batch kernels.  Batches Arrow does not infer as strings
+    (bytes-like rows, mixed object types) fall back to the per-row
+    parser, preserving the non-str -> invalid contract.  Equivalence
+    with V4_FULLMATCH (and with the fallback) is property-tested in
     tests/test_kernels_hypothesis.py.
     """
     n = len(arr)
@@ -95,16 +95,14 @@ def parse_v4_strict(arr: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        # Arrow would silently utf8-DECODE bytes rows into strings,
-        # but the kernel contract is non-str -> invalid (a Spark column
-        # is never mixed str/bytes, so this scan is pure defense)
-        if np.fromiter(
-            (isinstance(v, (bytes, bytearray, memoryview)) for v in arr),
-            dtype=bool,
-            count=n,
-        ).any():
+        # let Arrow infer the type: any bytes-like row makes it binary
+        # (a str/int mix raises), and the kernel contract is non-str ->
+        # invalid, so only string (or all-null) batches take this path
+        a = pa.array(arr, from_pandas=True)
+        if a.type == pa.null():
+            a = a.cast(pa.string())
+        elif a.type != pa.string():
             return _parse_v4_strict_obj(arr)
-        a = pa.array(arr, type=pa.string(), from_pandas=True)
         ok = pc.fill_null(pc.match_substring_regex(a, _V4_RE2), False)
         okn = ok.to_numpy(zero_copy_only=False)
         if okn.any():

@@ -1,4 +1,4 @@
-"""Parallelism guard for under-partitioned inputs.
+"""Parallelism guards: under-partitioned inputs and pinned fan-out.
 
 A small parquet file scans as ONE partition (row-group granularity —
 ``spark.sql.files.maxPartitionBytes`` cannot split below it), which
@@ -27,3 +27,13 @@ def ensure_parallelism(df: DataFrame, min_ratio: float = 0.5) -> DataFrame:
     if cur < target * min_ratio:
         return df.repartition(target)
     return df
+
+
+def pinned_partitions(df: DataFrame) -> int:
+    """Partition count for an explicit repartition ahead of a join whose
+    output explodes: AQE coalesces exchanges by INPUT bytes, and a user
+    repartition is exempt.  Spark Connect has no sparkContext: 16."""
+    try:
+        return max(df.sparkSession.sparkContext.defaultParallelism * 2, 8)
+    except Exception:
+        return 16

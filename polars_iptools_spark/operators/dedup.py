@@ -17,19 +17,20 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions._par import ensure_parallelism
+from ..functions._par import ensure_parallelism, pinned_partitions
 
 
 class CacheScope:
     """Owner-scoped release for the intermediate frames this module
-    persists (minhash shingle sets, simhash signatures).
+    persists (minhash shingle sets, every :func:`_bucket_pairs` frame).
 
-    The persisted handles are internal to the returned lazy plans, so
-    the pair functions cannot unpersist them after materialization —
-    without a scope they stay in Spark's CacheManager until LRU
-    eviction or session end.  Batch drivers processing many corpora in
-    one session pass a scope and release it once the result is
-    materialized::
+    The one cache contract: those frames always persist.  The handles
+    are internal to the returned lazy plans, so the pair functions
+    cannot unpersist them after materialization — they stay in Spark's
+    CacheManager until LRU eviction or session end, unless released
+    through a scope or ``spark.catalog.clearCache()``.  Batch drivers
+    processing many corpora in one session pass a scope and release it
+    once the result is materialized::
 
         with CacheScope() as caches:
             simhash_pairs(df, "id", "text", caches=caches).write.parquet(p)
@@ -101,20 +102,31 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+def _drop_hot_keys(df: DataFrame, keys: list[str], max_rows: int | None) -> DataFrame:
+    """The one skew guard: drop the rows whose ``keys`` value more than
+    ``max_rows`` rows hold (a key shared by k rows makes a self-join on
+    it emit O(k²) pairs).  The hot set stays distributed; only the
+    anti-join side is broadcast.  Output leads with ``keys``."""
+    if not max_rows:
+        return df
+    hot = (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("c"))
+        .where(F.col("c") > max_rows)
+    )
+    return df.join(F.broadcast(hot.select(*keys)), keys, "left_anti")
+
+
 def _shingle_index(
     df: DataFrame, id_col: str, text_col: str, k: int, max_shingle_freq: int | None
 ) -> DataFrame:
-    df = ensure_parallelism(df)
-    idx = df.select(
+    """One (doc, sh) row per distinct shingle of each doc, hot shingles
+    dropped by :func:`_drop_hot_keys`."""
+    idx = ensure_parallelism(df).select(
         F.col(id_col).alias("doc"),
         F.explode(F.array_distinct(word_shingles(F.col(text_col), k))).alias("sh"),
     )
-    if max_shingle_freq:
-        hot = idx.groupBy("sh").agg(F.count(F.lit(1)).alias("c")).where(
-            F.col("c") > max_shingle_freq
-        )
-        idx = idx.join(F.broadcast(hot.select("sh")), "sh", "left_anti")
-    return idx
+    return _drop_hot_keys(idx, ["sh"], max_shingle_freq)
 
 
 def ngram_jaccard_pairs(
@@ -132,19 +144,9 @@ def ngram_jaccard_pairs(
     """
     idx = _shingle_index(df, id_col, text_col, k, max_shingle_freq)
     sizes = idx.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-    # explicit hash repartition on the join key, pinned partition count:
-    # the self-join's INPUT is small but its output explodes
-    # quadratically per shingle, and AQE coalesces exchanges by input
-    # bytes — without this the pair blow-up serializes onto a handful
-    # of tasks (same reason as blocking.candidate_pairs; user
-    # repartitions are exempt from AQE coalescing)
-    try:
-        parts = max(df.sparkSession.sparkContext.defaultParallelism * 2, 8)
-    except Exception:
-        # Spark Connect has no sparkContext — fall back to a fixed
-        # fan-out (same contract as functions/_par.ensure_parallelism)
-        parts = 16
-    idx = idx.repartition(parts, "sh")
+    # the self-join's output explodes quadratically per shingle: pin
+    # its fan-out (same reason as blocking.candidate_pairs)
+    idx = idx.repartition(pinned_partitions(df), "sh")
     a = idx.select(F.col("doc").alias("doc_a"), "sh")
     b = idx.select(F.col("doc").alias("doc_b"), "sh")
     common = (
@@ -192,68 +194,43 @@ def _minhash_sig_array(shs: Column, num_hashes: int) -> Column:
     )
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3, num_hashes: int = 32
-) -> DataFrame:
-    """MinHash signature per doc: min over shingles of xxhash64(shingle,
-    seed_i) for each of ``num_hashes`` seeded hash functions.
-
-    Computed with a single fold over the per-doc shingle array — zero
-    shuffles, zero Python workers; a narrow map over the corpus scan."""
-    sets = shingle_sets(df, id_col, text_col, k)
-    # project the signature array ONCE, then extract elements from the
-    # attribute — extracting from the expression would recompute the
-    # fold per element
-    with_sig = sets.select(
-        "doc", _minhash_sig_array(F.col("shs"), num_hashes).alias("_sig")
-    )
-    return with_sig.select(
-        "doc", *[F.col("_sig")[i].alias(f"h{i}") for i in range(num_hashes)]
-    )
-
-
 def _bucket_pairs(
     buckets: DataFrame,
     max_bucket_size: int | None,
-    caches: "CacheScope | None" = None,
-    persist_buckets: bool = True,
+    caches: CacheScope | None = None,
     shuffle_pairs: int | None = None,
+    verify: tuple[str, Column, Column] | None = None,
 ) -> DataFrame:
-    """(doc, band, bucket) -> candidate doc pairs sharing a bucket.
+    """The one banded-LSH candidate generator: (doc, band, bucket, ...)
+    rows -> distinct (doc_a, doc_b) pairs, doc_a < doc_b, sharing a
+    bucket.  Oversized buckets are dropped first (:func:`_drop_hot_keys`);
+    their hash carries ~no information, so similar pairs survive via
+    their other bands.
 
-    Oversized buckets are dropped first: a bucket holding k docs emits
-    O(k²) pairs, so one degenerate (non-discriminative) bucket would
-    dominate the whole join — the LSH analog of the hot-shingle guard.
-    Dropped buckets are those where the hash carries ~no information,
-    so recall for genuinely similar pairs survives via their other
-    bands.
+    ``verify``: optional ``(name, value, keep)`` pair column, ``value``
+    computed from the carried ``x.*`` / ``y.*`` columns and rows failing
+    ``keep`` dropped BEFORE the pair dedup.
 
-    The bucket frame feeds THREE consumers (the hot-bucket histogram
-    and both sides of the self-join), and its producing subtree is the
-    expensive part of every caller — the minhash signature fold, the
-    simhash bit fold, or the hyperplane-matmul Arrow UDF.  Without a
-    materialization point Spark re-evaluates that subtree per consumer
-    (3x, measured in the r07 plan audit); ``persist_buckets``
-    materializes the tiny (doc, band, bucket) frame once.  Cache
-    retention follows the same contract as the callers' signature
-    persists (LRU / session end / an owning :class:`CacheScope`)."""
-    if persist_buckets:
-        buckets = _persist(buckets, caches)
-    if max_bucket_size:
-        hot = (
-            buckets.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .where(F.col("c") > max_bucket_size)
-        )
-        buckets = buckets.join(
-            F.broadcast(hot.select("band", "bucket")), ["band", "bucket"], "left_anti"
-        )
+    The bucket frame always persists: it feeds the hot-bucket histogram
+    and both self-join sides, and its producing subtree (a signature
+    fold or the hyperplane-matmul Arrow UDF) would otherwise run once
+    per consumer (3x in the r07 plan audit).  Release follows the
+    :class:`CacheScope` contract."""
+    buckets = _drop_hot_keys(
+        _persist(buckets, caches), ["band", "bucket"], max_bucket_size
+    )
+    cols = [F.col("x.doc").alias("doc_a"), F.col("y.doc").alias("doc_b")]
+    if verify:
+        name, value, keep = verify
+        cols.append(value.alias(name))
     pairs = (
         buckets.alias("x")
         .join(buckets.alias("y"), ["band", "bucket"])
         .where(F.col("x.doc") < F.col("y.doc"))
-        .select(F.col("x.doc").alias("doc_a"), F.col("y.doc").alias("doc_b"))
+        .select(*cols)
     )
+    if verify:
+        pairs = pairs.where(keep)
     # ``shuffle_pairs``: explicit hash repartition on the pair key,
     # pinned partition count (the same AQE-exemption guard as
     # ngram_jaccard_pairs / candidate_pairs).  The candidate frame is
@@ -280,47 +257,31 @@ def minhash_lsh_pairs(
     threshold: float = 0.5,
     max_shingle_freq: int | None = 1000,
     max_bucket_size: int | None = 2000,
-    persist_sets: bool = True,
     caches: CacheScope | None = None,
 ) -> DataFrame:
     """MinHash + banded LSH candidate generation, then exact Jaccard
     verification of candidates only (shingle→minhash→band→bucket-join).
 
-    ``caches``: optional :class:`CacheScope` that takes ownership of the
-    persisted shingle-set frame so the caller can free storage after
-    materialization (see the class docstring).
+    The shingle-set frame and the bucket frame always persist; pass a
+    :class:`CacheScope` as ``caches`` to release both after
+    materialization, or call ``spark.catalog.clearCache()``.
     """
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
-    sets = shingle_sets(df, id_col, text_col, k)
     if max_shingle_freq:
-        # Hot-shingle skew guard on the EXPLODED representation (same
-        # shape as _shingle_index): explode -> broadcast left_anti ->
-        # re-collect per doc.  The earlier variant collect_set-folded
-        # every hot shingle into ONE driver row and crossJoined it —
-        # at 100 TB the hot set is unbounded and that single row blows
-        # executor/driver memory; here hot shingles stay distributed
-        # (bounded per-partition) and only the anti-join side is
-        # broadcast, row-by-row.
-        exploded = sets.select("doc", F.explode("shs").alias("sh"))
-        hot = (
-            exploded.groupBy("sh")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .where(F.col("c") > max_shingle_freq)
-        )
+        # hot-shingle guard on the exploded index, re-collected per doc
         sets = (
-            exploded.join(F.broadcast(hot.select("sh")), "sh", "left_anti")
+            _shingle_index(df, id_col, text_col, k, max_shingle_freq)
             .groupBy("doc")
             .agg(F.collect_list("sh").alias("shs"))
         )
-    if persist_sets:
-        # the (filtered) shingle-set subtree feeds signatures, both
-        # sides of the bucket self-join and both sides of the
-        # verification join — without a materialization point Spark
-        # recomputes it per reference (measured 5x on large corpora)
-        # (retained until LRU eviction, session end, or CacheScope
-        # release — see the simhash_pairs docstring for the contract)
-        sets = _persist(sets, caches)
+    else:
+        sets = shingle_sets(df, id_col, text_col, k)
+    # the (filtered) shingle-set subtree feeds signatures, both sides of
+    # the bucket self-join and both sides of the verification join —
+    # without a materialization point Spark recomputes it per reference
+    # (measured 5x on large corpora)
+    sets = _persist(sets, caches)
     sigs = sets.select(
         "doc", "shs", _minhash_sig_array(F.col("shs"), num_hashes).alias("_sig")
     )
@@ -417,34 +378,18 @@ def simhash_pairs(
     max_hamming: int = 3,
     bands: int = 4,
     max_bucket_size: int | None = 2000,
-    persist_sigs: bool = True,
     caches: CacheScope | None = None,
 ) -> DataFrame:
     """Near-dup pairs by SimHash: band the 64-bit signature into
     ``bands`` segments (pigeonhole: hamming<=max_hamming implies at
-    least one identical segment when bands > max_hamming), bucket-join
-    with the oversized-bucket guard, verify hamming with bit_count.
+    least one identical segment when bands > max_hamming) and pair
+    through :func:`_bucket_pairs`, verifying hamming with bit_count.
 
-    The 8-byte signature RIDES THROUGH the bucket self-join (r07,
-    guide §2.3: carry small metadata instead of re-joining it): the
-    banding explode keeps ``simhash`` on every (doc, band, bucket) row,
-    the self-join emits both signatures with each candidate pair, and
-    hamming is verified BEFORE the pair dedup — so the two
-    verification joins of the previous shape disappear entirely and
-    the dedup shuffle carries only near-edge rows.  The exploded
-    segment frame (the subtree holding the signature fold) feeds the
-    oversized-bucket histogram and both self-join sides, so it is the
-    materialization point.
-
-    Cache retention: the persisted segment frame stays in Spark's
-    CacheManager until evicted (LRU) or the session ends — the handle
-    is internal to the returned lazy plan, so this function cannot
-    unpersist it after materialization.  Long-lived sessions invoking
-    this over many distinct corpora should pass a :class:`CacheScope`
-    as ``caches`` (released after materialization), pass
-    ``persist_sigs=False`` (the recompute costs ~2x signature time), or
-    manage storage via ``spark.catalog.clearCache()`` between corpora;
-    same contract as ``minhash_lsh_pairs(persist_sets=...)``."""
+    The 8-byte signature RIDES THROUGH the bucket self-join (carry small
+    metadata instead of re-joining it), so hamming is verified before
+    the pair dedup with no join back to the signatures.  The segment
+    frame always persists; release it through ``caches``
+    (:class:`CacheScope`) or ``spark.catalog.clearCache()``."""
     assert bands > max_hamming, "pigeonhole needs bands > max_hamming"
     sigs = simhash(df, id_col, text_col)
     seg_bits = 64 // bands
@@ -459,30 +404,12 @@ def simhash_pairs(
     segs = sigs.select(
         "doc", "simhash", F.posexplode(seg_array).alias("band", "bucket")
     )
-    if persist_sigs:
-        segs = _persist(segs, caches)
-    if max_bucket_size:
-        hot = (
-            segs.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .where(F.col("c") > max_bucket_size)
-        )
-        segs = segs.join(
-            F.broadcast(hot.select("band", "bucket")), ["band", "bucket"], "left_anti"
-        )
-    return (
-        segs.alias("x")
-        .join(segs.alias("y"), ["band", "bucket"])
-        .where(F.col("x.doc") < F.col("y.doc"))
-        .select(
-            F.col("x.doc").alias("doc_a"),
-            F.col("y.doc").alias("doc_b"),
-            F.bit_count(
-                F.col("x.simhash").bitwiseXOR(F.col("y.simhash"))
-            ).alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .dropDuplicates()
+    hamming = F.bit_count(F.col("x.simhash").bitwiseXOR(F.col("y.simhash")))
+    return _bucket_pairs(
+        segs,
+        max_bucket_size,
+        caches=caches,
+        verify=("hamming", hamming, F.col("hamming") <= max_hamming),
     )
 
 

@@ -16,6 +16,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions._par import pinned_partitions
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -92,26 +94,6 @@ def brute_force_topk(
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> np.ndarray:
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_planes, dim))
-
-
-def lsh_bucket(
-    vec: Column, dim: int, n_planes: int = 16, seed: int = 7
-) -> Column:
-    """Sign-of-projection bucket id (random hyperplane LSH), JVM-side:
-    each plane is an array literal; the bucket is the packed sign bits.
-
-    Single-table primitive — near-dup candidate generation should use
-    :func:`lsh_buckets_banded` (multi-table OR construction), a single
-    table's recall decays exponentially with plane count."""
-    planes = _hyperplanes(dim, n_planes, seed)
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        bit = F.when(dot(vec, plane) >= 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        bucket = bucket.bitwiseOR(bit * (1 << i))
-    return bucket
 
 
 def lsh_buckets_banded(
@@ -296,16 +278,9 @@ def lsh_near_duplicates(
     # dot below runs at full cluster parallelism instead of on the ~1
     # task AQE's byte-based coalescing would leave for this byte-small,
     # compute-heavy stream (guide §2.5).
-    try:
-        parts = max(
-            embeddings.sparkSession.sparkContext.defaultParallelism * 2, 8
-        )
-    except Exception:
-        # Spark Connect has no sparkContext — fixed fan-out fallback
-        parts = 16
-    cand = _bucket_pairs(b, max_bucket_size, shuffle_pairs=parts).withColumnsRenamed(
-        {"doc_a": "id_a", "doc_b": "id_b"}
-    )
+    cand = _bucket_pairs(
+        b, max_bucket_size, shuffle_pairs=pinned_partitions(embeddings)
+    ).withColumnsRenamed({"doc_a": "id_a", "doc_b": "id_b"})
     # normalize each vector ONCE (n rows), so per-candidate exact
     # verification is a single dot product — the naive per-pair
     # cosine() recomputes BOTH norms per candidate, tripling the JVM

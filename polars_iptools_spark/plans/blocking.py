@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import iptools
+from ..functions._par import pinned_partitions
 
 
 def record_id(*cols: str) -> Column:
@@ -209,13 +210,10 @@ def candidate_pairs(
     handful of tasks.  An explicit user repartition is exempt from AQE
     coalescing, so the pair generation keeps full-cluster parallelism.
     """
-    try:
-        parts = max(blocked.sparkSession.sparkContext.defaultParallelism * 2, 8)
-    except Exception:
-        # Spark Connect has no sparkContext — fixed fan-out fallback
-        parts = 16
     cols = ["rid", "ip", "path", "repo", "block_key"]
-    narrowed = blocked.select(cols).repartition(parts, "block_key")
+    narrowed = blocked.select(cols).repartition(
+        pinned_partitions(blocked), "block_key"
+    )
     a = narrowed.select(
         [F.col(c).alias(f"{c}_a" if c != "block_key" else c) for c in cols]
     )

@@ -117,8 +117,8 @@ def run_pipeline(
         # (/dev/shm parquet, GC-pinned), and skipping the persist
         # removes a whole-indicator-table executor-storage allocation
         # right after stage 01's memory churn (the same-JVM GC
-        # pressure BENCH/probe_stage02*.py measured at the wide
-        # level).
+        # pressure the stage-02 probes in BENCH/BASELINE.md measured
+        # at the wide level).
         if persist_blocked:
             blocked = blocked.persist(StorageLevel.MEMORY_AND_DISK)
             _to_unpersist.append(blocked)

@@ -285,8 +285,10 @@ def hot_candidates(
     # Levenshtein entirely over the full candidate stream, and every
     # survivor's ip_sim is the constant 1.0 the generic expression
     # would have produced.  Null IPs drop in both forms (null
-    # comparison -> null -> filtered).
-    if w_ip * 0.5 + w_path + w_repo <= threshold:
+    # comparison -> null -> filtered).  "Strictly below" needs
+    # w_ip > 0: with w_ip == 0 every unequal-IP bound EQUALS the cap,
+    # and a cap equal to the threshold passes the generic filter.
+    if w_ip > 0 and w_ip * 0.5 + w_path + w_repo <= threshold:
         base = pairs.where(F.col(ip_cols[0]) == F.col(ip_cols[1])).withColumn(
             "ip_sim", F.lit(1.0)
         )
@@ -345,85 +347,3 @@ def exact_score_hot(
         "score", w_ip * F.col("ip_sim") + w_path * path_sim + w_repo * repo_sim
     )
 
-
-def score_pairs(
-    pairs: DataFrame,
-    ip_cols: tuple[str, str] = ("ip_a", "ip_b"),
-    path_cols: tuple[str, str] = ("path_a", "path_b"),
-    repo_cols: tuple[str, str] = ("repo_a", "repo_b"),
-    weights: tuple[float, float, float] = (0.6, 0.25, 0.15),
-    prune_threshold: float | None = None,
-) -> DataFrame:
-    """Blend of exact/edit similarity over normalized IP + path + repo.
-
-    ip similarity mixes exact equality with normalized Levenshtein so
-    near-miss IPs in the same /24 score in the discriminating mid-range
-    rather than collapsing to 0/1.
-
-    ``prune_threshold``: branch-and-bound guard for the Python-side
-    Jaro-Winkler.  The JVM-side terms (ip equality, Levenshtein) give an
-    exact *upper bound* on the final score assuming perfect JW; pairs
-    whose bound is below the threshold can never become edges, so they
-    skip the Arrow UDF entirely (their ``score`` is the bound, which is
-    < threshold — edge extraction is unchanged).  At web scale this
-    collapses Python scoring cost to the tiny candidate set that can
-    actually match.
-    """
-    w_ip, w_path, w_repo = weights
-    ip_sim = (
-        F.when(F.col(ip_cols[0]) == F.col(ip_cols[1]), F.lit(1.0))
-        .otherwise(0.5 * levenshtein_sim(F.col(ip_cols[0]), F.col(ip_cols[1])))
-    )
-    lev_path = levenshtein_sim(F.col(path_cols[0]), F.col(path_cols[1]))
-
-    def exact(df: DataFrame) -> DataFrame:
-        path_sim = 0.5 * jaro_winkler_udf(
-            F.col(path_cols[0]), F.col(path_cols[1])
-        ) + 0.5 * lev_path
-        repo_sim = jaro_winkler_udf(F.col(repo_cols[0]), F.col(repo_cols[1]))
-        return df.withColumn(
-            "score", w_ip * ip_sim + w_path * path_sim + w_repo * repo_sim
-        )
-
-    if prune_threshold is None:
-        return exact(pairs)
-
-    # Single pass: the pair join runs once and the heavy JVM terms
-    # (Levenshtein, ip similarity) are MATERIALIZED as columns so they
-    # are evaluated exactly once per row — referencing the expressions
-    # again in the final score projection would silently recompute them.
-    # Staged bounds: the ip-only bound (cheap — IP strings <=15 chars)
-    # kills most cross-entity pairs before the long-string path
-    # Levenshtein ever runs; for those rows the reported score is that
-    # (still sub-threshold) bound.  The JW UDF's inputs are null-gated:
-    # cold rows cross the Arrow boundary as nulls (near-free) and only
-    # hot rows pay for JW.
-    base = pairs.withColumn("_ip_sim", ip_sim)
-    ub_ip = w_ip * F.col("_ip_sim") + (w_path + w_repo) * F.lit(1.0)
-    ip_hot = ub_ip >= prune_threshold
-    lev_path_staged = F.when(
-        ip_hot,
-        F.when(
-            F.col(path_cols[0]) == F.col(path_cols[1]), F.lit(1.0)
-        ).otherwise(lev_path),
-    )
-    base = base.withColumn("_lev_path", lev_path_staged)
-    upper = F.when(
-        ~ip_hot, ub_ip
-    ).otherwise(
-        w_ip * F.col("_ip_sim")
-        + w_path * (0.5 + 0.5 * F.col("_lev_path"))
-        + w_repo * F.lit(1.0)
-    )
-    with_ub = base.withColumn("_ub", upper)
-    hot = F.col("_ub") >= prune_threshold
-    gate = lambda c: F.when(hot, F.col(c))  # noqa: E731
-    jw_path = jaro_winkler_udf(gate(path_cols[0]), gate(path_cols[1]))
-    jw_repo = jaro_winkler_udf(gate(repo_cols[0]), gate(repo_cols[1]))
-    path_sim = 0.5 * jw_path + 0.5 * F.col("_lev_path")
-    exact_score = (
-        w_ip * F.col("_ip_sim") + w_path * path_sim + w_repo * jw_repo
-    )
-    return with_ub.withColumn(
-        "score", F.when(hot, exact_score).otherwise(F.col("_ub"))
-    ).drop("_ub", "_ip_sim", "_lev_path")

@@ -64,22 +64,6 @@ def _defang(ip: str) -> str:
     return ip.replace(".", "[.]")
 
 
-@functools.lru_cache(maxsize=8)
-def _block_boundaries(n_entities: int, n_blocks: int) -> list[int]:
-    """Zipf-weighted block capacities (block 0 largest) as cumulative
-    entity-index boundaries — deterministic skew, known in advance, so
-    tests can assert the salting path actually triggers.  Cached: this
-    is called once per generated ROW and is O(n_blocks) to build."""
-    weights = [1.0 / (b + 1) for b in range(n_blocks)]
-    total = sum(weights)
-    bounds = []
-    acc = 0.0
-    for w in weights[:-1]:
-        acc += w / total * n_entities
-        bounds.append(int(acc))
-    return bounds
-
-
 # public first octets: 1..223 minus private/loopback/testnet prefixes
 _PUBLIC_O1 = [o for o in range(1, 224) if o not in (10, 127, 172, 192)]
 

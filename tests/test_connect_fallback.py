@@ -122,8 +122,12 @@ def test_is_in_native_fast_path_agrees_with_udf_path(spark, cidrs, probes):
 def test_ensure_parallelism_connect_passthrough(spark):
     """ensure_parallelism must pass a Connect-ish frame through
     untouched instead of raising on the sparkContext access (the
-    exploding operators pin their own fan-out separately)."""
-    from polars_iptools_spark.functions._par import ensure_parallelism
+    exploding operators pin their own fan-out separately, through
+    pinned_partitions' fixed Connect fallback)."""
+    from polars_iptools_spark.functions._par import (
+        ensure_parallelism,
+        pinned_partitions,
+    )
 
     real_df = spark.range(4)
 
@@ -139,3 +143,7 @@ def test_ensure_parallelism_connect_passthrough(spark):
 
     fake = _ConnectishFrame(real_df)
     assert ensure_parallelism(fake) is fake
+    assert pinned_partitions(fake) == 16
+    assert pinned_partitions(real_df) == max(
+        spark.sparkContext.defaultParallelism * 2, 8
+    )

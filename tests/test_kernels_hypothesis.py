@@ -72,20 +72,32 @@ _v4ish = st.one_of(
 @given(st.lists(_v4ish, max_size=30))
 def test_parse_v4_strict_equals_regex(vals):
     """The inet_aton + canonical-roundtrip parser accepts EXACTLY the
-    strict dotted-quad language of V4_FULLMATCH, with equal values."""
-    arr = np.array(vals, dtype=object)
-    nums, mask = _ipparse.parse_v4_strict(arr)
-    # the r07 Arrow-compute fast path and the per-row fallback must
-    # agree with each other AND with the regex
-    nums_f, mask_f = _ipparse._parse_v4_strict_obj(arr)
-    assert (mask == mask_f).all()
-    assert (nums[mask] == nums_f[mask]).all()
-    for i, v in enumerate(vals):
-        m = _ipparse.V4_FULLMATCH.match(v)
-        assert bool(mask[i]) == bool(m), f"{v!r}: strict={mask[i]} regex={bool(m)}"
-        if m:
-            expect = sum(int(g) << k for g, k in zip(m.groups(), (24, 16, 8, 0)))
-            assert int(nums[i]) == expect, (v, nums[i], expect)
+    strict dotted-quad language of V4_FULLMATCH, with equal values;
+    bytes-like rows are invalid whatever their content (non-str ->
+    invalid), alone or mixed with str rows."""
+    for batch in (
+        vals,
+        [v.encode() for v in vals],
+        [bytearray(v.encode()) for v in vals],
+        [v.encode() if i % 2 else v for i, v in enumerate(vals)],
+    ):
+        arr = np.empty(len(batch), dtype=object)
+        arr[:] = batch
+        nums, mask = _ipparse.parse_v4_strict(arr)
+        # the r07 Arrow-compute fast path and the per-row fallback must
+        # agree with each other AND with the regex
+        nums_f, mask_f = _ipparse._parse_v4_strict_obj(arr)
+        assert (mask == mask_f).all()
+        assert (nums[mask] == nums_f[mask]).all()
+        for i, v in enumerate(batch):
+            if not isinstance(v, str):
+                assert not mask[i], f"{v!r}: non-str row parsed as valid"
+                continue
+            m = _ipparse.V4_FULLMATCH.match(v)
+            assert bool(mask[i]) == bool(m), f"{v!r}: strict={mask[i]} regex={bool(m)}"
+            if m:
+                expect = sum(int(g) << k for g, k in zip(m.groups(), (24, 16, 8, 0)))
+                assert int(nums[i]) == expect, (v, nums[i], expect)
 
 
 # -- is_in: interval kernel vs stdlib ipaddress -------------------------

@@ -88,6 +88,71 @@ def test_simhash_pairs(spark, docs):
     assert pairs[(0, 2)] == 0
 
 
+def test_simhash_pairs_match_bruteforce_sweep(spark):
+    """simhash_pairs (banding + the shared _bucket_pairs primitive with
+    its verified hamming column) against a Python oracle over the
+    collected signatures: a pair is expected iff its hamming distance
+    is <= max_hamming AND it shares at least one band segment whose
+    bucket is not hot (held by more than max_bucket_size docs)."""
+    import random
+
+    rnd = random.Random(5)
+    vocab = [f"w{i}" for i in range(60)]
+    rows = []
+    for fam in range(8):
+        base = [rnd.choice(vocab) for _ in range(20)]
+        for v in range(5):
+            words = list(base)
+            for _ in range(v % 4):  # 0-3 substituted words per variant
+                words[rnd.randrange(len(words))] = rnd.choice(vocab)
+            rows.append((fam * 10 + v, " ".join(words)))
+    df = spark.createDataFrame(rows, "doc_id long, text string").cache()
+    sigs = {
+        r.doc: r.simhash & (2**64 - 1)
+        for r in dedup.simhash(df, "doc_id", "text").collect()
+    }
+    ids = sorted(sigs)
+    guard_dropped = 0
+    for bands, max_hamming in [(4, 0), (4, 3), (8, 3), (8, 7), (16, 12)]:
+        seg_bits = 64 // bands
+        segs = {
+            d: [(s >> (b * seg_bits)) & ((1 << seg_bits) - 1) for b in range(bands)]
+            for d, s in sigs.items()
+        }
+        sizes = {}
+        for d in ids:
+            for b, seg in enumerate(segs[d]):
+                sizes[(b, seg)] = sizes.get((b, seg), 0) + 1
+        for max_bucket_size in (None, 3):
+            expected = {}
+            for i, a in enumerate(ids):
+                for b_ in ids[i + 1 :]:
+                    ham = bin(sigs[a] ^ sigs[b_]).count("1")
+                    shared = any(
+                        segs[a][b] == segs[b_][b]
+                        and not (max_bucket_size and sizes[(b, segs[a][b])] > max_bucket_size)
+                        for b in range(bands)
+                    )
+                    if ham <= max_hamming and shared:
+                        expected[(a, b_)] = ham
+            with dedup.CacheScope() as caches:
+                got = {
+                    (r.doc_a, r.doc_b): r.hamming
+                    for r in dedup.simhash_pairs(
+                        df, "doc_id", "text", max_hamming=max_hamming, bands=bands,
+                        max_bucket_size=max_bucket_size, caches=caches,
+                    ).collect()
+                }
+            assert got == expected, (bands, max_hamming, max_bucket_size)
+            if max_bucket_size is None:
+                unguarded = len(expected)
+            else:
+                guard_dropped += unguarded - len(expected)
+    df.unpersist()
+    # the sweep really tripped the hot-bucket guard
+    assert guard_dropped > 0
+
+
 def test_cache_scope_releases_dedup_storage(spark, docs):
     """CacheScope frees the persisted signature/shingle-set blocks after
     materialization (owner-scoped release instead of leak-until-LRR)."""

@@ -38,13 +38,14 @@ def test_native_ops_have_no_python_workers(spark):
 
 def test_simhash_and_minhash_have_no_python_workers(spark):
     docs = spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string")
-    for q in (
-        dedup.simhash(docs, "doc_id", "text"),
-        dedup.minhash_signatures(docs, "doc_id", "text"),
-        dedup.exact_dedup(docs, "doc_id", "text"),
-    ):
-        p = plan_of(q)
-        assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
+    with dedup.CacheScope() as caches:
+        for q in (
+            dedup.simhash(docs, "doc_id", "text"),
+            dedup.minhash_lsh_pairs(docs, "doc_id", "text", caches=caches),
+            dedup.exact_dedup(docs, "doc_id", "text"),
+        ):
+            p = plan_of(q)
+            assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
 
 
 def test_ann_topk_broadcasts_queries(spark):

@@ -174,3 +174,69 @@ def test_hot_candidates_eq_shortcircuit_matches_generic(spark):
     assert fast_rows == gen_eq_rows
     # and no unequal-IP pair survives the fast path
     assert fast.where(F.col("ip_a") != F.col("ip_b")).count() == 0
+
+    # weight sweep against a Python evaluation of the generic bound,
+    # binary-exact weights so boundary scores are exact; includes
+    # w_ip == 0 with w_path + w_repo == threshold, where an unequal-IP
+    # pair with equal paths scores exactly the threshold and is kept
+    sweep_rows = [
+        (
+            i,
+            2000 + i,
+            f"10.0.0.{i % 7}",
+            None if i == 11 else (f"10.0.0.{i % 7}" if i % 3 else f"10.0.{i % 4}.{i % 7}"),
+            f"src/m{i % 5}/h{i}.py",
+            f"src/m{i % 5}/h{i}.py" if i % 2 else f"src/m{i % 5}/h{i}_v{i % 3}.py",
+        )
+        for i in range(60)
+    ]
+    sweep = spark.createDataFrame(
+        sweep_rows,
+        "rid_a long, rid_b long, ip_a string, ip_b string, path_a string, path_b string",
+    )
+    for (w_ip, w_path, w_repo), t in [
+        ((0.0, 0.5, 0.25), 0.75),
+        ((0.0, 0.5, 0.5), 0.75),
+        ((0.5, 0.25, 0.25), 0.75),
+        ((0.5, 0.25, 0.25), 0.625),
+        ((0.25, 0.5, 0.25), 0.875),
+        ((0.25, 0.5, 0.25), 0.75),
+    ]:
+        expected = set()
+        for rid_a, rid_b, ip_a, ip_b, path_a, path_b in sweep_rows:
+            if ip_a is None or ip_b is None:
+                continue
+            ip_sim = 1.0 if ip_a == ip_b else 0.5 * _lev_sim(ip_a, ip_b)
+            if not w_ip * ip_sim + (w_path + w_repo) * 1.0 >= t:
+                continue
+            lev_path = 1.0 if path_a == path_b else _lev_sim(path_a, path_b)
+            ub = w_ip * ip_sim + w_path * (0.5 + 0.5 * lev_path) + w_repo * 1.0
+            if ub >= t:
+                expected.add((rid_a, rid_b, round(ip_sim, 9), round(lev_path, 9)))
+        got = {
+            (r.rid_a, r.rid_b, round(r.ip_sim, 9), round(r.lev_path, 9))
+            for r in hot_candidates(
+                sweep, weights=(w_ip, w_path, w_repo), threshold=t
+            ).collect()
+        }
+        assert got == expected, ((w_ip, w_path, w_repo), t)
+    # the boundary case is really exercised: unequal IPs, equal paths
+    assert any(
+        r.ip_a != r.ip_b
+        for r in hot_candidates(sweep, weights=(0.0, 0.5, 0.25), threshold=0.75)
+        .where(F.col("ip_b").isNotNull())
+        .collect()
+    )
+
+
+def _lev_sim(a, b):
+    """1 - levenshtein/maxlen, the textbook DP (reference for the JVM
+    ``levenshtein_sim``)."""
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    mx = max(len(a), len(b))
+    return 1.0 if mx == 0 else 1.0 - prev[-1] / mx
