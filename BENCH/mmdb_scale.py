@@ -107,7 +107,7 @@ def main() -> None:
         checked = 0
         for a in range(4096, args.city_networks * 8192 // 4, 7_919 * 4096):
             key = np.array([(0xFFFF << 32 | a).to_bytes(16, "big")], dtype="|S16")
-            rows = city.lookup_s16(key, np.array([True]))
+            rows = city.lookup(key, np.array([True]))
             exp = mmdb_synth.expected_city_record_index(
                 a, args.city_networks, args.city_records
             )
@@ -121,7 +121,7 @@ def main() -> None:
         for rel in range(0, args.city_v6_networks * span // 4, 6007 * span // 16 + 1):
             ai = mmdb_synth.V6_BASE + rel
             key = np.array([ai.to_bytes(16, "big")], dtype="|S16")
-            rows = city.lookup_s16(key, np.array([True]))
+            rows = city.lookup(key, np.array([True]))
             exp = mmdb_synth.expected_city_v6_record_index(
                 ai, args.city_networks, args.city_v6_networks, args.city_records
             )

@@ -113,7 +113,7 @@ def main() -> None:
         checked = 0
         for a in range(4096, args.networks * 8192 // 4, 7_919 * 4096):
             key = np.array([(0xFFFF << 32 | a).to_bytes(16, "big")], dtype="|S16")
-            rows = spur_tab.lookup_s16(key, np.array([True]))
+            rows = spur_tab.lookup(key, np.array([True]))
             exp = mmdb_synth.expected_city_record_index(a, args.networks, args.records)
             tag, city = want_fields(exp)
             assert spur_tab.columns["tag"][rows[0]] == tag, (a, exp)
@@ -125,7 +125,7 @@ def main() -> None:
         for rel in range(0, args.v6_networks * span // 4, 6007 * span // 16 + 1):
             ai = mmdb_synth.V6_BASE + rel
             key = np.array([ai.to_bytes(16, "big")], dtype="|S16")
-            rows = spur_tab.lookup_s16(key, np.array([True]))
+            rows = spur_tab.lookup(key, np.array([True]))
             exp = mmdb_synth.expected_city_v6_record_index(
                 ai, args.networks, args.v6_networks, args.records
             )

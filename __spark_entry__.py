@@ -307,6 +307,7 @@ def _dump_geoip_intervals() -> str:
     from pathlib import Path
 
     from polars_iptools_spark.functions._enrich import build_geoip_tables
+    from polars_iptools_spark.functions._ipparse import key_matrix
     from polars_iptools_spark.sources.mmdb import load_interval_table
 
     out = _oracle_dir()
@@ -317,9 +318,11 @@ def _dump_geoip_intervals() -> str:
         # split v4/v6 index — the oracle replicates the search from
         # first principles, independent of the engine's layout
         it = load_interval_table(Path(MAXMIND_TEST_DIR) / files[name])
+        # full 32-hex bounds from the byte matrix: |S16 elements drop
+        # trailing NULs, and a short hi would sort below its own key
         cols = {
-            "lo": [bytes(b).hex() for b in it.lo.tolist()],
-            "hi": [bytes(b).hex() for b in it.hi.tolist()],
+            bound: [r.tobytes().hex() for r in key_matrix(getattr(it, bound))]
+            for bound in ("lo", "hi")
         }
         for fname, col in tab.columns.items():
             cols[fname] = [col[i] for i in it.rec_idx]

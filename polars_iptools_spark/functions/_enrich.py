@@ -41,14 +41,6 @@ def resolve_mmdb_dir(env_var: str, explicit: str | None = None) -> Path:
     )
 
 
-# 1-element |S16 arrays, NOT scalars: numpy compares a byte-string
-# array against a bytes scalar with C-string (first-NUL-terminated)
-# semantics, which inverts the result for keys with interior NULs;
-# array-vs-array comparison uses full fixed-width bytewise order
-_V4_PFX_LO = np.array([b"\x00" * 10 + b"\xff\xff"], dtype="|S16")
-_V4_PFX_HI = np.array([b"\x00" * 10 + b"\xff\xff" + b"\xff" * 4], dtype="|S16")
-
-
 class FlatTable:
     """Interval keys + per-field flattened record columns.
 
@@ -71,39 +63,17 @@ class FlatTable:
     def __init__(self, table: IntervalTable, fields: list[tuple[str, object, object]]):
         # fields: (name, extractor(record)->value, default_when_not_found)
         lo, hi, rec_idx = table.lo, table.hi, table.rec_idx
-        ni = len(lo)
-        if ni:
-            m_lo = np.frombuffer(lo.tobytes(), dtype=np.uint8).reshape(ni, 16)
-            m_hi = np.frombuffer(hi.tobytes(), dtype=np.uint8).reshape(ni, 16)
-            inter = (lo <= _V4_PFX_HI) & (hi >= _V4_PFX_LO)
-            lo4 = (
-                np.ascontiguousarray(m_lo[inter, 12:16])
-                .view(">u4")
-                .ravel()
-                .astype(np.uint32)
-            )
-            hi4 = (
-                np.ascontiguousarray(m_hi[inter, 12:16])
-                .view(">u4")
-                .ravel()
-                .astype(np.uint32)
-            )
-            # clamp the (at most one, disjointness) straddling bound
-            np.putmask(lo4, lo[inter] < _V4_PFX_LO, np.uint32(0))
-            np.putmask(hi4, hi[inter] > _V4_PFX_HI, np.uint32(0xFFFFFFFF))
-            self.lo4, self.hi4 = lo4, hi4
-            self.idx4 = rec_idx[inter].astype(np.int32)
-            inside = _is_v4_mapped(m_lo) & _is_v4_mapped(m_hi)
-            keep6 = ~inside
-            self.lo6, self.hi6 = lo[keep6], hi[keep6]
-            self.idx6 = rec_idx[keep6].astype(np.int32)
-        else:
-            self.lo4 = np.empty(0, dtype=np.uint32)
-            self.hi4 = np.empty(0, dtype=np.uint32)
-            self.idx4 = np.empty(0, dtype=np.int32)
-            self.lo6 = np.empty(0, dtype="|S16")
-            self.hi6 = np.empty(0, dtype="|S16")
-            self.idx6 = np.empty(0, dtype=np.int32)
+        m_lo, m_hi = _ipparse.key_matrix(lo), _ipparse.key_matrix(hi)
+        v4_lo, v4_hi = _ipparse.V4_MAPPED_LO, _ipparse.V4_MAPPED_HI
+        inter = (lo <= v4_hi) & (hi >= v4_lo)
+        self.lo4, self.hi4 = _ipparse.v4_u32(m_lo[inter]), _ipparse.v4_u32(m_hi[inter])
+        # clamp the (at most one, disjointness) straddling bound
+        np.putmask(self.lo4, lo[inter] < v4_lo, np.uint32(0))
+        np.putmask(self.hi4, hi[inter] > v4_hi, np.uint32(0xFFFFFFFF))
+        self.idx4 = rec_idx[inter].astype(np.int32)
+        keep6 = ~(_ipparse.is_v4_mapped(m_lo) & _ipparse.is_v4_mapped(m_hi))
+        self.lo6, self.hi6 = lo[keep6], hi[keep6]
+        self.idx6 = rec_idx[keep6].astype(np.int32)
         n = len(table.records)
         self.n_records = n
         self.columns: dict[str, np.ndarray] = {}
@@ -124,94 +94,55 @@ class FlatTable:
             col[n] = default
             self.columns[name] = col
 
-    def lookup_s16(self, kb: np.ndarray, valid: np.ndarray) -> np.ndarray:
-        """``|S16`` key array + valid mask (from pack_ip_series_s16) ->
-        record row indices; fully vectorized, no per-row objects.
-
-        v4-mapped keys take the uint32 index; the rest take the |S16
-        remainder.  numpy ``|S16`` strips trailing NUL bytes, so a key
-        like ``...ffff 0a000000`` compares as its 12-byte prefix — that
-        is SAFE on the remainder path: with NUL the minimal byte,
-        lexicographic order over NUL-stripped strings is identical to
-        order over the full 16-byte forms (a prefix sorts exactly where
-        its zero-padded form would), and ``self.lo6``/``self.hi6`` are
-        |S16 too, so both sides of every searchsorted comparison use
-        the same convention.
-        """
-        n = len(kb)
-        rows = np.full(n, self.n_records, dtype=np.int64)
-        if n == 0 or not valid.any():
-            return rows
-        m = np.frombuffer(kb.tobytes(), dtype=np.uint8).reshape(n, 16)
-        is4 = _is_v4_mapped(m) & valid
-        if is4.any() and len(self.lo4):
-            k4 = (
-                np.ascontiguousarray(m[is4, 12:16])
-                .view(">u4")
-                .ravel()
-                .astype(np.uint32)
-            )
-            pos = np.searchsorted(self.lo4, k4, side="right") - 1
-            ok = pos >= 0
-            hit = np.zeros(len(k4), dtype=bool)
-            hit[ok] = k4[ok] <= self.hi4[pos[ok]]
-            found = np.full(len(k4), self.n_records, dtype=np.int64)
-            found[hit] = self.idx4[pos[hit]]
-            rows[is4] = found
+    def lookup(self, kb: np.ndarray, valid: np.ndarray) -> np.ndarray:
+        """``|S16`` keys + valid mask (from :func:`_ipparse.ip_keys`) ->
+        record row per key, the defaults row for misses and invalid
+        keys.  v4-mapped keys probe the uint32 index, the rest the
+        ``|S16`` remainder."""
+        rows = np.full(len(kb), self.n_records, dtype=np.int64)
+        m = _ipparse.key_matrix(kb)
+        is4 = _ipparse.is_v4_mapped(m) & valid
         rest = valid & ~is4
-        if rest.any() and len(self.lo6):
-            vk = kb[rest]
-            pos = np.searchsorted(self.lo6, vk, side="right") - 1
-            ok = pos >= 0
-            hit = np.zeros(len(vk), dtype=bool)
-            hit[ok] = vk[ok] <= self.hi6[pos[ok]]
-            found = np.full(len(vk), self.n_records, dtype=np.int64)
-            found[hit] = self.idx6[pos[hit]]
-            rows[rest] = found
+        for sel, keys, lo, hi, idx in (
+            (is4, _ipparse.v4_u32(m[is4]), self.lo4, self.hi4, self.idx4),
+            (rest, kb[rest], self.lo6, self.hi6, self.idx6),
+        ):
+            pos = _ipparse.find_interval(lo, hi, keys)
+            hit = pos >= 0
+            found = np.full(len(keys), self.n_records, dtype=np.int64)
+            found[hit] = idx[pos[hit]]
+            rows[sel] = found
         return rows
-
-    def lookup(self, keys_obj: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """Object array of 16-byte keys (None = invalid/null input) ->
-        (record_row_index array with defaults row for misses, valid mask)."""
-        n = len(keys_obj)
-        mask = np.array([k is not None for k in keys_obj], dtype=bool)
-        kb = np.zeros((n, 16), dtype=np.uint8)
-        vidx = np.flatnonzero(mask)
-        for i in vidx:
-            kb[i] = np.frombuffer(keys_obj[i], dtype=np.uint8)
-        return self.lookup_s16(kb.view("|S16").reshape(n), mask), mask
-
-
-def _is_v4_mapped(m: np.ndarray) -> np.ndarray:
-    """(n, 16) uint8 key matrix -> mask of keys inside ::ffff:0:0/96."""
-    return (
-        (m[:, 10] == 0xFF)
-        & (m[:, 11] == 0xFF)
-        & ~m[:, :10].any(axis=1)
-    )
 
 
 class BroadcastedDB:
     """Lazy singleton: build FlatTables once per directory and ship via
     SparkContext.broadcast when a session is active; plain closure
-    capture otherwise (tests, driver-local).
+    capture otherwise (tests, driver-local, Spark Connect).
 
     An MMDB file replaced in-place in the SAME directory is served from
     the cached tables until the caller passes ``reload_mmdb=True`` —
     deliberately matching the reference's explicit ``MaxMindDB::reload``
-    semantics (/root/reference/src/maxmind.rs:161-168), where updates
+    semantics (reference ``src/maxmind.rs:161-168``), where updates
     are an explicit operation, never an mtime side effect."""
 
-    def __init__(self, builder):
+    def __init__(self, builder, env_var: str):
         self._builder = builder  # (db_dir) -> dict[str, FlatTable]
+        self._env_var = env_var
         self._cache_key = None
         self._tables = None
         self._bc = None
 
-    def get(self, db_dir: Path, reload: bool = False):
-        key = str(db_dir)
-        if reload or self._tables is None or self._cache_key != key:
-            self._tables = self._builder(db_dir)
+    def getter(self, spark, reload_mmdb: bool = False, db_dir: str | None = None):
+        """Resolve the directory, build (or reuse) and broadcast the
+        tables, and return the zero-argument function a UDF calls on the
+        executor to get them.  It captures only the broadcast handle, or
+        only the tables when there is no broadcast (``spark`` is None or
+        has no SparkContext)."""
+        resolved = resolve_mmdb_dir(self._env_var, db_dir)
+        key = str(resolved)
+        if reload_mmdb or self._tables is None or self._cache_key != key:
+            self._tables = self._builder(resolved)
             self._cache_key = key
             if self._bc is not None:
                 try:
@@ -219,59 +150,27 @@ class BroadcastedDB:
                 except Exception:
                     pass
                 self._bc = None
-        return self._tables
-
-    def broadcast(self, spark, db_dir: Path, reload: bool = False):
-        tables = self.get(db_dir, reload=reload)
         if self._bc is None and spark is not None:
             try:
-                self._bc = spark.sparkContext.broadcast(tables)
+                self._bc = spark.sparkContext.broadcast(self._tables)
             except Exception:
                 self._bc = None
-        return self._bc, tables
+        bc, tables = self._bc, self._tables
+        if bc is not None:
+            return lambda: bc.value
+        return lambda: tables
 
 
-def series_to_keys_s16(s: pd.Series) -> tuple[np.ndarray, np.ndarray] | None:
-    """``|S16`` fast path for STRING (or all-null) batches: returns
-    (key array, valid mask) with zero per-row Python on the IPv4 hot
-    path.  Returns None for binary / numeric typed-column inputs —
-    those take the object-key path in :func:`series_to_keys`."""
-    vals = s.to_numpy()
-    first = next((v for v in vals if v is not None), None)
-    if first is None or isinstance(first, str):
-        return _ipparse.pack_ip_series_s16(s)
-    return None
-
-
-def series_to_keys(s: pd.Series) -> np.ndarray:
-    """Normalize a UDF input batch (str / int u32 / 16-byte binary) into
-    16-byte key objects, mirroring series_to_ipaddrs
-    (/root/reference/src/iptools.rs:444-502)."""
-    vals = s.to_numpy()
-    first = next((v for v in vals if v is not None), None)
-    if isinstance(first, (bytes, bytearray)):
-        out = np.full(len(vals), None, dtype=object)
-        for i, v in enumerate(vals):
-            if v is None:
-                continue
-            b = bytes(v)
-            if len(b) == 16:
-                out[i] = b
-            elif len(b) == 4:
-                out[i] = _ipparse.V4_MAPPED_PREFIX + b
-        return out
-    if first is not None and not isinstance(first, str):
-        nums = pd.to_numeric(s, errors="coerce")
-        out = np.full(len(vals), None, dtype=object)
-        ok = nums.notna().to_numpy() & (nums >= 0).to_numpy() & (
-            nums <= 0xFFFFFFFF
-        ).to_numpy()
-        idx = np.flatnonzero(ok)
-        if len(idx):
-            packed = _ipparse.v4_num_to_packed16(nums.to_numpy()[idx].astype(np.uint32))
-            out[idx] = [p.tobytes() for p in packed]
-        return out
-    return _ipparse.pack_ip_series(s)
+def struct_batch(data: dict, bad: np.ndarray) -> pd.DataFrame:
+    """Struct-output batch with the null/invalid rows blanked in place:
+    typed columns (``Int64``, ``Float32``) get ``pd.NA``, object columns
+    ``None``.  Every column must be a fresh gather, since it is mutated
+    (a row-wise ``df.loc[bad, :] = None`` walked each column through
+    pandas alignment: ~6-20 ms of a ~110 ms kernel)."""
+    if bad.any():
+        for col in data.values():
+            col[bad] = None if col.dtype == object else pd.NA
+    return pd.DataFrame(data, copy=False)
 
 
 # -- field extractors --------------------------------------------------------

@@ -14,6 +14,10 @@ compare bytewise exactly like the underlying unsigned 128-bit integers,
 so sorted ``|S16`` numpy arrays support ``np.searchsorted`` range
 lookups — the array-encoded equivalent of the reference's LC-trie
 (/root/reference/src/iptools.rs:130-151).
+
+This module is the only one that knows the key format: every address
+UDF turns its batch into keys with :func:`ip_keys`, probes sorted
+intervals with :func:`find_interval`, then gathers.
 """
 
 from __future__ import annotations
@@ -34,6 +38,10 @@ V4_FULLMATCH = re.compile(
 )
 
 V4_MAPPED_PREFIX = b"\x00" * 10 + b"\xff\xff"
+# bounds of ::ffff:0:0/96 as 1-element |S16 arrays, NOT scalars: see
+# find_interval on comparing |S16 against a bytes scalar
+V4_MAPPED_LO = np.array([V4_MAPPED_PREFIX], dtype="|S16")
+V4_MAPPED_HI = np.array([V4_MAPPED_PREFIX + b"\xff" * 4], dtype="|S16")
 
 
 def _parse_v4_strict_obj(arr: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -120,131 +128,108 @@ def parse_v4_strict(arr: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         return _parse_v4_strict_obj(arr)
 
 
-def v4_num_to_packed16(nums: np.ndarray) -> np.ndarray:
-    """uint32 array -> (n,16) uint8 array of v4-mapped addresses."""
-    out = np.zeros((len(nums), 16), dtype=np.uint8)
-    out[:, 10] = 0xFF
-    out[:, 11] = 0xFF
-    out[:, 12:16] = nums.astype(">u4").view(np.uint8).reshape(-1, 4)
-    return out
+def first_value(vals: np.ndarray):
+    """First non-None element of a batch (None if there is none): the
+    batch's type, since a Spark column hands every row the same one."""
+    return next((v for v in vals if v is not None), None)
 
 
-def ip_to_int128(ip: str) -> int:
-    """Single IP string -> v4-mapped 128-bit int (raises on invalid)."""
-    addr = ipaddress.ip_address(ip)
-    if addr.version == 4:
-        return 0xFFFF00000000 | int(addr)
-    return int(addr)
+def key_matrix(keys: np.ndarray) -> np.ndarray:
+    """``|S16`` key array -> (n, 16) uint8 view of its full bytes.
+
+    Element access on ``|S16`` (``keys[i]``) strips trailing NUL bytes,
+    so any code that needs the 16 bytes themselves reads this matrix."""
+    return np.ascontiguousarray(keys).view(np.uint8).reshape(len(keys), 16)
 
 
-def int128_to_bytes(v: int) -> bytes:
-    return v.to_bytes(16, "big")
+def is_v4_mapped(m: np.ndarray) -> np.ndarray:
+    """(n, 16) uint8 key matrix -> mask of keys inside ::ffff:0:0/96."""
+    return (m[:, 10] == 0xFF) & (m[:, 11] == 0xFF) & ~m[:, :10].any(axis=1)
 
 
-def pack_ip_series(s: pd.Series) -> np.ndarray:
-    """Series of IP strings -> object array of 16-byte keys.
+def v4_u32(m: np.ndarray) -> np.ndarray:
+    """(n, 16) uint8 key matrix -> uint32 value of each key's last 4 bytes."""
+    return np.ascontiguousarray(m[:, 12:16]).view(">u4").ravel().astype(np.uint32)
 
-    null -> None; unparseable -> None.  IPv4 rows take the vectorized
-    path; only non-IPv4 non-null rows hit the per-element fallback.
+
+def _put_v4(m: np.ndarray, rows, nums: np.ndarray) -> None:
+    m[rows, 10:12] = 0xFF
+    m[rows, 12:16] = nums.astype(">u4").view(np.uint8).reshape(-1, 4)
+
+
+def ip_keys(s: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+    """One UDF batch -> (``|S16`` keys, int8 family), mirroring the
+    reference's input normalization (``src/iptools.rs:444-502``).
+
+    The batch type is read from its first non-null value:
+    - text: strict dotted quads take the vectorized path (family 4);
+      only the rest are tried as IPv6 with stdlib ``ipaddress``
+      (family 6, v4-mapped text like ``::ffff:1.2.3.4`` included, as
+      the reference routes by the parsed family);
+    - binary: 16 bytes pass through, 4 bytes become v4-mapped;
+    - numeric: u32 values become v4-mapped (a long column with nulls
+      arrives as float64 with NaN).
+    Family 0 marks null or unparseable rows, whose key bytes are zero;
+    binary and numeric rows are family 4 when v4-mapped, 6 otherwise.
     """
-    s = s.astype(object)
-    n = len(s)
-    out = np.full(n, None, dtype=object)
-    if n == 0:
-        return out
-    notnull = s.notna().to_numpy()
-    arr = s.to_numpy()
-    allnums, v4mask = parse_v4_strict(arr)
-    if v4mask.any():
-        packed = v4_num_to_packed16(allnums[v4mask])
-        vals = [p.tobytes() for p in packed]
-        out[np.flatnonzero(v4mask)] = vals
-    # slow path: candidate v6 / weird strings
-    rest = np.flatnonzero(notnull & ~v4mask)
-    for i in rest:
-        v = arr[i]
-        if not isinstance(v, str) or ":" not in v:
-            continue
-        try:
-            out[i] = int128_to_bytes(ip_to_int128(v))
-        except ValueError:
-            pass
-    return out
-
-
-def pack_ip_series_s16(s: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-    """Series of IP strings -> (``|S16`` key array, valid mask) with NO
-    per-row Python objects on the IPv4 fast path — the bytes land
-    directly in the (n, 16) matrix the searchsorted kernel consumes.
-    Only non-IPv4 non-null rows (rare in enrichment feeds) fall back to
-    per-element stdlib parsing.  Invalid/null rows: valid=False, key
-    bytes zero."""
-    s = s.astype(object)
-    n = len(s)
-    kb = np.zeros((n, 16), dtype=np.uint8)
-    valid = np.zeros(n, dtype=bool)
-    if n == 0:
-        return kb.view("|S16").reshape(n), valid
-    notnull = s.notna().to_numpy()
-    arr = s.to_numpy()
-    allnums, v4mask = parse_v4_strict(arr)
-    if v4mask.any():
-        idx = np.flatnonzero(v4mask)
-        kb[idx, 10] = 0xFF
-        kb[idx, 11] = 0xFF
-        kb[idx, 12:16] = (
-            allnums[idx].astype(">u4").view(np.uint8).reshape(-1, 4)
-        )
-        valid[idx] = True
-    rest = np.flatnonzero(notnull & ~v4mask)
-    for i in rest:
-        v = arr[i]
-        if not isinstance(v, str) or ":" not in v:
-            continue
-        try:
-            kb[i] = np.frombuffer(
-                int128_to_bytes(ip_to_int128(v)), dtype=np.uint8
-            )
-            valid[i] = True
-        except ValueError:
-            pass
-    return kb.view("|S16").reshape(n), valid
-
-
-def pack_ip_series_with_family(s: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-    """Like :func:`pack_ip_series` but also reports the TEXTUAL address
-    family per row (0 = null/invalid, 4 = dotted-quad literal, 6 =
-    parsed as IPv6 — including v4-mapped text like ``::ffff:1.2.3.4``).
-
-    The reference keeps two tries and routes by the parsed family
-    (/root/reference/src/iptools.rs:160-166): a v4-mapped IPv6 *string*
-    is a V6 address and must never match v4-only CIDR sets, even though
-    its 16-byte key equals the mapped IPv4's.
-    """
-    s = s.astype(object)
-    n = len(s)
-    out = np.full(n, None, dtype=object)
+    vals = s.to_numpy()
+    n = len(vals)
+    m = np.zeros((n, 16), dtype=np.uint8)
     fam = np.zeros(n, dtype=np.int8)
-    if n == 0:
-        return out, fam
-    notnull = s.notna().to_numpy()
-    arr = s.to_numpy()
-    allnums, v4mask = parse_v4_strict(arr)
-    if v4mask.any():
-        packed = v4_num_to_packed16(allnums[v4mask])
-        out[np.flatnonzero(v4mask)] = [p.tobytes() for p in packed]
-        fam[v4mask] = 4
-    rest = np.flatnonzero(notnull & ~v4mask)
-    for i in rest:
-        v = arr[i]
-        if not isinstance(v, str) or ":" not in v:
-            continue
-        try:
-            out[i] = int128_to_bytes(int(ipaddress.IPv6Address(v)))
-            fam[i] = 6
-        except ValueError:
-            pass
-    return out, fam
+    first = first_value(vals)
+    if isinstance(first, (bytes, bytearray)):
+        lens = np.fromiter(
+            (-1 if v is None else len(v) for v in vals), dtype=np.int64, count=n
+        )
+        for width in (16, 4):
+            idx = np.flatnonzero(lens == width)
+            if len(idx):
+                blob = b"".join(bytes(vals[i]) for i in idx)
+                m[idx, 16 - width :] = np.frombuffer(blob, np.uint8).reshape(-1, width)
+        m[lens == 4, 10:12] = 0xFF
+        fam[lens == 16] = 6
+        fam[(lens == 4) | ((lens == 16) & is_v4_mapped(m))] = 4
+    elif first is None or isinstance(first, str):
+        arr = s.astype(object).to_numpy()
+        nums, v4 = parse_v4_strict(arr)
+        _put_v4(m, v4, nums[v4])
+        fam[v4] = 4
+        idx6, packed = [], []
+        for i in np.flatnonzero(s.notna().to_numpy() & ~v4):
+            v = arr[i]
+            if isinstance(v, str) and ":" in v:
+                try:
+                    packed.append(ipaddress.IPv6Address(v).packed)
+                except ValueError:
+                    continue
+                idx6.append(i)
+        if idx6:
+            m[idx6] = np.frombuffer(b"".join(packed), np.uint8).reshape(-1, 16)
+            fam[idx6] = 6
+    else:
+        nums = pd.to_numeric(s, errors="coerce")
+        ok = (nums.notna() & (nums >= 0) & (nums <= 0xFFFFFFFF)).to_numpy(dtype=bool)
+        _put_v4(m, ok, nums.to_numpy()[ok].astype(np.uint32))
+        fam[ok] = 4
+    return m.view("|S16").reshape(n), fam
+
+
+def find_interval(lo: np.ndarray, hi: np.ndarray, keys: np.ndarray) -> np.ndarray:
+    """Position of the sorted, disjoint interval ``[lo[i], hi[i]]`` that
+    holds each key, or -1 — the package's one interval probe.
+
+    Works on uint32 bounds and on ``|S16`` ones.  ``|S16`` strips
+    trailing NULs, which is safe here: NUL is the minimal byte, so a
+    stripped prefix sorts exactly where its zero-padded form would, and
+    array-vs-array comparison pads both sides the same way.  (Comparing
+    against a bytes *scalar* instead stops at the first NUL — never do.)
+    """
+    pos = np.searchsorted(lo, keys, side="right") - 1
+    ok = np.flatnonzero(pos >= 0)
+    ok = ok[keys[ok] <= hi[pos[ok]]]
+    out = np.full(len(keys), -1, dtype=np.int64)
+    out[ok] = pos[ok]
+    return out
 
 
 # precomputed octet strings: dotted-quad rendering becomes four C-level
@@ -292,26 +277,25 @@ def sort_intervals(
             merged[-1] = (prev_lo, max(prev_hi, hi))
         else:
             merged.append((lo, hi))
-    lo_arr = np.array([int128_to_bytes(lo) for lo, _ in merged], dtype="|S16")
-    hi_arr = np.array([int128_to_bytes(hi) for _, hi in merged], dtype="|S16")
+    lo_arr = np.array([lo.to_bytes(16, "big") for lo, _ in merged], dtype="|S16")
+    hi_arr = np.array([hi.to_bytes(16, "big") for _, hi in merged], dtype="|S16")
     return lo_arr, hi_arr
 
 
 def membership(
-    keys: np.ndarray, mask: np.ndarray, lo_arr: np.ndarray, hi_arr: np.ndarray
+    keys: np.ndarray,
+    fam: np.ndarray,
+    l4: np.ndarray,
+    h4: np.ndarray,
+    l6: np.ndarray,
+    h6: np.ndarray,
 ) -> np.ndarray:
-    """For object array of 16-byte keys (None where invalid) return an
-    object array of True/False/None membership flags."""
+    """``|S16`` keys + family (from :func:`ip_keys`) -> object array of
+    True/False membership in the family's own interval set, None where
+    the family is 0."""
     out = np.full(len(keys), None, dtype=object)
-    valid_idx = np.flatnonzero(mask)
-    if len(valid_idx) == 0 or len(lo_arr) == 0:
-        if len(lo_arr) == 0:
-            out[valid_idx] = False
-        return out
-    kb = np.array([keys[i] for i in valid_idx], dtype="|S16")
-    pos = np.searchsorted(lo_arr, kb, side="right") - 1
-    ok = pos >= 0
-    hit = np.zeros(len(kb), dtype=bool)
-    hit[ok] = kb[ok] <= hi_arr[pos[ok]]
-    out[valid_idx] = hit.astype(object)
+    for f, lo, hi in ((4, l4, h4), (6, l6, h6)):
+        sel = fam == f
+        if sel.any():
+            out[sel] = find_interval(lo, hi, keys[sel]) >= 0
     return out

@@ -11,25 +11,17 @@ Semantics pinned to /root/reference/src/geoip.rs:
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
 from ..schemas import GEOIP_SCHEMA
-from . import _enrich
+from . import _enrich, _ipparse
 
 __all__ = ["asn", "full"]
 
-_DB = _enrich.BroadcastedDB(_enrich.build_geoip_tables)
-
-
-def _get_tables(reload_mmdb: bool, db_dir: str | None):
-    resolved = _enrich.resolve_mmdb_dir("MAXMIND_MMDB_DIR", db_dir)
-    spark = SparkSession.getActiveSession()
-    bc, tables = _DB.broadcast(spark, resolved, reload=reload_mmdb)
-    return bc, tables
+_DB = _enrich.BroadcastedDB(_enrich.build_geoip_tables, "MAXMIND_MMDB_DIR")
 
 
 def _col(expr):
@@ -39,24 +31,19 @@ def _col(expr):
 def asn_udf(reload_mmdb: bool = False, db_dir: str | None = None):
     """The ASN-lookup pandas UDF itself (for ``spark.udf.register`` /
     SQL-text use); :func:`asn` is the Column-level sugar over it."""
-    bc, tables = _get_tables(reload_mmdb, db_dir)
+    get = _DB.getter(SparkSession.getActiveSession(), reload_mmdb, db_dir)
 
     @F.pandas_udf(StringType())
     def _asn_udf(s: pd.Series) -> pd.Series:
-        t = (bc.value if bc is not None else tables)["asn"]
-        fast = _enrich.series_to_keys_s16(s)
-        if fast is not None:  # string batches: zero per-row Python
-            kb, mask = fast
-            rows = t.lookup_s16(kb, mask)
-        else:
-            keys = _enrich.series_to_keys(s)
-            rows, mask = t.lookup(keys)
+        t = get()["asn"]
+        kb, fam = _ipparse.ip_keys(s)
+        valid = fam != 0
         # strings pre-formatted once per record at table build; the
         # batch path is a single vectorized gather
-        out = t.columns["asn_str"][rows].copy()
+        out = t.columns["asn_str"][t.lookup(kb, valid)]
         # invalid (non-null unparseable) -> "" ; null stays null
         null_in = s.isna().to_numpy()
-        out[~mask & ~null_in] = ""
+        out[~valid & ~null_in] = ""
         out[null_in] = None
         return pd.Series(out)
 
@@ -75,52 +62,23 @@ def full_udf(reload_mmdb: bool = False, db_dir: str | None = None):
     """The 12-field geolocation pandas UDF itself (for
     ``spark.udf.register`` / SQL-text use); :func:`full` is the
     Column-level sugar over it."""
-    bc, tables = _get_tables(reload_mmdb, db_dir)
+    get = _DB.getter(SparkSession.getActiveSession(), reload_mmdb, db_dir)
 
     @F.pandas_udf(GEOIP_SCHEMA)
     def _full_udf(s: pd.Series) -> pd.DataFrame:
-        tabs = bc.value if bc is not None else tables
+        tabs = get()
         ta, tc = tabs["asn"], tabs["city"]
-        fast = _enrich.series_to_keys_s16(s)
-        if fast is not None:  # string batches: zero per-row Python
-            kb, mask = fast
-            rows_a = ta.lookup_s16(kb, mask)
-            rows_c = tc.lookup_s16(kb, mask)
-        else:
-            keys = _enrich.series_to_keys(s)
-            rows_a, mask = ta.lookup(keys)
-            rows_c, _ = tc.lookup(keys)
-        data = {}
+        kb, fam = _ipparse.ip_keys(s)
+        valid = fam != 0
+        rows_a, rows_c = ta.lookup(kb, valid), tc.lookup(kb, valid)
         # asnnum is stored int64 in the flat table — typed gather, no
         # per-row unboxing
-        data["asnnum"] = pd.array(ta.columns["asnnum"][rows_a], dtype="Int64")
-        data["asnorg"] = ta.columns["asnorg"][rows_a]
-        for name in (
-            "city",
-            "continent",
-            "country",
-            "country_iso",
-            "latitude",
-            "longitude",
-            "postalcode",
-            "subdivision",
-            "subdivision_iso",
-            "timezone",
-        ):
-            data[name] = tc.columns[name][rows_c]
-        # null/invalid input -> all-null struct fields.  Masked directly
-        # on the gathered arrays (each fancy-index gather above is a
-        # fresh copy, safe to mutate) — the previous row-wise
-        # ``df.loc[bad, :] = None`` re-walked all 12 columns through the
-        # pandas alignment machinery per batch (r07 profile: ~6-20 ms of
-        # a ~110 ms kernel).
-        bad = ~mask
-        if bad.any():
-            data["asnnum"][bad] = pd.NA
-            for name, col in data.items():
-                if name != "asnnum":
-                    col[bad] = None
-        return pd.DataFrame(data, copy=False)
+        data = {
+            "asnnum": pd.array(ta.columns["asnnum"][rows_a], dtype="Int64"),
+            "asnorg": ta.columns["asnorg"][rows_a],
+        }
+        data.update((name, col[rows_c]) for name, col in tc.columns.items())
+        return _enrich.struct_batch(data, ~valid)
 
     return _full_udf
 

@@ -117,12 +117,7 @@ def ipv4_to_numeric(expr: Column | str) -> Column:
     /root/reference/src/iptools.rs:82-103, tests/test_iptools.py:72-92.
     """
     c = _col(expr)
-    num = F.aggregate(
-        F.transform(F.split(c, r"\."), lambda x: x.try_cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc * 256 + x,
-    )
-    return F.when(c.rlike(V4_ANCHORED), num).otherwise(F.lit(None).cast("long"))
+    return F.when(c.rlike(V4_ANCHORED), _quad_num(c)).otherwise(F.lit(None).cast("long"))
 
 
 def numeric_to_ipv4(expr: Column | str) -> Column:
@@ -137,6 +132,16 @@ def numeric_to_ipv4(expr: Column | str) -> Column:
     quad = F.concat_ws(".", octet(24), octet(16), octet(8), octet(0))
     return F.when((n >= 0) & (n <= _MAX_U32), quad).otherwise(
         F.lit(None).cast("string")
+    )
+
+
+def _quad_num(x: Column) -> Column:
+    """Dotted-quad string -> u32 as a JVM fold over its parts (callers
+    gate on a strict-quad match first)."""
+    return F.aggregate(
+        F.transform(F.split(x, r"\."), lambda t: t.try_cast("long")),
+        F.lit(0).cast("long"),
+        lambda acc, t: acc * 256 + t,
     )
 
 
@@ -180,38 +185,12 @@ def to_ipv4(expr: Column | str) -> Column:
 
 @F.pandas_udf(BinaryType())
 def _to_address_udf(s: pd.Series) -> pd.Series:
-    vals = s.to_numpy()
-    n = len(vals)
-    out = np.full(n, None, dtype=object)
-    if n == 0:
-        return pd.Series(out)
-    first = next((v for v in vals if v is not None), None)
-    if isinstance(first, (bytes, bytearray)):
-        # binary passthrough (/root/reference/src/iptools.rs:380);
-        # 4-byte v4 binary promoted to v4-mapped 16 bytes
-        for i, v in enumerate(vals):
-            if v is None:
-                continue
-            b = bytes(v)
-            if len(b) == 16:
-                out[i] = b
-            elif len(b) == 4:
-                out[i] = _ipparse.V4_MAPPED_PREFIX + b
-        return pd.Series(out)
-    if first is not None and not isinstance(first, str):
-        # integer u32 storage -> v4-mapped binary
-        nums = pd.to_numeric(s, errors="coerce")
-        ok = nums.notna().to_numpy() & (nums >= 0).to_numpy() & (
-            nums <= _MAX_U32
-        ).to_numpy()
-        idx = np.flatnonzero(ok)
-        if len(idx):
-            packed = _ipparse.v4_num_to_packed16(
-                nums.to_numpy()[idx].astype(np.uint32)
-            )
-            out[idx] = [p.tobytes() for p in packed]
-        return pd.Series(out)
-    return pd.Series(_ipparse.pack_ip_series(s))
+    keys, fam = _ipparse.ip_keys(s)
+    out = np.full(len(fam), None, dtype=object)
+    idx = np.flatnonzero(fam)
+    # bytes from the key matrix: |S16 element access drops trailing NULs
+    out[idx] = [r.tobytes() for r in _ipparse.key_matrix(keys)[idx]]
+    return pd.Series(out)
 
 
 def to_address(expr: Column | str) -> Column:
@@ -248,11 +227,7 @@ def _to_string_udf(s: pd.Series) -> pd.Series:
             M = np.frombuffer(
                 b"".join(bytes(vals[i]) for i in idx16), dtype=np.uint8
             ).reshape(-1, 16)
-            mapped = (
-                (M[:, :10] == 0).all(axis=1)
-                & (M[:, 10] == 0xFF)
-                & (M[:, 11] == 0xFF)
-            )
+            mapped = _ipparse.is_v4_mapped(M)
             if mapped.any():
                 out[idx16[mapped]] = _ipparse.quad_strings(M[mapped, 12:16])
             for i in idx16[~mapped]:
@@ -367,15 +342,12 @@ def _is_in_kernel(
     """The batch membership kernel behind the is_in UDF — module-level
     so the hypothesis property suite can pin it against stdlib
     ``ipaddress`` without a SparkSession."""
-    keys, fam = _ipparse.pack_ip_series_with_family(s)
-    out = np.full(len(keys), None, dtype=object)
-    m4 = fam == 4
-    m6 = fam == 6
-    if m4.any():
-        out[m4] = _ipparse.membership(keys, m4, l4, h4)[m4]
-    if m6.any():
-        out[m6] = _ipparse.membership(keys, m6, l6, h6)[m6]
-    return pd.Series(out)
+    keys, fam = _ipparse.ip_keys(s)
+    # membership is defined on address text: typed (u32 / binary)
+    # batches are null throughout
+    if not isinstance(_ipparse.first_value(s.to_numpy()), (str, type(None))):
+        fam[:] = 0
+    return pd.Series(_ipparse.membership(keys, fam, l4, h4, l6, h6))
 
 
 def is_in(
@@ -418,11 +390,12 @@ def is_in(
     lo6, hi6 = _ipparse.sort_intervals(v6_iv)
     tables = (lo4, hi4, lo6, hi6)
     bc = _broadcast_intervals(tables)
+    # the UDF closure captures the broadcast handle OR the tables, not both
+    get = (lambda: bc.value) if bc is not None else (lambda: tables)
 
     @F.pandas_udf(BooleanType())
     def _is_in_udf(s: pd.Series) -> pd.Series:
-        l4, h4, l6, h6 = bc.value if bc is not None else tables
-        return _is_in_kernel(s, l4, h4, l6, h6)
+        return _is_in_kernel(s, *get())
 
     return _is_in_udf(_col(expr))
 
@@ -462,11 +435,7 @@ def _v4_elem_filters(
     """Element predicate over extracted (guaranteed-valid) IPv4 strings."""
 
     def pred(x: Column) -> Column:
-        n = F.aggregate(
-            F.transform(F.split(x, r"\."), lambda t: t.try_cast("long")),
-            F.lit(0).cast("long"),
-            lambda acc, t: acc * 256 + t,
-        )
+        n = _quad_num(x)
         keep = F.lit(True)
         drop_priv = only_public or ignore_private
         drop_loop = only_public or ignore_loopback
@@ -489,6 +458,17 @@ _SCAN_RE = re.compile(
     rf"|(?<![0-9A-Fa-f:.])(?P<v6>(?:{_H}:|::)[0-9A-Fa-f:.]*)"
     rf"|(?<![0-9.])(?P<v4>{_V4})(?![0-9.])"
 )
+
+
+def _is_private_addr(addr) -> bool:
+    """Parsed address -> private?  RFC-1918 for IPv4 (reference
+    ``src/iptools.rs:70-79``), ULA ``fc00::/7`` for IPv6
+    (``src/iptools.rs:245-247``); the Python twin of
+    :func:`_is_private_num`."""
+    n = int(addr)
+    if addr.version == 4:
+        return (n >> 24) == 10 or (n >> 20) == 0xAC1 or (n >> 16) == 0xC0A8
+    return (n >> 121) == (0xFC00 >> 9)
 
 
 def _validate_candidate(cand: str):
@@ -518,24 +498,14 @@ def _extract_row_fn(
     drop_bcast = only_public or ignore_broadcast
 
     def keep(addr) -> bool:
+        if drop_priv and _is_private_addr(addr):
+            return False
+        n = int(addr)
         if addr.version == 4:
-            n = int(addr)
-            # reference is_private = RFC1918 only (src/iptools.rs:70-79)
-            if drop_priv and (
-                (n >> 24) == 10 or (n >> 20) == 0xAC1 or (n >> 16) == 0xC0A8
-            ):
-                return False
-            if drop_loop and (n >> 24) == 127:
-                return False
-            if drop_bcast and n == _MAX_U32:
-                return False
+            loop, bcast = (n >> 24) == 127, n == _MAX_U32
         else:
-            # v6: private == ULA fc00::/7 (/root/reference/src/iptools.rs:245-247)
-            if drop_priv and (int(addr) >> 121) == (0xFC00 >> 9):
-                return False
-            if drop_loop and int(addr) == 1:
-                return False
-        return True
+            loop, bcast = n == 1, False
+        return not ((drop_loop and loop) or (drop_bcast and bcast))
 
     def canon(addr) -> str:
         # Rust std Display keeps the dotted tail for v4-mapped IPv6
@@ -679,35 +649,13 @@ def extract_private_ips(expr: Column | str, ipv6: bool = False) -> Column:
             def one(lst):
                 if lst is None:
                     return None
-                out = []
-                for ip in lst:
-                    addr = ipaddress.ip_address(ip)
-                    if addr.version == 4:
-                        n = int(addr)
-                        if (
-                            (n >> 24) == 10
-                            or (n >> 20) == 0xAC1
-                            or (n >> 16) == 0xC0A8
-                        ):
-                            out.append(ip)
-                    elif (int(addr) >> 121) == (0xFC00 >> 9):
-                        out.append(ip)
-                return out
+                return [ip for ip in lst if _is_private_addr(ipaddress.ip_address(ip))]
 
             return s.map(one)
 
         return _keep_private(base)
     base = extract_ips(c, ignore_loopback=True, ignore_broadcast=True)
-    kept = F.filter(
-        base,
-        lambda x: _is_private_num(
-            F.aggregate(
-                F.transform(F.split(x, r"\."), lambda t: t.try_cast("long")),
-                F.lit(0).cast("long"),
-                lambda acc, t: acc * 256 + t,
-            )
-        ),
-    )
+    kept = F.filter(base, lambda x: _is_private_num(_quad_num(x)))
     return F.when(c.isNull(), F.lit(None).cast(ArrayType(StringType()))).otherwise(
         kept
     )

@@ -8,49 +8,35 @@ src/spurdb.rs:16-28.  Requires ``spur.mmdb`` under SPUR_MMDB_DIR.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import SPUR_SCHEMA
-from . import _enrich
+from . import _enrich, _ipparse
 
 __all__ = ["full"]
 
-_DB = _enrich.BroadcastedDB(_enrich.build_spur_tables)
+_DB = _enrich.BroadcastedDB(_enrich.build_spur_tables, "SPUR_MMDB_DIR")
 
 
 def full_udf(reload_mmdb: bool = False, db_dir: str | None = None):
     """The Spur-context pandas UDF itself (for ``spark.udf.register`` /
     SQL-text use); :func:`full` is the Column-level sugar over it."""
-    resolved = _enrich.resolve_mmdb_dir("SPUR_MMDB_DIR", db_dir)
-    spark = SparkSession.getActiveSession()
-    bc, tables = _DB.broadcast(spark, resolved, reload=reload_mmdb)
+    get = _DB.getter(SparkSession.getActiveSession(), reload_mmdb, db_dir)
 
     @F.pandas_udf(SPUR_SCHEMA)
     def _spur_udf(s: pd.Series) -> pd.DataFrame:
-        t = (bc.value if bc is not None else tables)["spur"]
-        fast = _enrich.series_to_keys_s16(s)
-        if fast is not None:  # string batches: zero per-row Python
-            kb, mask = fast
-            rows = t.lookup_s16(kb, mask)
-        else:
-            keys = _enrich.series_to_keys(s)
-            rows, mask = t.lookup(keys)
+        t = get()["spur"]
+        kb, fam = _ipparse.ip_keys(s)
+        valid = fam != 0
+        rows = t.lookup(kb, valid)
         data = {name: col[rows] for name, col in t.columns.items()}
         data["client_count"] = pd.array(
-            [float(v) for v in data["client_count"]], dtype="Float32"
+            data["client_count"].astype(np.float32), dtype="Float32"
         )
-        # null/invalid -> all-null struct fields, masked on the gathered
-        # copies directly (same r07 cleanup as geoip.full_udf — the
-        # row-wise .loc walked every column through pandas alignment)
-        bad = ~mask
-        if bad.any():
-            data["client_count"][bad] = pd.NA
-            for name, col in data.items():
-                if name != "client_count":
-                    col[bad] = None
-        return pd.DataFrame(data, copy=False)
+        return _enrich.struct_batch(data, ~valid)
 
     return _spur_udf
 

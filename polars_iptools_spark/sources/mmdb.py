@@ -23,6 +23,8 @@ from pathlib import Path
 
 import numpy as np
 
+from ..functions._ipparse import find_interval
+
 METADATA_MARKER = b"\xab\xcd\xefMaxMind.com"
 
 # data-section type tags (spec §"Output Data Section")
@@ -137,14 +139,10 @@ class IntervalTable:
 
     def lookup_indices(self, keys: np.ndarray) -> np.ndarray:
         """|S16 key array -> record index per key (-1 = not found)."""
-        if len(self.lo) == 0:
-            return np.full(len(keys), -1, dtype=np.int64)
-        pos = np.searchsorted(self.lo, keys, side="right") - 1
-        ok = pos >= 0
+        pos = find_interval(self.lo, self.hi, keys)
+        hit = pos >= 0
         res = np.full(len(keys), -1, dtype=np.int64)
-        idx = np.flatnonzero(ok)
-        hit = keys[idx] <= self.hi[pos[idx]]
-        res[idx[hit]] = self.rec_idx[pos[idx[hit]]]
+        res[hit] = self.rec_idx[pos[hit]]
         return res
 
 

@@ -2,11 +2,14 @@
 no SparkSession needed, so they pin the batch kernels' semantics
 independently of the JVM.
 
-Two equivalence contracts:
-1. ``pack_ip_series_s16`` (the zero-object |S16 enrichment key path
-   added for geoip/spur string batches) must agree byte-for-byte with
-   the older object-array ``pack_ip_series`` on every input.
-2. ``jaro_winkler_batch`` (the vectorized (L, N) matrix kernel that
+Contracts:
+1. ``_ipparse.ip_keys`` (the one batch -> 16-byte key kernel behind
+   every address UDF) agrees with stdlib ``ipaddress`` and
+   ``V4_FULLMATCH`` on text, binary and u32 batches.
+2. ``_ipparse.find_interval`` (the one interval probe) agrees with a
+   brute-force scan, on ``|S16`` keys ending in NUL bytes and on
+   uint32 keys.
+3. ``jaro_winkler_batch`` (the vectorized (L, N) matrix kernel that
    scores candidate pairs) must agree with the scalar textbook
    ``jaro_winkler`` to float precision on every string pair.
 """
@@ -30,23 +33,174 @@ _garbage = st.text("0123456789abcdefg.:% \n", max_size=20)
 _ip_like = st.one_of(_v4, _v6, _garbage, st.none())
 
 
+_MAPPED = b"\x00" * 10 + b"\xff\xff"
+
+
+def _stdlib_key(addr) -> tuple[int, bytes]:
+    """Parsed address -> (family, 16-byte key); v4 is stored v4-mapped
+    and a v4-mapped IPv6 *binary* key counts as family 4."""
+    if addr.version == 4:
+        return 4, _MAPPED + addr.packed
+    return (4 if addr.packed[:12] == _MAPPED else 6), addr.packed
+
+
+def _check_keys(s, expect):
+    keys, fam = _ipparse.ip_keys(s)
+    m = _ipparse.key_matrix(keys)
+    assert keys.dtype == np.dtype("|S16") and fam.dtype == np.int8
+    assert len(keys) == len(fam) == len(expect)
+    for i, (f, k) in enumerate(expect):
+        assert fam[i] == f, (i, s[i], fam[i], f)
+        assert m[i].tobytes() == (k if f else bytes(16)), (i, s[i])
+
+
+_ip_text = st.one_of(
+    _ip_like,
+    st.builds(lambda v: f"::ffff:{v}", _v4),  # v4-mapped text is IPv6
+    st.builds(lambda v, t: v + t, st.one_of(_v4, _v6), st.sampled_from(["\n", "\x00", " "])),
+    st.builds(lambda v: v + "%eth0", _v6),  # scoped IPv6
+)
+
+
 @settings(max_examples=200, deadline=None)
-@given(st.lists(_ip_like, max_size=40))
-def test_pack_s16_matches_object_path(vals):
-    s = pd.Series(vals, dtype=object)
-    kb, valid = _ipparse.pack_ip_series_s16(s)
-    legacy = _ipparse.pack_ip_series(s)
-    for i in range(len(s)):
-        if legacy[i] is None:
-            assert not valid[i], f"row {i}: s16 valid but legacy None ({vals[i]!r})"
+@given(st.lists(_ip_text, max_size=40))
+def test_ip_keys_text_matches_stdlib(vals):
+    """Text: strict dotted quads (V4_FULLMATCH) are family 4; any other
+    string stdlib parses is IPv6 (v4-mapped text included) and family
+    6; everything else, and null, is family 0 with a zero key."""
+    expect = []
+    for v in vals:
+        if v is None:
+            expect.append((0, b""))
+            continue
+        try:
+            addr = ipaddress.ip_address(v)
+        except ValueError:
+            addr = None
+        assert (addr is not None and addr.version == 4) == bool(
+            _ipparse.V4_FULLMATCH.match(v)
+        ), v
+        if addr is None:
+            expect.append((0, b""))
+        elif addr.version == 4:
+            expect.append(_stdlib_key(addr))
         else:
-            assert valid[i], f"row {i}: legacy parsed but s16 invalid ({vals[i]!r})"
-            # numpy |S16 strips trailing NULs; zero-pad back to 16 for
-            # the byte-level comparison (ordering semantics unaffected —
-            # see FlatTable.lookup_s16)
-            assert bytes(kb[i]).ljust(16, b"\x00") == legacy[i], (
-                f"row {i}: key bytes differ ({vals[i]!r})"
-            )
+            expect.append((6, addr.packed))
+    _check_keys(pd.Series(vals, dtype=object), expect)
+
+
+_addr_bytes = st.one_of(
+    st.binary(min_size=4, max_size=4),
+    st.binary(min_size=16, max_size=16),
+    st.builds(lambda b: _MAPPED + b, st.binary(min_size=4, max_size=4)),
+    # trailing NULs: |S16 element access would drop them
+    st.builds(lambda b: b + bytes(16 - len(b)), st.binary(max_size=15)),
+    st.binary(max_size=20),
+)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(st.one_of(_addr_bytes, st.none()), max_size=40))
+def test_ip_keys_binary_matches_stdlib(vals):
+    """Binary: 4- and 16-byte values are addresses (stdlib
+    ``ip_address(bytes)``), other lengths and null are family 0."""
+    expect = [
+        _stdlib_key(ipaddress.ip_address(v))
+        if v is not None and len(v) in (4, 16)
+        else (0, b"")
+        for v in vals
+    ]
+    _check_keys(pd.Series(vals, dtype=object), expect)
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.lists(
+        st.one_of(st.integers(-3, (1 << 32) + 3), st.integers(0, (1 << 32) - 1)),
+        max_size=40,
+    ),
+    st.lists(st.booleans(), max_size=40),
+)
+def test_ip_keys_u32_matches_stdlib(nums, nulls):
+    """u32: values in [0, 2**32) are IPv4; out-of-range values and NaN
+    (how a long column with nulls arrives) are family 0."""
+    vals = [None if i < len(nulls) and nulls[i] else v for i, v in enumerate(nums)]
+    expect = [
+        _stdlib_key(ipaddress.IPv4Address(v))
+        if v is not None and 0 <= v < (1 << 32)
+        else (0, b"")
+        for v in vals
+    ]
+    if any(v is None for v in vals):
+        s = pd.Series([np.nan if v is None else float(v) for v in vals], dtype=np.float64)
+    else:
+        s = pd.Series(vals, dtype=np.int64)
+    _check_keys(s, expect)
+
+
+# interval bounds biased to values with trailing zero bytes
+_point = st.one_of(
+    st.integers(0, (1 << 128) - 1),
+    st.builds(lambda v, k: v << (8 * k), st.integers(0, (1 << 32) - 1), st.integers(0, 12)),
+    st.builds(lambda v: 0xFFFF00000000 | v, st.integers(0, (1 << 32) - 1)),
+)
+
+
+def _disjoint(points, singles):
+    """Sorted distinct points -> sorted disjoint [lo, hi] intervals
+    (a point is its own interval where ``singles`` says so)."""
+    pts = sorted(set(points))
+    out, i = [], 0
+    while i < len(pts):
+        if i + 1 < len(pts) and not (i < len(singles) and singles[i]):
+            out.append((pts[i], pts[i + 1]))
+            i += 2
+        else:
+            out.append((pts[i], pts[i]))
+            i += 1
+    return out
+
+
+def _brute(intervals, k):
+    return next((j for j, (lo, hi) in enumerate(intervals) if lo <= k <= hi), -1)
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.lists(_point, max_size=24),
+    st.lists(st.booleans(), max_size=24),
+    st.lists(_point, max_size=24),
+)
+def test_find_interval_s16_matches_bruteforce(points, singles, extra):
+    iv = _disjoint(points, singles)
+    probes = [p + d for lo, hi in iv for p in (lo, hi) for d in (-1, 0, 1)]
+    probes = [p for p in probes + extra if 0 <= p < (1 << 128)]
+
+    def s16(vals):
+        return np.array([v.to_bytes(16, "big") for v in vals], dtype="|S16")
+
+    got = _ipparse.find_interval(
+        s16([lo for lo, _ in iv]), s16([hi for _, hi in iv]), s16(probes)
+    )
+    assert got.tolist() == [_brute(iv, k) for k in probes]
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.lists(st.integers(0, (1 << 32) - 1), max_size=24),
+    st.lists(st.booleans(), max_size=24),
+    st.lists(st.integers(0, (1 << 32) - 1), max_size=24),
+)
+def test_find_interval_u32_matches_bruteforce(points, singles, extra):
+    iv = _disjoint(points, singles)
+    probes = [p + d for lo, hi in iv for p in (lo, hi) for d in (-1, 0, 1)]
+    probes = [p for p in probes + extra if 0 <= p < (1 << 32)]
+    got = _ipparse.find_interval(
+        np.array([lo for lo, _ in iv], dtype=np.uint32),
+        np.array([hi for _, hi in iv], dtype=np.uint32),
+        np.array(probes, dtype=np.uint32),
+    )
+    assert got.tolist() == [_brute(iv, k) for k in probes]
 
 
 _v4ish = st.one_of(

@@ -71,7 +71,7 @@ def test_flat_table_split_v4_index():
     import pandas as pd
 
     from polars_iptools_spark.functions._enrich import FlatTable
-    from polars_iptools_spark.functions._ipparse import pack_ip_series_s16
+    from polars_iptools_spark.functions._ipparse import ip_keys
     from polars_iptools_spark.sources.mmdb import IntervalTable
 
     def k(ip):
@@ -116,8 +116,8 @@ def test_flat_table_split_v4_index():
             "::1",               # below the /96, inside wide's raw range
         ]
     )
-    kb, valid = pack_ip_series_s16(ips)
-    rows = ft.lookup_s16(kb, valid)
+    kb, fam = ip_keys(ips)
+    rows = ft.lookup(kb, fam != 0)
     got = [ft.columns["v"][r] for r in rows]
     assert got == ["wide", "wide", "wide", "six", "miss", "high", "wide"]
 
@@ -140,5 +140,5 @@ def test_flat_table_interior_nul_keys_regression():
     assert len(ft.lo4) == 1          # the regression dropped it
     assert len(ft.lo6) == 0          # fully inside the /96
     key = np.array([b"\x00" * 10 + b"\xff\xff\x00\x00\x90\x01"], dtype="|S16")
-    rows = ft.lookup_s16(key, np.array([True]))
+    rows = ft.lookup(key, np.array([True]))
     assert ft.columns["v"][rows[0]] == "x"

@@ -202,7 +202,7 @@ def test_v6_tiling_end_to_end(tmp_path):
     import pandas as pd
 
     from polars_iptools_spark.functions._enrich import build_geoip_tables
-    from polars_iptools_spark.functions._ipparse import pack_ip_series_s16
+    from polars_iptools_spark.functions._ipparse import ip_keys
 
     NV4, NV6, NREC = 10_000, 5_000, 800
     mmdb_synth.write_synthetic_geolite(
@@ -234,8 +234,8 @@ def test_v6_tiling_end_to_end(tmp_path):
     tests.append(("2800::1", None))       # past the v6 tiling
     assert any(e is not None for _, e in tests[-20:-2])  # v6 hits sampled
 
-    kb, valid = pack_ip_series_s16(pd.Series([t[0] for t in tests]))
-    rows = city.lookup_s16(kb, valid)
+    kb, fam = ip_keys(pd.Series([t[0] for t in tests]))
+    rows = city.lookup(kb, fam != 0)
     for (ip_s, exp), r in zip(tests, rows):
         want = f"City {exp}" if exp is not None else ""
         assert city.columns["city"][r] == want, ip_s
@@ -250,3 +250,75 @@ def test_v6_tiling_end_to_end(tmp_path):
         )
         assert exp == mmdb_synth.record_index(NV4 + i, NREC)
         assert net.broadcast_address in net
+
+
+@pytest.fixture(scope="module")
+def typed_dir(tmp_path_factory):
+    d = tmp_path_factory.mktemp("mmdb_typed")
+    mmdb_synth.write_synthetic_geolite(
+        d,
+        n_city_networks=3_000,
+        n_city_records=400,
+        n_asn_networks=1_500,
+        n_asn_records=200,
+        n_city_v6_networks=300,
+        n_asn_v6_networks=100,
+    )
+    mmdb_synth.write_synthetic_spur(d, n_networks=2_000, n_records=300, n_v6_networks=200)
+    return d
+
+
+def test_typed_column_enrichment_matches_string(spark, typed_dir):
+    """u32, 16-byte binary and 4-byte binary columns enrich exactly like
+    the string column they were derived from (a null typed value like a
+    null string), through geoip.asn, geoip.full, spur.full and
+    to_string(to_address); is_in on a typed column is null throughout."""
+    import polars_iptools_spark as ip
+    from pyspark.sql import functions as F
+
+    from polars_iptools_spark.functions import geoip, spur
+
+    d = str(typed_dir)
+    v4 = [str(ipaddress.IPv4Address(a)) for a in range(4096, 3_000 * 2048, 397 * 1024)]
+    v4 += ["203.0.113.9", "0.0.0.0", "255.255.255.255", "10.1.2.0"]
+    v6 = [
+        str(ipaddress.IPv6Address(mmdb_synth.V6_BASE + k * mmdb_synth._V6_BLOCK_SPAN // 3))
+        for k in range(0, 300, 37)
+    ] + ["2800::1", "fe80::1"]
+    ips = v4 + v6 + ["::ffff:10.0.0.0", "::ffff:0.0.64.1", "bad", None]
+    df = (
+        spark.createDataFrame(list(enumerate(ips)), "rid int, ip string")
+        .withColumn("u32", ip.to_ipv4("ip"))
+        .withColumn("b16", ip.to_address("ip"))
+        .withColumn("b4", F.unhex(F.lpad(F.hex("u32"), 8, "0")))
+    )
+    nets = ["10.0.0.0/8", "0.0.0.0/20", "2600::/12"]
+    cols = ["ip", "u32", "b16", "b4"]
+    exprs = [
+        F.struct(
+            geoip.asn(c, db_dir=d).alias("asn"),
+            geoip.full(c, db_dir=d).alias("full"),
+            spur.full(c, db_dir=d).alias("spur"),
+            ip.to_string(ip.to_address(c)).alias("addr"),
+            ip.is_in(c, nets).alias("is_in"),
+        ).alias(f"r_{c}")
+        for c in cols
+    ]
+    rows = df.select("rid", *cols, *exprs).collect()
+    null_row = next(r for r in rows if r.ip is None)
+    assert sum(r.r_ip.full.city not in (None, "") for r in rows) > 10
+    assert sum(r.r_ip.spur.tag not in (None, "") for r in rows) > 5
+    assert sum(r.r_ip.asn not in (None, "") for r in rows) > 5
+    assert sum(r.r_ip.is_in is True for r in rows) > 3
+    for r in rows:
+        for c in ("u32", "b16", "b4"):
+            ref = null_row.r_ip if r[c] is None else r.r_ip
+            got = r[f"r_{c}"]
+            assert got.asn == ref.asn, (r.ip, c)
+            assert got.full == ref.full, (r.ip, c)
+            assert got.spur == ref.spur, (r.ip, c)
+            assert got.addr == ref.addr, (r.ip, c)
+            assert got.is_in is None, (r.ip, c)
+    typed = {r.ip: (r.u32, r.b16, r.b4) for r in rows}
+    assert typed["10.1.2.0"] == (0x0A010200, bytes(10) + b"\xff\xff\x0a\x01\x02\x00", b"\x0a\x01\x02\x00")
+    assert typed["fe80::1"][0] is None and len(typed["fe80::1"][1]) == 16
