@@ -12,6 +12,7 @@ Spark DataFrame/SQL engine.
 
 from __future__ import annotations
 
+from . import _pyworker  # noqa: F401  (first: patches zipimport in Python workers)
 from . import schemas, types  # noqa: F401
 from .functions import geoip, spur  # noqa: F401
 from .functions import (  # noqa: F401

@@ -207,11 +207,18 @@ def ip_keys(s: pd.Series) -> tuple[np.ndarray, np.ndarray]:
             m[idx6] = np.frombuffer(b"".join(packed), np.uint8).reshape(-1, 16)
             fam[idx6] = 6
     else:
-        nums = pd.to_numeric(s, errors="coerce")
-        ok = (nums.notna() & (nums >= 0) & (nums <= 0xFFFFFFFF)).to_numpy(dtype=bool)
-        _put_v4(m, ok, nums.to_numpy()[ok].astype(np.uint32))
+        nums, ok = u32_values(s)
+        _put_v4(m, ok, nums[ok])
         fam[ok] = 4
     return m.view("|S16").reshape(n), fam
+
+
+def u32_values(s: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+    """Numeric batch -> (uint32 values, mask of the whole numbers in
+    ``[0, 2**32)``): fractions, NaN and out-of-range values are not u32."""
+    x = pd.to_numeric(s, errors="coerce").to_numpy(dtype=np.float64, na_value=np.nan)
+    ok = (x >= 0) & (x <= 0xFFFFFFFF) & (x == np.floor(x))
+    return np.where(ok, x, 0).astype(np.uint32), ok
 
 
 def find_interval(lo: np.ndarray, hi: np.ndarray, keys: np.ndarray) -> np.ndarray:

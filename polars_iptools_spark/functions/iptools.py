@@ -208,9 +208,7 @@ def _to_string_udf(s: pd.Series) -> pd.Series:
     vals = s.to_numpy()
     n = len(vals)
     out = np.full(n, None, dtype=object)
-    if n == 0:
-        return pd.Series(out)
-    first = next((v for v in vals if v is not None), None)
+    first = _ipparse.first_value(vals)
     if isinstance(first, (bytes, bytearray)):
         # vectorized fast path for the dominant shape: 16-byte v4-mapped
         # keys render as dotted quads straight from a (k, 16) byte
@@ -237,15 +235,16 @@ def _to_string_udf(s: pd.Series) -> pd.Series:
             if v is not None and len(v) != 16:
                 out[i] = _ipparse.packed16_to_str(bytes(v))
         return pd.Series(out)
-    # numeric u32 path — fully vectorized string build
-    nums = pd.to_numeric(s, errors="coerce")
-    ok = nums.notna() & (nums >= 0) & (nums <= _MAX_U32)
-    if ok.any():
-        v = nums[ok].to_numpy(np.int64)
-        octs = np.stack(
-            [(v >> 24) & 255, (v >> 16) & 255, (v >> 8) & 255, v & 255], axis=1
+    if isinstance(first, str):
+        raise TypeError(
+            "to_string expects a typed IP column (u32 numeric or 4/16-byte "
+            "binary), got strings; parse them with to_address or to_ipv4"
         )
-        out[np.flatnonzero(ok.to_numpy())] = _ipparse.quad_strings(octs)
+    # numeric u32 path — fully vectorized string build
+    nums, ok = _ipparse.u32_values(s)
+    if ok.any():
+        octs = nums[ok].astype(">u4").view(np.uint8).reshape(-1, 4)
+        out[ok] = _ipparse.quad_strings(octs)
     return pd.Series(out)
 
 
@@ -254,7 +253,8 @@ def to_string(expr: Column | str) -> Column:
 
     v4-mapped 16-byte values render as plain dotted quad
     (/root/reference/src/iptools.rs:262-325); IPv6 in RFC-5952 canonical
-    compression. null / wrong-length binary -> null.
+    compression. null / wrong-length binary / non-u32 numbers -> null; a
+    string column raises ``TypeError`` (as in ``src/iptools.rs:323``).
     """
     return _to_string_udf(_col(expr))
 
@@ -489,6 +489,7 @@ def _extract_row_fn(
     ignore_private: bool,
     ignore_loopback: bool,
     ignore_broadcast: bool,
+    only_private: bool = False,
 ):
     """Per-flag extraction closure, cached per Python worker — the Spark
     analog of the reference's per-flag-mask extractor cache
@@ -498,7 +499,8 @@ def _extract_row_fn(
     drop_bcast = only_public or ignore_broadcast
 
     def keep(addr) -> bool:
-        if drop_priv and _is_private_addr(addr):
+        # drop private addresses, or with only_private the public ones
+        if (drop_priv or only_private) and _is_private_addr(addr) != only_private:
             return False
         n = int(addr)
         if addr.version == 4:
@@ -536,8 +538,9 @@ def _extract_udf_v6(
     ignore_private: bool,
     ignore_loopback: bool,
     ignore_broadcast: bool,
+    only_private: bool = False,
 ):
-    flags = (only_public, ignore_private, ignore_loopback, ignore_broadcast)
+    flags = (only_public, ignore_private, ignore_loopback, ignore_broadcast, only_private)
 
     @F.pandas_udf(ArrayType(StringType()))
     def _udf(s: pd.Series) -> pd.Series:
@@ -552,6 +555,28 @@ def _extract_udf_v6(
         return s.map(one)
 
     return _udf
+
+
+def _v6_gated(c: Column, flags: tuple, native: Column) -> Column:
+    """IPv6-capable extraction: the ``_extract_udf_v6(*flags)`` scan
+    where needed, the same flags' IPv4-only ``native`` elsewhere.
+
+    Native prefilter: a row whose refanged text contains neither ':'
+    nor '[' cannot produce a v6 match NOR a bracketed-scan match (the
+    scanner's v6 alternative needs a colon; its bracket alternative
+    needs '['; with both absent the full scan reduces exactly to the
+    strict-quad v4 alternative, which is what the JVM-native ipv6=False
+    path computes).  Those rows take the native path, and the UDF
+    receives NULL instead of the text — Spark still runs the
+    ArrowEvalPython node over every row, but masked rows cross as
+    nulls, so v6-free batches pay neither serialization nor Python
+    regex.  The gate probes the v6-refanged text so defanged
+    '[:]'/'(:)' markers correctly route to the scanner.
+    """
+    rt = _refang(c, v6=True)
+    needs_py = rt.contains(":") | rt.contains("[")
+    udf = _extract_udf_v6(*flags)
+    return F.when(needs_py, udf(F.when(needs_py, c))).otherwise(native)
 
 
 def extract_ips(
@@ -576,32 +601,8 @@ def extract_ips(
     """
     c = _col(expr)
     if ipv6:
-        udf = _extract_udf_v6(
-            only_public, ignore_private, ignore_loopback, ignore_broadcast
-        )
-        # Native prefilter: a row whose refanged text contains neither
-        # ':' nor '[' cannot produce a v6 match NOR a bracketed-scan
-        # match (the scanner's v6 alternative needs a colon; its
-        # bracket alternative needs '['; with both absent the full
-        # scan reduces exactly to the strict-quad v4 alternative,
-        # which is what the JVM-native ipv6=False path computes).
-        # Those rows take the native path, and the UDF receives NULL
-        # instead of the text — Spark still runs the ArrowEvalPython
-        # node over every row, but masked rows cross as nulls, so
-        # v6-free batches pay neither serialization nor Python regex.
-        # The gate probes the v6-refanged text so defanged '[:]'/'(:)'
-        # markers correctly route to the scanner.
-        rt = _refang(c, v6=True)
-        needs_py = rt.contains(":") | rt.contains("[")
-        native = extract_ips(
-            c,
-            ipv6=False,
-            only_public=only_public,
-            ignore_private=ignore_private,
-            ignore_loopback=ignore_loopback,
-            ignore_broadcast=ignore_broadcast,
-        )
-        return F.when(needs_py, udf(F.when(needs_py, c))).otherwise(native)
+        flags = (only_public, ignore_private, ignore_loopback, ignore_broadcast)
+        return _v6_gated(c, flags, extract_ips(c, False, *flags))
     refanged = _refang(c, v6=False)
     arr = F.regexp_extract_all(refanged, F.lit(_V4_CAND), 1)
     if only_public or ignore_private or ignore_loopback or ignore_broadcast:
@@ -642,18 +643,8 @@ def extract_private_ips(expr: Column | str, ipv6: bool = False) -> Column:
     """
     c = _col(expr)
     if ipv6:
-        base = extract_ips(c, ipv6=True, ignore_loopback=True, ignore_broadcast=True)
-
-        @F.pandas_udf(ArrayType(StringType()))
-        def _keep_private(s: pd.Series) -> pd.Series:
-            def one(lst):
-                if lst is None:
-                    return None
-                return [ip for ip in lst if _is_private_addr(ipaddress.ip_address(ip))]
-
-            return s.map(one)
-
-        return _keep_private(base)
+        # one scan: ignore_loopback + ignore_broadcast + only_private
+        return _v6_gated(c, (False, False, True, True, True), extract_private_ips(c))
     base = extract_ips(c, ignore_loopback=True, ignore_broadcast=True)
     kept = F.filter(base, lambda x: _is_private_num(_quad_num(x)))
     return F.when(c.isNull(), F.lit(None).cast(ArrayType(StringType()))).otherwise(

@@ -15,9 +15,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-# One Arrow batch per JVM<->Python crossing; IP rows are tiny (a string
-# and a few ints), so a bigger batch amortizes the crossing the same way
-# the reference amortizes one FFI call per Polars chunk.
+# Rows per Arrow batch sent to a Python worker; IP rows are tiny, so a
+# bigger batch amortizes the per-batch cost the way the reference does one
+# FFI call per Polars chunk (not the per-task worker setup: see _pyworker).
 _ARROW_BATCH = "65536"
 
 

@@ -4,10 +4,16 @@ expected outputs.  Each case runs through the DataFrame API and, where
 marked, through spark.sql text (the Spark analog of the reference's
 eager/lazy parametrization, tests/test_iptools.py:8-27)."""
 
+import ipaddress
+import random
+
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StringType
 
 import polars_iptools_spark as ip
+from polars_iptools_spark.functions.iptools import _is_private_addr
 
 
 def run(spark, data, colname, expr):
@@ -282,6 +288,68 @@ def test_extract_private_ips(spark):
         ["10.0.0.1", "172.16.0.1"],
         [],
     ]
+
+
+def test_extract_private_ips_v6(spark):
+    """ULA and RFC-1918 kept; v4-mapped RFC-1918 text is an IPv6
+    address and stays out, like loopback and public ones; defanged and
+    bracketed tokens are found."""
+    text = [
+        "ula fd12:3456::1 and fc00::1 public 2001:db8::1",
+        "v4 10.1.2.3 172.16.5.4 192.168.0.1 public 8.8.8.8",
+        "mapped ::ffff:10.0.0.1 loopback ::1 127.0.0.1",
+        "defanged 10[.]0[.]0[.]2 and fd00[:][:]5",
+        "bracketed [fd00::7]:443 and [2001:db8::2]:80",
+        "no colon at all 192.168.9.9 and 1.1.1.1",
+        None,
+    ]
+    assert run(spark, text, "text", ip.extract_private_ips("text", ipv6=True)) == [
+        ["fd12:3456::1", "fc00::1"],
+        ["10.1.2.3", "172.16.5.4", "192.168.0.1"],
+        [],
+        ["10.0.0.2", "fd00::5"],
+        ["fd00::7"],
+        ["192.168.9.9"],
+        None,
+    ]
+
+
+def test_extract_private_ips_v6_matches_two_udf_composition(spark):
+    """The one-scan private filter equals the former composition: the
+    gated IPv6 extractor followed by a second UDF keeping private
+    addresses, on random text mixing every token shape."""
+
+    @F.pandas_udf(ArrayType(StringType()))
+    def keep_private(s: pd.Series) -> pd.Series:
+        def one(lst):
+            if lst is None:
+                return None
+            return [a for a in lst if _is_private_addr(ipaddress.ip_address(a))]
+
+        return s.map(one)
+
+    tokens = [
+        "10.0.0.1", "172.31.255.255", "192.168.1.1", "8.8.8.8", "127.0.0.1",
+        "255.255.255.255", "fd00::1", "fc12:34::9", "fe80::1", "::1", "::",
+        "2001:db8::1", "::ffff:10.0.0.1", "::ffff:8.8.8.8", "10[.]1[.]2[.]3",
+        "fd00[:][:]2", "fd00(:)(:)3", "[fd00::4]:443", "[10.0.0.9]", "1.2.3.4:80",
+        "word", "a:b", "[x]", "300.1.1.1", "1.2.3", "fd00::1::2",
+    ]
+    rnd = random.Random(7)
+    text = [None] + [
+        " ".join(rnd.choice(tokens) for _ in range(rnd.randint(0, 6)))
+        for _ in range(400)
+    ]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(text)], "i int, text string")
+    old = keep_private(
+        ip.extract_ips("text", ipv6=True, ignore_loopback=True, ignore_broadcast=True)
+    )
+    rows = df.select(
+        "i", ip.extract_private_ips("text", ipv6=True).alias("new"), old.alias("old")
+    ).collect()
+    assert len(rows) == len(text)
+    assert all(r.new == r.old for r in rows)
+    assert sum(bool(r.new) for r in rows) > 100
 
 
 def test_extract_all_ips_deprecated(spark):

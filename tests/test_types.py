@@ -2,8 +2,14 @@
 /root/reference/tests/test_extension_types.py — str -> typed -> str
 identities, null/invalid handling, metadata tagging, parquet IO."""
 
+import math
+
+import pandas as pd
+import pytest
+
 import polars_iptools_spark as ip
 from polars_iptools_spark import types as iptypes
+from polars_iptools_spark.functions.iptools import _to_string_udf
 
 
 def _roundtrip(spark, ips, via):
@@ -70,6 +76,34 @@ def test_to_string_from_numeric_column(spark):
     df = spark.createDataFrame([(134744072,), (None,), (4294967296,)], "n long")
     got = [r.result for r in df.select(ip.to_string("n").alias("result")).collect()]
     assert got == ["8.8.8.8", None, None]
+
+
+def test_to_string_numeric_sweep(spark):
+    """Whole numbers in [0, 2**32) render; fractions, negatives and NaN
+    are null (not truncated), through to_string and through the
+    to_address key path alike."""
+    vals = [0.0, 1.0, 1.5, 4294967295.0, 4294967295.5, -1.0, math.nan]
+    want = ["0.0.0.0", "0.0.0.1", None, "255.255.255.255", None, None, None]
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)], "i int, n double")
+    rows = df.select(
+        "i",
+        ip.to_string("n").alias("direct"),
+        ip.to_string(ip.to_address("n")).alias("via_address"),
+    ).orderBy("i").collect()
+    assert [r.direct for r in rows] == want
+    assert [r.via_address for r in rows] == want
+
+
+def test_to_string_rejects_string_column(spark):
+    """A string batch is not reinterpreted as u32 numbers: it raises a
+    TypeError naming to_string and the accepted types (the reference
+    rejects any other dtype, src/iptools.rs:323)."""
+    msg = r"to_string expects a typed IP column \(u32 numeric or 4/16-byte binary\)"
+    with pytest.raises(TypeError, match=msg):
+        _to_string_udf.func(pd.Series(["1234", "1.2.3.4", "::1"]))
+    df = spark.createDataFrame([("1234",), ("1.2.3.4",), ("::1",)], "ip string")
+    with pytest.raises(Exception, match=msg):
+        df.select(ip.to_string("ip")).collect()
 
 
 def test_to_string_from_4byte_binary(spark):
