@@ -215,6 +215,55 @@ def write_synthetic_geolite(
     return out
 
 
+_ASIA = {"code": "AS", "names": {"en": "Asia"}}
+
+# The enrichment goldens (FIXTURES.md §5): 67.43.156.1 carries an
+# org-less ASN and a country-level City record, 240b::beef:0:24 is in
+# ASN only, 202.196.224.99 in City only, and 192.168.1.1 in neither.
+# The prefix lengths are not documented; any network holding the
+# address serves.
+GOLDEN_GEOLITE = {
+    "GeoLite2-ASN.mmdb": [
+        ("67.43.156.0/24", {"autonomous_system_number": 35908}),
+        ("240b::/24", {
+            "autonomous_system_number": 2516,
+            "autonomous_system_organization": "KDDI KDDI CORPORATION",
+        }),
+    ],
+    "GeoLite2-City.mmdb": [
+        ("67.43.156.0/24", {
+            "continent": _ASIA,
+            "country": {"iso_code": "BT", "names": {"en": "Bhutan"}},
+            "location": {
+                "latitude": 27.5, "longitude": 90.5, "time_zone": "Asia/Thimphu",
+            },
+        }),
+        ("202.196.224.0/20", {
+            "continent": _ASIA,
+            "country": {"iso_code": "PH", "names": {"en": "Philippines"}},
+            "location": {
+                "latitude": 13.0, "longitude": 122.0, "time_zone": "Asia/Manila",
+            },
+            "postal": {"code": "34021"},
+        }),
+    ],
+}
+
+
+def write_golden_geolite(db_dir: str | Path) -> Path:
+    """Write the golden GeoLite2-ASN/City pair into ``db_dir`` and
+    return it.  Laid out like the reference's test files: 28-bit
+    records, IPv4 under ::/96 with ::ffff:0:0/96 aliased to it."""
+    db_dir = Path(db_dir)
+    db_dir.mkdir(parents=True, exist_ok=True)
+    for name, entries in GOLDEN_GEOLITE.items():
+        write_mmdb(
+            db_dir / name, entries, database_type=name.split(".")[0],
+            record_size=28, ipv4_aliased=True,
+        )
+    return db_dir
+
+
 def write_synthetic_spur(
     db_dir: str | Path,
     n_networks: int = 1_500_000,

@@ -4,11 +4,14 @@ Builds a spec-conformant MaxMind DB file (search tree + data section +
 metadata) from a list of (CIDR, record) pairs.  Used to synthesize
 fixture databases (e.g. a Spur anonymity feed, which has no public test
 file) and to property-test the decoder round-trip.  Implements the
-public format spec only; 32-bit records, no pointer compression (the
-spec makes pointers optional for writers).
+public format spec only; 24-, 28- or 32-bit records (32 by default), no
+pointer compression (the spec makes pointers optional for writers).
 
-IPv4 networks are stored under the v4-mapped ::ffff:0:0/96 prefix,
-matching the engine's lookup convention.
+By default IPv4 networks are stored under the v4-mapped ::ffff:0:0/96
+prefix, matching the engine's lookup convention.  ``ipv4_aliased=True``
+writes the GeoLite2 layout instead: IPv4 networks under ::/96, and the
+::ffff:0:0/96 record pointing at that same ::/96 node, so the IPv4
+subtree is reachable through two paths.
 """
 
 from __future__ import annotations
@@ -17,8 +20,6 @@ import ipaddress
 import struct
 import time
 from pathlib import Path
-
-_RECORD_SIZE = 32  # bits
 
 
 def _encode(value) -> bytes:
@@ -80,18 +81,62 @@ class _Node:
         self.num = -1
 
 
-def _net_bits(net) -> tuple[int, int]:
-    """(128-bit value, prefix length) in the v4-mapped address space."""
+def _net_bits(net, ipv4_aliased: bool) -> tuple[int, int]:
+    """(128-bit value, prefix length) in the v6 tree: IPv4 under
+    ::/96 in the aliased layout, under ::ffff:0:0/96 otherwise."""
     if net.version == 4:
-        return (0xFFFF << 32) | int(net.network_address), 96 + net.prefixlen
+        base = 0 if ipv4_aliased else 0xFFFF << 32
+        return base | int(net.network_address), 96 + net.prefixlen
     return int(net.network_address), net.prefixlen
+
+
+def _alias_ipv4(root: _Node) -> None:
+    """Point the ::ffff:0:0/96 record at the ::/96 node (GeoLite2's
+    IPv4 layout); no-op when the tree holds nothing under ::/96."""
+    v4_root = root
+    for _ in range(96):
+        v4_root = v4_root.left
+        if v4_root is None or v4_root.data is not None:
+            return
+    node = root
+    for depth in range(95):  # 80 zero bits, then 15 of the 16 one bits
+        if depth < 80:
+            node = node.left  # shared with the ::/96 path
+        else:
+            if node.right is None:
+                node.right = _Node()
+            node = node.right
+            if node.data is not None:
+                break
+    if node.data is not None or node.right is not None:
+        raise ValueError("::ffff:0:0/96 holds entries; it cannot alias ::/96")
+    node.right = v4_root
+
+
+def _pack_records(left: int, right: int, record_size: int) -> bytes:
+    """One search-tree node in the spec layout for ``record_size``."""
+    if record_size == 32:
+        return left.to_bytes(4, "big") + right.to_bytes(4, "big")
+    if record_size == 24:
+        return left.to_bytes(3, "big") + right.to_bytes(3, "big")
+    # 28: low 24 bits of each record around one byte holding the high
+    # nibble of the left record, then the high nibble of the right
+    return (
+        (left & 0xFFFFFF).to_bytes(3, "big")
+        + bytes([(left >> 20 & 0xF0) | (right >> 24)])
+        + (right & 0xFFFFFF).to_bytes(3, "big")
+    )
 
 
 def write_mmdb(
     path: str | Path,
     entries: list[tuple[str, dict]],
     database_type: str = "Test-DB",
+    record_size: int = 32,
+    ipv4_aliased: bool = False,
 ) -> None:
+    if record_size not in (24, 28, 32):
+        raise ValueError(f"record_size must be 24, 28 or 32 (got {record_size})")
     root = _Node()
     data_blobs: list[bytes] = []
     offsets: dict[bytes, int] = {}
@@ -127,7 +172,7 @@ def write_mmdb(
     prev_val = -1
     for cidr, record in entries:
         net = ipaddress.ip_network(cidr, strict=False)
-        val, plen = _net_bits(net)
+        val, plen = _net_bits(net, ipv4_aliased)
         if prev_val >= 0:
             lcp = 128 - ((val ^ prev_val).bit_length() or 0) if val != prev_val else 128
             start = min(lcp, plen, len(walk) - 1)
@@ -154,16 +199,19 @@ def write_mmdb(
             raise ValueError(f"network {cidr} contains an existing entry")
         node.data = data_offset(record)
         prev_val = val
+    if ipv4_aliased:
+        _alias_ipv4(root)
 
     # number internal nodes (nodes with any child); leaves carry data.
     # iterative pre-order DFS — at production scale (millions of
     # networks) the tree has tens of millions of nodes and per-node
-    # recursion would dominate the build
+    # recursion would dominate the build.  An aliased subtree is
+    # reached twice but numbered once.
     internal: list[_Node] = []
     stack = [root]
     while stack:
         n = stack.pop()
-        if n.left or n.right or n is root:
+        if n.num < 0 and (n.left or n.right or n is root):
             n.num = len(internal)
             internal.append(n)
             if n.right is not None:
@@ -179,10 +227,11 @@ def write_mmdb(
             return child.num
         return node_count + 16 + child.data
 
+    if node_count + 16 + next_off >= 1 << record_size:
+        raise ValueError(f"tree and data section too large for {record_size}-bit records")
     tree = bytearray()
     for n in internal:
-        tree += record_value(n.left).to_bytes(4, "big")
-        tree += record_value(n.right).to_bytes(4, "big")
+        tree += _pack_records(record_value(n.left), record_value(n.right), record_size)
 
     data_section = b"".join(data_blobs)
     meta = {
@@ -194,7 +243,7 @@ def write_mmdb(
         "ip_version": 6,
         "languages": ["en"],
         "node_count": node_count,
-        "record_size": _RECORD_SIZE,
+        "record_size": record_size,
     }
     blob = (
         bytes(tree)

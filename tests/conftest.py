@@ -1,8 +1,7 @@
 import pytest
 
 from polars_iptools_spark.session import get_spark
-
-MAXMIND_TEST_DIR = "/root/reference/tests/maxmind"
+from polars_iptools_spark.sources.mmdb_synth import write_golden_geolite
 
 
 @pytest.fixture(scope="session")
@@ -15,6 +14,13 @@ def spark():
     )
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture(scope="session")
+def maxmind_dir(tmp_path_factory):
+    """Directory holding the golden GeoLite2-ASN/City test databases
+    (FIXTURES.md §5), written once per session."""
+    return str(write_golden_geolite(tmp_path_factory.mktemp("maxmind")))
 
 
 def collect_col(df, col="result"):

@@ -21,8 +21,6 @@ from hypothesis import strategies as st
 import polars_iptools_spark as ip
 from polars_iptools_spark.functions import geoip, iptools
 
-MAXMIND = "/root/reference/tests/maxmind"
-
 
 class _ConnectishSession:
     """What matters about a Spark Connect session for these seams: any
@@ -71,7 +69,7 @@ def test_is_in_closure_capture_fallback(spark, monkeypatch):
     assert got["bad"] is None and got[None] is None
 
 
-def test_geoip_closure_capture_fallback(spark, monkeypatch):
+def test_geoip_closure_capture_fallback(spark, monkeypatch, maxmind_dir):
     df = spark.createDataFrame([("67.43.156.1",), ("bad",), (None,)], "ip string")
     with monkeypatch.context() as m:
         m.setattr(
@@ -83,7 +81,7 @@ def test_geoip_closure_capture_fallback(spark, monkeypatch):
         )
         # reload forces a rebuild so BroadcastedDB actually attempts
         # (and fails) the broadcast instead of reusing a cached one
-        col = ip.geoip.asn("ip", db_dir=MAXMIND, reload_mmdb=True)
+        col = ip.geoip.asn("ip", db_dir=maxmind_dir, reload_mmdb=True)
     assert geoip._DB._bc is None  # the fallback really engaged
     got = {r.ip: r.a for r in df.select("ip", col.alias("a")).collect()}
     assert got["67.43.156.1"] == "AS35908"  # reference golden

@@ -1,16 +1,15 @@
-"""Geo enrichment goldens ported from /root/reference/tests/test_geoip.py,
-using the same miniature MaxMind test databases
-(/root/reference/tests/maxmind/*.mmdb, read-only)."""
+"""Geo enrichment goldens ported from the reference's tests/test_geoip.py,
+run against the in-repo golden GeoLite2-ASN/City test databases that
+the ``maxmind_dir`` fixture writes (``mmdb_synth.write_golden_geolite``,
+FIXTURES.md §5)."""
 
 import pytest
 
 from polars_iptools_spark.functions import geoip
 from polars_iptools_spark.schemas import GEOIP_SCHEMA
 
-from conftest import MAXMIND_TEST_DIR
 
-
-def test_asn_lookup(spark):
+def test_asn_lookup(spark, maxmind_dir):
     """ref tests/test_geoip.py:23-40 — org-less record renders 'AS35908'
     with no trailing space; invalid -> empty string."""
     ips = ["67.43.156.1", "240b::beef:0:24", "999.9.9.9"]
@@ -18,29 +17,29 @@ def test_asn_lookup(spark):
     got = [
         r.result
         for r in df.select(
-            geoip.asn("ip", db_dir=MAXMIND_TEST_DIR).alias("result")
+            geoip.asn("ip", db_dir=maxmind_dir).alias("result")
         ).collect()
     ]
     assert got == ["AS35908", "AS2516 KDDI KDDI CORPORATION", ""]
 
 
-def test_asn_null_and_not_found(spark):
+def test_asn_null_and_not_found(spark, maxmind_dir):
     ips = [None, "192.168.1.1"]
     df = spark.createDataFrame([(x,) for x in ips], "ip string")
     got = [
         r.result
         for r in df.select(
-            geoip.asn("ip", db_dir=MAXMIND_TEST_DIR).alias("result")
+            geoip.asn("ip", db_dir=maxmind_dir).alias("result")
         ).collect()
     ]
     assert got == [None, ""]
 
 
-def test_full_geoip_lookup(spark):
+def test_full_geoip_lookup(spark, maxmind_dir):
     """ref tests/test_geoip.py:43-120 — exact golden structs."""
     ips = ["67.43.156.1", "240b::beef:0:24", "202.196.224.99"]
     df = spark.createDataFrame([(x,) for x in ips], "ip string")
-    res = df.select(geoip.full("ip", db_dir=MAXMIND_TEST_DIR).alias("result"))
+    res = df.select(geoip.full("ip", db_dir=maxmind_dir).alias("result"))
     assert res.schema["result"].dataType == GEOIP_SCHEMA
     rows = [r.result.asDict() for r in res.collect()]
     assert rows[0] == {
@@ -63,30 +62,30 @@ def test_full_geoip_lookup(spark):
     }
 
 
-def test_full_geoip_invalid_and_null(spark):
+def test_full_geoip_invalid_and_null(spark, maxmind_dir):
     """null/invalid -> all-null struct fields (src/geoip.rs:41-44)."""
     df = spark.createDataFrame([("999.9.9.9",), (None,)], "ip string")
     rows = [
         r.result.asDict()
         for r in df.select(
-            geoip.full("ip", db_dir=MAXMIND_TEST_DIR).alias("result")
+            geoip.full("ip", db_dir=maxmind_dir).alias("result")
         ).collect()
     ]
     for row in rows:
         assert all(v is None for v in row.values())
 
 
-def test_typed_column_inputs(spark):
+def test_typed_column_inputs(spark, maxmind_dir):
     """Enrichment accepts u32-typed and 16-byte binary IP columns
     (src/iptools.rs:444-502 input normalization)."""
     import polars_iptools_spark as ip
 
     df = spark.createDataFrame([("67.43.156.1",)], "ip string")
     via_num = df.select(
-        geoip.asn(ip.to_ipv4("ip"), db_dir=MAXMIND_TEST_DIR).alias("result")
+        geoip.asn(ip.to_ipv4("ip"), db_dir=maxmind_dir).alias("result")
     ).collect()[0].result
     via_bin = df.select(
-        geoip.asn(ip.to_address("ip"), db_dir=MAXMIND_TEST_DIR).alias("result")
+        geoip.asn(ip.to_address("ip"), db_dir=maxmind_dir).alias("result")
     ).collect()[0].result
     assert via_num == "AS35908"
     assert via_bin == "AS35908"

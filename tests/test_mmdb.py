@@ -1,14 +1,24 @@
-"""Unit tests for the pure-Python MMDB decoder against the reference's
-miniature GeoLite2 fixtures (same files the reference pytest uses)."""
+"""Unit tests for the pure-Python MMDB decoder against the golden
+GeoLite2 test databases (``mmdb_synth.write_golden_geolite``, FIXTURES.md
+§5), which are laid out like the reference's test files: 28-bit
+records, IPv4 under ::/96 with ::ffff:0:0/96 aliased to it."""
 
 import ipaddress
 
 import numpy as np
+import pytest
 
 from polars_iptools_spark.sources.mmdb import MMDBFile, load_interval_table
 
-ASN = "/root/reference/tests/maxmind/GeoLite2-ASN.mmdb"
-CITY = "/root/reference/tests/maxmind/GeoLite2-City.mmdb"
+
+@pytest.fixture(scope="module")
+def asn_mmdb(maxmind_dir):
+    return f"{maxmind_dir}/GeoLite2-ASN.mmdb"
+
+
+@pytest.fixture(scope="module")
+def city_mmdb(maxmind_dir):
+    return f"{maxmind_dir}/GeoLite2-City.mmdb"
 
 
 def _key(ip: str) -> np.ndarray:
@@ -17,15 +27,15 @@ def _key(ip: str) -> np.ndarray:
     return np.array([v.to_bytes(16, "big")], dtype="|S16")
 
 
-def test_metadata():
-    f = MMDBFile(ASN)
+def test_metadata(asn_mmdb):
+    f = MMDBFile(asn_mmdb)
     assert f.metadata["database_type"] == "GeoLite2-ASN"
     assert f.record_size in (24, 28, 32)
     assert f.ip_version == 6
 
 
-def test_asn_goldens():
-    t = load_interval_table(ASN)
+def test_asn_goldens(asn_mmdb):
+    t = load_interval_table(asn_mmdb)
     i = t.lookup_indices(_key("67.43.156.1"))[0]
     assert t.records[i] == {"autonomous_system_number": 35908}
     i = t.lookup_indices(_key("240b::beef:0:24"))[0]
@@ -33,8 +43,8 @@ def test_asn_goldens():
     assert t.lookup_indices(_key("192.168.1.1"))[0] == -1
 
 
-def test_city_goldens():
-    t = load_interval_table(CITY)
+def test_city_goldens(city_mmdb):
+    t = load_interval_table(city_mmdb)
     i = t.lookup_indices(_key("202.196.224.99"))[0]
     rec = t.records[i]
     assert rec["country"]["iso_code"] == "PH"
@@ -42,16 +52,16 @@ def test_city_goldens():
     assert rec["postal"]["code"] == "34021"
 
 
-def test_intervals_sorted_disjoint():
-    t = load_interval_table(ASN)
+def test_intervals_sorted_disjoint(asn_mmdb):
+    t = load_interval_table(asn_mmdb)
     los = t.lo.astype(bytes)
     his = t.hi.astype(bytes)
     assert all(los[i] <= his[i] for i in range(len(los)))
     assert all(his[i] < los[i + 1] for i in range(len(los) - 1))
 
 
-def test_vectorized_lookup_matches_scalar():
-    t = load_interval_table(ASN)
+def test_vectorized_lookup_matches_scalar(asn_mmdb):
+    t = load_interval_table(asn_mmdb)
     ips = ["67.43.156.1", "8.8.8.8", "240b::beef:0:24", "1.1.1.1"]
     keys = np.array(
         [_key(i)[0] for i in ips], dtype="|S16"
@@ -60,6 +70,23 @@ def test_vectorized_lookup_matches_scalar():
     for j, ipstr in enumerate(ips):
         assert idx[j] == t.lookup_indices(_key(ipstr))[0]
 
+
+
+@pytest.mark.parametrize("name", ["GeoLite2-ASN.mmdb", "GeoLite2-City.mmdb"])
+def test_golden_files_keep_reference_layout(maxmind_dir, name):
+    """The golden files exercise the decoder paths the reference's test
+    files did: 28-bit records (vectorized walk and per-node DFS agree)
+    and one IPv4 subtree reached from both ::/96 and ::ffff:0:0/96."""
+    f = MMDBFile(f"{maxmind_dir}/{name}")
+    assert f.record_size == 28
+    a = f.enumerate_intervals()
+    b = f._enumerate_intervals_py()
+    assert (a.lo == b.lo).all() and (a.hi == b.hi).all()
+    assert [a.records[i] for i in a.rec_idx] == [b.records[i] for i in b.rec_idx]
+    v4_compat = int(ipaddress.ip_address("67.43.156.1")).to_bytes(16, "big")
+    mapped = a.lookup_indices(_key("67.43.156.1"))[0]
+    compat = a.lookup_indices(np.array([v4_compat], dtype="|S16"))[0]
+    assert mapped >= 0 and mapped == compat
 
 def test_flat_table_split_v4_index():
     """FlatTable splits intervals into a uint32 v4-mapped index and an

@@ -57,7 +57,7 @@ def test_tiling_matches_stdlib_ipaddress(synth_dir):
 
 def test_vectorized_enumeration_matches_py_dfs(synth_dir):
     """The numpy BFS walk and the per-node DFS agree exactly on a
-    >=100k-network rs=32 DB (the reference fixtures cover rs=28)."""
+    >=100k-network rs=32 DB (test_mmdb's golden files cover rs=28)."""
     f = MMDBFile(synth_dir / "GeoLite2-ASN.mmdb")
     a = f.enumerate_intervals()
     b = f._enumerate_intervals_py()
@@ -115,10 +115,9 @@ def test_geoip_full_end_to_end_spark(spark, synth_dir):
 
 
 def test_tree_records_24_bit_branch(tmp_path):
-    """The 24-bit record decode path has no writer/fixture coverage
-    (the reference DBs are rs=28, our writer emits rs=32) — build a
-    2-node rs=24 tree by hand and pin the vectorized decode against
-    the spec layout (left = bytes 0-2 big-endian, right = bytes 3-5).
+    """Pin the vectorized 24-bit record decode against the spec layout
+    (left = bytes 0-2 big-endian, right = bytes 3-5) on a 2-node tree
+    built by hand, independent of the writer's own 24-bit packing.
 
     Tree: root(0): left->node 1, right->data@0; node 1: left->no-data
     (==node_count), right->data@9.  Data section holds two maps.

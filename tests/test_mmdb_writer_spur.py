@@ -18,6 +18,69 @@ def _key(ipstr):
     return np.array([v.to_bytes(16, "big")], dtype="|S16")
 
 
+
+@pytest.mark.parametrize("record_size", [24, 28, 32])
+@pytest.mark.parametrize("ipv4_aliased", [False, True])
+def test_writer_record_sizes_and_ipv4_layouts(tmp_path, record_size, ipv4_aliased):
+    """Every spec record size round-trips through both decoder walks,
+    and the GeoLite2 layout serves IPv4 from ::/96 as well as from
+    ::ffff:0:0/96."""
+    from polars_iptools_spark.sources.mmdb import MMDBFile
+
+    entries = [
+        ("8.8.8.0/24", {"n": 1}),
+        ("10.0.0.0/8", {"n": 2}),
+        ("2606:4700::/32", {"n": 3}),
+    ]
+    p = tmp_path / "t.mmdb"
+    write_mmdb(p, entries, record_size=record_size, ipv4_aliased=ipv4_aliased)
+    f = MMDBFile(p)
+    assert f.record_size == record_size
+    a, b = f.enumerate_intervals(), f._enumerate_intervals_py()
+    assert (a.lo == b.lo).all() and (a.hi == b.hi).all()
+    assert [a.records[i] for i in a.rec_idx] == [b.records[i] for i in b.rec_idx]
+    assert len(a.lo) == (5 if ipv4_aliased else 3)
+    for ipstr, n in [("8.8.8.8", 1), ("10.1.2.3", 2), ("2606:4700::1", 3)]:
+        assert a.records[a.lookup_indices(_key(ipstr))[0]] == {"n": n}
+    assert a.lookup_indices(_key("1.1.1.1"))[0] == -1
+    compat = int(ipaddress.ip_address("8.8.8.8")).to_bytes(16, "big")
+    hit = a.lookup_indices(np.array([compat], dtype="|S16"))[0]
+    assert (hit >= 0) == ipv4_aliased
+
+
+
+def test_writer_28_bit_high_nibbles(tmp_path):
+    """A record value past 2**24 puts bits in the shared middle byte of
+    a 28-bit node; writer and both decoder walks must agree on them."""
+    from polars_iptools_spark.sources.mmdb import MMDBFile
+
+    p = tmp_path / "t28.mmdb"
+    entries = [("8.8.8.0/24", {"pad": b"x" * (1 << 24)}), ("10.0.0.0/8", {"n": 2})]
+    write_mmdb(p, entries, record_size=28)
+    f = MMDBFile(p)
+    assert f._tree_records().max() >= 1 << 24
+    a, b = f.enumerate_intervals(), f._enumerate_intervals_py()
+    assert (a.lo == b.lo).all() and (a.hi == b.hi).all()
+    assert [a.records[i] for i in a.rec_idx] == [b.records[i] for i in b.rec_idx]
+    assert a.records[a.lookup_indices(_key("10.1.2.3"))[0]] == {"n": 2}
+
+def test_writer_rejects_bad_record_size_and_alias_clash(tmp_path):
+    with pytest.raises(ValueError, match="record_size"):
+        write_mmdb(tmp_path / "a.mmdb", [("8.8.8.0/24", {"n": 1})], record_size=30)
+    # the aliased layout owns ::ffff:0:0/96, so an entry there clashes
+    with pytest.raises(ValueError, match="alias"):
+        write_mmdb(
+            tmp_path / "b.mmdb",
+            [("8.8.8.0/24", {"n": 1}), ("::ffff:1.2.3.0/120", {"n": 2})],
+            ipv4_aliased=True,
+        )
+    with pytest.raises(ValueError, match="24-bit"):
+        write_mmdb(
+            tmp_path / "c.mmdb",
+            [("8.8.8.0/24", {"blob": b"x" * (1 << 24)})],
+            record_size=24,
+        )
+
 def test_writer_reader_roundtrip(tmp_path):
     entries = [
         ("8.8.8.0/24", {"name": "google", "num": 15169, "score": 1.5}),

@@ -5,8 +5,6 @@ import warnings
 
 from polars_iptools_spark.namespace import ipcol
 
-from conftest import MAXMIND_TEST_DIR
-
 
 def run(spark, data, expr):
     df = spark.createDataFrame([(x,) for x in data], "ip string")
@@ -61,16 +59,16 @@ def test_deprecated_numeric_to_ipv4_warns_and_works(spark):
     assert got == ["8.8.8.8", "192.168.30.30"]
 
 
-def test_namespace_geoip(spark):
+def test_namespace_geoip(spark, maxmind_dir):
     got = run(
-        spark, ["67.43.156.1"], ipcol("ip").geoip_asn(db_dir=MAXMIND_TEST_DIR)
+        spark, ["67.43.156.1"], ipcol("ip").geoip_asn(db_dir=maxmind_dir)
     )
     assert got == ["AS35908"]
 
 
-def test_env_var_db_resolution(spark, monkeypatch):
+def test_env_var_db_resolution(spark, monkeypatch, maxmind_dir):
     """MAXMIND_MMDB_DIR resolution like src/maxmind.rs:82-106."""
-    monkeypatch.setenv("MAXMIND_MMDB_DIR", MAXMIND_TEST_DIR)
+    monkeypatch.setenv("MAXMIND_MMDB_DIR", maxmind_dir)
     got = run(spark, ["67.43.156.1"], ipcol("ip").geoip_asn(reload_mmdb=True))
     assert got == ["AS35908"]
 

@@ -89,7 +89,7 @@ def test_predicate_pushes_past_native_ip_expression(spark, tmp_path):
     assert "GreaterThan(id,900)" in plan_of(df)
 
 
-def test_geoip_udf_input_is_narrow(spark, tmp_path):
+def test_geoip_udf_input_is_narrow(spark, tmp_path, maxmind_dir):
     """Only the ip column crosses into the Python worker: the scan
     schema under an enrichment projection stays pruned."""
     path = str(tmp_path / "p3.parquet")
@@ -100,7 +100,7 @@ def test_geoip_udf_input_is_narrow(spark, tmp_path):
         F.concat(F.lit("10.0.0."), (F.col("id") % 250).cast("string")).alias("ipc"),
     ).write.parquet(path)
     df = spark.read.parquet(path).select(
-        ip.geoip.asn("ipc", db_dir="/root/reference/tests/maxmind").alias("a")
+        ip.geoip.asn("ipc", db_dir=maxmind_dir).alias("a")
     )
     p = plan_of(df)
     assert "ReadSchema: struct<ipc:string>" in p

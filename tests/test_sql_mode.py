@@ -107,11 +107,11 @@ def test_column_sql_is_plain_text(spark):
     assert isinstance(txt, str) and "RLIKE" in txt.upper()
 
 
-def test_registered_enrichment_parity(spark):
+def test_registered_enrichment_parity(spark, maxmind_dir):
     """geoip via registered pis_* SQL functions equals the Column API
     (reference golden: 67.43.156.1 -> AS35908)."""
     names = ip.register_enrichment_sql_functions(
-        spark, geoip_dir="/root/reference/tests/maxmind"
+        spark, geoip_dir=maxmind_dir
     )
     assert {"pis_geoip_asn", "pis_geoip_full"} <= set(names)
     df = spark.createDataFrame(
@@ -120,8 +120,8 @@ def test_registered_enrichment_parity(spark):
     df.createOrReplaceTempView("sqlmode_geo")
     api = df.select(
         "ip",
-        ip.geoip.asn("ip", db_dir="/root/reference/tests/maxmind").alias("a"),
-        ip.geoip.full("ip", db_dir="/root/reference/tests/maxmind").alias("g"),
+        ip.geoip.asn("ip", db_dir=maxmind_dir).alias("a"),
+        ip.geoip.full("ip", db_dir=maxmind_dir).alias("g"),
     ).collect()
     via_sql = spark.sql(
         "SELECT ip, pis_geoip_asn(ip) AS a, pis_geoip_full(ip) AS g FROM sqlmode_geo"
@@ -153,26 +153,25 @@ def test_rewrite_lambdas_escaped_backslash_literal():
 
 
 def test_enrichment_registration_raises_on_explicit_bad_spur_dir(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, maxmind_dir
 ):
     """ADVICE regression: an explicitly-requested Spur dir that lacks
     spur.mmdb must raise, not silently skip the registration; the
     genuinely-unconfigured case still registers geoip only."""
     from polars_iptools_spark.sql import register_enrichment_sql_functions
 
-    maxmind = "/root/reference/tests/maxmind"
     with pytest.raises(FileNotFoundError):
         register_enrichment_sql_functions(
-            spark, geoip_dir=maxmind, spur_dir=str(tmp_path)
+            spark, geoip_dir=maxmind_dir, spur_dir=str(tmp_path)
         )
     monkeypatch.delenv("SPUR_MMDB_DIR", raising=False)
-    names = register_enrichment_sql_functions(spark, geoip_dir=maxmind)
+    names = register_enrichment_sql_functions(spark, geoip_dir=maxmind_dir)
     assert "pis_geoip_asn" in names and "pis_geoip_full" in names
     assert not any("spur" in n for n in names)
 
 
 def test_enrichment_registration_warns_on_corrupt_default_spur(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, maxmind_dir
 ):
     """Unconfigured-but-corrupt default-dir spur.mmdb: geoip still
     registers, spur is skipped WITH a warning carrying the root cause."""
@@ -187,7 +186,7 @@ def test_enrichment_registration_warns_on_corrupt_default_spur(
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
         names = register_enrichment_sql_functions(
-            spark, geoip_dir="/root/reference/tests/maxmind"
+            spark, geoip_dir=maxmind_dir
         )
     assert "pis_geoip_full" in names and not any("spur" in n for n in names)
     assert any("spur_full registration" in str(x.message) for x in w)

@@ -10,8 +10,6 @@ from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
 from polars_iptools_spark.streaming import enrich as se
 
-from conftest import MAXMIND_TEST_DIR
-
 
 def _pin_batch_order(in_dir):
     """FileStreamSource orders files by modification timestamp; on a
@@ -77,12 +75,12 @@ def test_streaming_extract_and_window(spark, tmp_path):
     assert not any(ip == "10.0.0.1" for (_, ip) in rows)
 
 
-def test_streaming_enrich(spark, tmp_path):
+def test_streaming_enrich(spark, tmp_path, maxmind_dir):
     path = str(tmp_path / "in2")
     _write_input(spark, path)
     stream = spark.readStream.schema(SCHEMA).parquet(path)
     ind = se.extract_indicators_stream(stream, "text", "ts")
-    enriched = se.enrich_stream(ind, "ip", db_dir=MAXMIND_TEST_DIR).select(
+    enriched = se.enrich_stream(ind, "ip", db_dir=maxmind_dir).select(
         "ip", F.col("geo.asnnum").alias("asnnum")
     )
     out = _run(spark, enriched, "enriched_stream")
