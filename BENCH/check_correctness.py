@@ -1,8 +1,11 @@
 """Local stand-in for the driver's correctness gate: run every
 __spark_entry__ query on Spark and its oracle on DuckDB at sf0.01,
-compare row count + order-insensitive values."""
-import sys, math
-sys.path.insert(0, "/root/repo")
+compare row count + order-insensitive values.
+
+Usage: [SPARK_GRAFT_CPUS=4] python BENCH/check_correctness.py [sf_dir] [query ...]
+(local[SPARK_GRAFT_CPUS], default 16)."""
+import os, sys, math
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import __spark_entry__ as E
 from polars_iptools_spark.session import get_spark
@@ -10,7 +13,8 @@ from polars_iptools_spark.session import get_spark
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 only = sys.argv[2:] if len(sys.argv) > 2 else None
 
-spark = get_spark(master="local[16]", shuffle_partitions=16)
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
+spark = get_spark(master=f"local[{CPUS}]", shuffle_partitions=CPUS)
 spark.sparkContext.setLogLevel("ERROR")
 E._ensure_importable(spark)  # executor imports independent of launch cwd
 con = duckdb.connect()

@@ -10,6 +10,7 @@ supersteps staying O(log diameter) and wall staying within a small
 multiple of the uniform-corpus closure stage.
 
 Usage: python BENCH/closure_giant.py [--nodes 9600000] [--giant-frac 0.01]
+       [--cpus N] [--driver-memory 48g] [--out BENCH/closure_giant_result.json]
 """
 
 from __future__ import annotations
@@ -29,6 +30,10 @@ def main() -> None:
     ap.add_argument("--nodes", type=int, default=9_600_000)
     ap.add_argument("--giant-frac", type=float, default=0.01)
     ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ap.add_argument("--driver-memory", default="48g")
+    ap.add_argument(
+        "--out", default=str(Path(__file__).resolve().parent / "closure_giant_result.json")
+    )
     args = ap.parse_args()
 
     import __spark_entry__ as entry
@@ -40,7 +45,7 @@ def main() -> None:
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")
         .config("spark.sql.shuffle.partitions", str(int(args.cpus) * 2))
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", args.driver_memory)
         .appName("closure_giant")
         .getOrCreate()
     )
@@ -105,8 +110,7 @@ def main() -> None:
         "cpus": int(args.cpus),
         "membership_check": "pass",
     }
-    out = Path(__file__).resolve().parent / "closure_giant_result.json"
-    out.write_text(json.dumps(result, indent=2))
+    Path(args.out).write_text(json.dumps(result, indent=2))
     print(json.dumps(result))
     spark.stop()
 

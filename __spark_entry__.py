@@ -32,8 +32,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-MAXMIND_TEST_DIR = "/root/reference/tests/maxmind"
-
 # ---------------------------------------------------------------------------
 # executor import robustness
 # ---------------------------------------------------------------------------
@@ -297,8 +295,19 @@ def _oracle_dir() -> str:
     return str(d)
 
 
+def _geolite_fixture_dir() -> str:
+    """Write the golden GeoLite2-ASN/City test pair (FIXTURES.md §5)
+    into the oracle temp dir once, and return that directory."""
+    from polars_iptools_spark.sources.mmdb_synth import write_golden_geolite
+
+    out = f"{_oracle_dir()}/geolite_golden"
+    if not os.path.exists(f"{out}/GeoLite2-City.mmdb"):
+        write_golden_geolite(out)
+    return out
+
+
 def _dump_geoip_intervals() -> str:
-    """Decode the reference test MMDBs into per-interval parquet tables
+    """Decode the golden GeoLite2 test MMDBs into per-interval parquet tables
     (lo_hex, hi_hex, record fields) so DuckDB can replicate the lookup
     with a plain range join — the oracle re-implements the SEARCH
     independently; record decode is shared (it is the fixture)."""
@@ -311,13 +320,14 @@ def _dump_geoip_intervals() -> str:
     from polars_iptools_spark.sources.mmdb import load_interval_table
 
     out = _oracle_dir()
-    tabs = build_geoip_tables(Path(MAXMIND_TEST_DIR))
+    db_dir = Path(_geolite_fixture_dir())
+    tabs = build_geoip_tables(db_dir)
     files = {"asn": "GeoLite2-ASN.mmdb", "city": "GeoLite2-City.mmdb"}
     for name, tab in tabs.items():
         # intervals come from the RAW decoded table, not FlatTable's
         # split v4/v6 index — the oracle replicates the search from
         # first principles, independent of the engine's layout
-        it = load_interval_table(Path(MAXMIND_TEST_DIR) / files[name])
+        it = load_interval_table(db_dir / files[name])
         # full 32-hex bounds from the byte matrix: |S16 elements drop
         # trailing NULs, and a short hi would sort below its own key
         cols = {
@@ -538,7 +548,7 @@ def _pinned_values_sql(rows: list[tuple], casts: list[tuple[str, str]]) -> str:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: sf0.001 documents -> derive indicator-bearing text ->
     extract public IPs (JVM-side) -> explode -> numeric + validity ->
-    geoip-enrich (reference test MMDBs) -> per-ASN rollup."""
+    geoip-enrich (golden GeoLite2 test MMDBs) -> per-ASN rollup."""
     import polars_iptools_spark as ip
 
     _ensure_importable(spark)
@@ -546,7 +556,7 @@ def entry(spark: SparkSession) -> DataFrame:
     return (
         texts.withColumn("ips", ip.extract_public_ips("itext"))
         .select("doc_id", F.explode("ips").alias("ipaddr"))
-        .withColumn("asn", ip.geoip.asn("ipaddr", db_dir=MAXMIND_TEST_DIR))
+        .withColumn("asn", ip.geoip.asn("ipaddr", db_dir=_geolite_fixture_dir()))
         .withColumn("num", ip.ipv4_to_numeric("ipaddr"))
         .groupBy("asn")
         .agg(
@@ -640,11 +650,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_geoip_asn(spark, sf):
         return _derived_ips(spark, sf).select(
-            "rid", ip.geoip.asn("ip", db_dir=MAXMIND_TEST_DIR).alias("asn")
+            "rid", ip.geoip.asn("ip", db_dir=_geolite_fixture_dir()).alias("asn")
         )
 
     def q_geoip_full(spark, sf):
-        g = ip.geoip.full("ip", db_dir=MAXMIND_TEST_DIR)
+        g = ip.geoip.full("ip", db_dir=_geolite_fixture_dir())
         return _derived_ips(spark, sf).select(
             "rid", *[g[f].alias(f) for f in GEOIP_FIELDS]
         )

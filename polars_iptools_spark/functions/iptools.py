@@ -570,13 +570,20 @@ def _v6_gated(c: Column, flags: tuple, native: Column) -> Column:
     receives NULL instead of the text — Spark still runs the
     ArrowEvalPython node over every row, but masked rows cross as
     nulls, so v6-free batches pay neither serialization nor Python
-    regex.  The gate probes the v6-refanged text so defanged
-    '[:]'/'(:)' markers correctly route to the scanner.
+    regex.  The '[' probe reads the v6-refanged text, so a '[' that
+    only belongs to a '[.]' marker keeps its row native; the ':' probe
+    reads the original text, which has a colon exactly when the
+    refanged text does (every marker that refangs to ':' contains one),
+    so the refang copy appears once in the gate.
+
+    The gate is evaluated once per row, as the UDF's input mask: the
+    UDF returns null only for null input, so a null result means
+    "masked or null" and ``coalesce`` computes ``native`` for exactly
+    those rows (``native`` is null for null text).
     """
-    rt = _refang(c, v6=True)
-    needs_py = rt.contains(":") | rt.contains("[")
+    needs_py = c.contains(":") | _refang(c, v6=True).contains("[")
     udf = _extract_udf_v6(*flags)
-    return F.when(needs_py, udf(F.when(needs_py, c))).otherwise(native)
+    return F.coalesce(udf(F.when(needs_py, c)), native)
 
 
 def extract_ips(

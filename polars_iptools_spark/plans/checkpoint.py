@@ -95,7 +95,9 @@ class StageRunner:
         t0 = time.monotonic()
         df = fn()
         df.write.mode("overwrite").parquet(str(data_path))
-        out = self.spark.read.parquet(str(data_path))
+        # the schema is known: passing it skips the one-task schema
+        # inference job a plain read.parquet launches per commit
+        out = self.spark.read.schema(df.schema).parquet(str(data_path))
         partition_rows, rows, truncated = self._footer_lineage(data_path)
         if rows is None:
             # no readable footers (pyarrow missing / non-local checkpoint

@@ -1,6 +1,7 @@
 """Transitive-closure correctness vs a networkx oracle (SURVEY.md §5),
 on hand-built graphs: chain, star, two components, self-loop,
-duplicate edges, plus a randomized (fixed-seed) graph."""
+duplicate edges, plus randomized (fixed-seed) graphs with long and
+hex-string node ids, with and without checkpointing."""
 
 import networkx as nx
 import pytest
@@ -27,9 +28,9 @@ def oracle(edges):
     return out
 
 
-def spark_cc(spark, edges):
-    df = spark.createDataFrame(edges, "src long, dst long")
-    rows = connected_components(df).collect()
+def spark_cc(spark, edges, schema="src long, dst long", **kwargs):
+    df = spark.createDataFrame(edges, schema)
+    rows = connected_components(df, **kwargs).collect()
     return {r.node: r.component for r in rows}
 
 
@@ -49,9 +50,52 @@ def test_closure_random_graph(spark):
 
 
 @pytest.mark.parametrize("name", list(CASES))
+def test_closure_without_checkpoint_matches_networkx(spark, name):
+    """checkpoint=False keeps every superstep lazy (one growing plan);
+    the assignment must not depend on materialization."""
+    edges = CASES[name]
+    assert spark_cc(spark, edges, checkpoint=False) == oracle(edges)
+
+
+def test_closure_hex_string_ids(spark):
+    """128-bit hex-string node ids (the pipeline's rid form) close like
+    numbers: the component is the minimum id in string order."""
+    import random
+
+    rnd = random.Random(11)
+    ids = [f"{rnd.getrandbits(128):032x}" for _ in range(120)]
+    edges = [(rnd.choice(ids), rnd.choice(ids)) for _ in range(150)]
+    assert spark_cc(spark, edges, "src string, dst string") == oracle(edges)
+
+
+def test_closure_job_count_one_superstep(spark):
+    """Spark jobs for a closure that converges in one superstep, with a
+    self-loop-only node, result collect included.  The previous plan
+    (normalize checkpoint, edge count for peel_after="auto", groupBy +
+    join-back stars, limit-1 self-loop probe) ran 19 jobs on this input
+    at local[4] with 4 shuffle partitions; windowed stars, normalize
+    folded into superstep 0, and the edge and self-loop counts riding
+    on superstep 0's forest check run 12."""
+    sc = spark.sparkContext
+    edges = [(10, 1), (10, 2), (10, 3), (20, 21), (21, 22), (20, 22), (5, 5)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    stats: dict = {}
+    sc.setJobGroup("closure_job_count", "closure job-count guard")
+    try:
+        got = {r.node: r.component for r in connected_components(df, stats=stats).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == oracle(edges)
+    assert stats["supersteps"] == 1, stats
+    jobs = sc.statusTracker().getJobIdsForGroup("closure_job_count")
+    assert len(jobs) < 19, len(jobs)
+
+
+@pytest.mark.parametrize("name", list(CASES))
 def test_closure_peel_from_first_superstep(spark, name):
-    """peel_after=0 forces the settled-star peel branch on every
-    superstep (the hand-built cases converge in 1-2, so the default
+    """peel_after=0 splits settled stars off from superstep 0 on (after
+    superstep 0's forest check, then in the fused peel plan; the
+    hand-built cases converge in 1-2, so the small-input setting
     peel_after=2 never engages it there); results must be identical to
     the oracle, self-loops included."""
     edges = CASES[name]
@@ -80,6 +124,26 @@ def test_closure_peel_equivalence_random(spark):
         for r in connected_components(df, peel_after=None).collect()
     }
     assert peeled == plain == oracle(edges)
+    assert stats["supersteps"] >= 2, stats
+
+
+@pytest.mark.parametrize("threshold, resolved", [(1, 0), (10**9, 2)])
+def test_closure_auto_peel_resolution(spark, monkeypatch, threshold, resolved):
+    """peel_after="auto" resolves from superstep 0's forest-check edge
+    count: at or over the threshold it peels superstep 0's settled
+    stars right after the check and every superstep after; below it,
+    from superstep 2.  Both match the oracle on a multi-superstep
+    graph."""
+    import random
+
+    from polars_iptools_spark.operators import closure
+
+    monkeypatch.setattr(closure, "PEEL_AUTO_THRESHOLD", threshold)
+    rnd = random.Random(7)
+    edges = [(rnd.randrange(400), rnd.randrange(400)) for _ in range(260)]
+    stats: dict = {}
+    assert spark_cc(spark, edges, stats=stats) == oracle(edges)
+    assert stats["peel_after"] == resolved, stats
     assert stats["supersteps"] >= 2, stats
 
 

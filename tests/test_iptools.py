@@ -257,6 +257,37 @@ def test_extract_null_text(spark):
     assert run(spark, [None], "text", ip.extract_private_ips("text")) == [None]
 
 
+def test_extract_v6_gate_mixed_rows(spark):
+    """Nulls, '[:]'/'(:)'-defanged v6 rows (UDF side of the gate) and
+    '[.]'-only v4 rows (native side) in one frame: every row gets its
+    own path's answer, and the gate is computed once, as the UDF's
+    input mask, with the native result only filling the UDF's nulls."""
+    text = [
+        None,
+        "v6 fd00[:][:]5 and 2606(:)(:)1111",
+        "only dots 10[.]0[.]0[.]1 and 8(.)8(.)8(.)8",
+        None,
+        "bracket [fd00::3]:443 and 192[.]168[.]1[.]7",
+        "plain 1.1.1.1 and no defang",
+        "nothing here",
+    ]
+    assert run(spark, text, "text", ip.extract_ips("text", ipv6=True)) == [
+        None,
+        ["fd00::5", "2606::1111"],
+        ["10.0.0.1", "8.8.8.8"],
+        None,
+        ["fd00::3", "192.168.1.7"],
+        ["1.1.1.1"],
+        [],
+    ]
+    assert run(spark, text, "text", ip.extract_private_ips("text", ipv6=True)) == [
+        None, ["fd00::5"], ["10.0.0.1"], None, ["fd00::3", "192.168.1.7"], [], [],
+    ]
+    df = spark.createDataFrame([(t,) for t in text], "text string")
+    plan = df.select(ip.extract_ips("text", ipv6=True))._jdf.queryExecution()
+    assert "coalesce(pythonUDF" in plan.executedPlan().toString()
+
+
 def test_extract_only_public(spark):
     """ref :283-305"""
     text = [

@@ -126,6 +126,17 @@ def test_resume_from_checkpoint(spark, corpus_truth, result):
     assert sorted(first) == sorted(second)
 
 
+def test_fresh_commit_schema_equals_resumed(spark, corpus_truth, result):
+    """A fresh run reads each commit back with the frame's own schema
+    (no inference job); the frame must be typed exactly like the one a
+    resume infers from the parquet files, for all four stages."""
+    corpus, _ = corpus_truth
+    res, ckpt = result
+    resumed = run_pipeline(spark, corpus, ckpt)
+    for key in ("indicators", "blocked", "scored", "clusters"):
+        assert res[key].schema == resumed[key].schema, key
+
+
 def test_partial_resume_recomputes_missing(spark, corpus_truth, tmp_path):
     """Kill-mid-run simulation: commit only the first stages, then a
     fresh run must reuse them and compute the rest."""
