@@ -111,7 +111,7 @@ def main() -> None:
             exp = mmdb_synth.expected_city_record_index(
                 a, args.city_networks, args.city_records
             )
-            got = city.columns["city"][rows[0]]
+            got = city.columns["city"][rows[0]].as_py()
             want = f"City {exp}" if exp is not None else ""
             assert got == want, (a, got, want)
             checked += 1
@@ -125,7 +125,7 @@ def main() -> None:
             exp = mmdb_synth.expected_city_v6_record_index(
                 ai, args.city_networks, args.city_v6_networks, args.city_records
             )
-            got = city.columns["city"][rows[0]]
+            got = city.columns["city"][rows[0]].as_py()
             want = f"City {exp}" if exp is not None else ""
             assert got == want, (hex(ai), got, want)
             checked6 += 1

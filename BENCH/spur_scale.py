@@ -116,8 +116,8 @@ def main() -> None:
             rows = spur_tab.lookup(key, np.array([True]))
             exp = mmdb_synth.expected_city_record_index(a, args.networks, args.records)
             tag, city = want_fields(exp)
-            assert spur_tab.columns["tag"][rows[0]] == tag, (a, exp)
-            assert spur_tab.columns["location_city"][rows[0]] == city, (a, exp)
+            assert spur_tab.columns["tag"][rows[0]].as_py() == tag, (a, exp)
+            assert spur_tab.columns["location_city"][rows[0]].as_py() == city, (a, exp)
             checked += 1
         result["oracle_spot_checks"] = checked
         span = mmdb_synth._V6_BLOCK_SPAN
@@ -130,7 +130,7 @@ def main() -> None:
                 ai, args.networks, args.v6_networks, args.records
             )
             tag, city = want_fields(exp)
-            assert spur_tab.columns["tag"][rows[0]] == tag, (hex(ai), exp)
+            assert spur_tab.columns["tag"][rows[0]].as_py() == tag, (hex(ai), exp)
             checked6 += 1
         result["oracle_spot_checks_v6"] = checked6
         del tables, spur_tab

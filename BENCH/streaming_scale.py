@@ -50,6 +50,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from __spark_entry__ import _geolite_fixture_dir
     from polars_iptools_spark.session import get_spark
     from polars_iptools_spark.streaming import enrich as se
 
@@ -130,9 +131,7 @@ def main() -> None:
         )
 
         # ---- 2. in-stream enrichment (broadcast searchsorted) ------------
-        db_dir = os.environ.get(
-            "MAXMIND_MMDB_DIR", "/root/reference/tests/maxmind"
-        )
+        db_dir = os.environ.get("MAXMIND_MMDB_DIR") or _geolite_fixture_dir()
         enriched = se.enrich_stream(reader, "ip", db_dir=db_dir).select(
             "event_id", "ip", F.col("geo.asnnum").alias("asnnum")
         )

@@ -335,7 +335,7 @@ def _dump_geoip_intervals() -> str:
             for bound in ("lo", "hi")
         }
         for fname, col in tab.columns.items():
-            cols[fname] = [col[i] for i in it.rec_idx]
+            cols[fname] = col.take(it.rec_idx)
         pq.write_table(pa.table(cols), f"{out}/geoip_{name}.parquet")
     return out
 

@@ -65,7 +65,7 @@ DEADLINE = float(os.environ.get("SPARK_GRAFT_BENCH_DEADLINE", "1800"))
 # Bounded by the same per-attempt maxwait, so a persistently degraded
 # host still produces a (calibration-stamped) record.  0 disables.
 CALIB_GATE = float(os.environ.get("SPARK_GRAFT_BENCH_CALIBGATE", "9000"))
-MAXMIND = "/root/reference/tests/maxmind"
+MAXMIND = entrymod._geolite_fixture_dir()
 
 
 def force(df) -> int:

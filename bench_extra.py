@@ -35,7 +35,7 @@ from polars_iptools_spark.sources.corpus import synth_corpus  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
 REPS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
-MAXMIND = "/root/reference/tests/maxmind"
+MAXMIND = entrymod._geolite_fixture_dir()
 PHASE = sys.argv[1] if len(sys.argv) > 1 else "before"
 PLAN_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r07")
 

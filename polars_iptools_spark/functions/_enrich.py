@@ -1,14 +1,15 @@
 """Shared enrichment machinery: driver-side MMDB decode → flattened
-column store → Spark broadcast → vectorized searchsorted lookup UDF.
+Arrow column store → Spark broadcast → vectorized searchsorted lookup
+Arrow UDF.
 
 The reference holds a process-global mmap'd MMDB reader
 (/root/reference/src/maxmind.rs:69, src/spurdb.rs:76) and does one trie
 walk per row.  Here the driver decodes the file once, flattens every
 record into parallel per-field arrays (so executors never touch dicts
 in the hot loop), and broadcasts the whole thing; each Arrow batch then
-does a single vectorized ``np.searchsorted``.  ``reload`` unpersists and
-re-broadcasts — the Spark analog of ``MaxMindDB::reload``
-(/root/reference/src/maxmind.rs:161-168).
+does a single vectorized ``np.searchsorted`` and one ``take`` per
+field.  ``reload`` unpersists and re-broadcasts — the Spark analog of
+``MaxMindDB::reload`` (/root/reference/src/maxmind.rs:161-168).
 """
 
 from __future__ import annotations
@@ -17,7 +18,7 @@ import os
 from pathlib import Path
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from ..sources.mmdb import IntervalTable, load_interval_table
 from . import _ipparse
@@ -46,7 +47,9 @@ class FlatTable:
 
     Row layout: records[0..n) from the MMDB, then one synthetic
     "not found" defaults row at index n, so lookups never branch —
-    index -1 is remapped to the defaults row.
+    index -1 is remapped to the defaults row.  Each field is one typed
+    ``pa.Array`` built on the driver, so a batch gather is one ``take``
+    per field, with a masked index for the rows that come out null.
 
     The interval index is split by the v4-mapped ``::ffff:0:0/96``
     range: intervals intersecting it are stored (clamped into the /96)
@@ -60,8 +63,10 @@ class FlatTable:
     unclamped original in ``lo6`` serves non-v4-mapped keys.
     """
 
-    def __init__(self, table: IntervalTable, fields: list[tuple[str, object, object]]):
-        # fields: (name, extractor(record)->value, default_when_not_found)
+    def __init__(
+        self, table: IntervalTable, fields: list[tuple[str, object, object, pa.DataType]]
+    ):
+        # fields: (name, extractor(record)->value, default_when_not_found, type)
         lo, hi, rec_idx = table.lo, table.hi, table.rec_idx
         m_lo, m_hi = _ipparse.key_matrix(lo), _ipparse.key_matrix(hi)
         v4_lo, v4_hi = _ipparse.V4_MAPPED_LO, _ipparse.V4_MAPPED_HI
@@ -74,25 +79,17 @@ class FlatTable:
         keep6 = ~(_ipparse.is_v4_mapped(m_lo) & _ipparse.is_v4_mapped(m_hi))
         self.lo6, self.hi6 = lo[keep6], hi[keep6]
         self.idx6 = rec_idx[keep6].astype(np.int32)
-        n = len(table.records)
-        self.n_records = n
-        self.columns: dict[str, np.ndarray] = {}
-        for name, extract, default in fields:
-            # pure-int fields store as int64 so batch gathers stay
-            # C-typed (object arrays force a per-row unbox downstream);
-            # floats/strings/lists keep object storage because null-in
-            # rows are later assigned None (float64 would turn them into
-            # NaN, which Arrow serializes differently from null)
-            dtype = (
-                np.int64
-                if isinstance(default, int) and not isinstance(default, bool)
-                else object
-            )
-            col = np.empty(n + 1, dtype=dtype)
-            for i, rec in enumerate(table.records):
-                col[i] = extract(rec)
-            col[n] = default
-            self.columns[name] = col
+        self.n_records = len(table.records)
+        self.columns: dict[str, pa.Array] = {
+            name: pa.array([extract(r) for r in table.records] + [default], type=typ)
+            for name, extract, default, typ in fields
+        }
+
+    def take(self, rows: np.ndarray, null: np.ndarray, names=None) -> list[pa.Array]:
+        """The ``names`` fields (default: all, in order) gathered at
+        ``rows`` (from :meth:`lookup`), null where ``null`` is set."""
+        idx = pa.array(rows, mask=null)
+        return [self.columns[name].take(idx) for name in names or self.columns]
 
     def lookup(self, kb: np.ndarray, valid: np.ndarray) -> np.ndarray:
         """``|S16`` keys + valid mask (from :func:`_ipparse.ip_keys`) ->
@@ -161,19 +158,9 @@ class BroadcastedDB:
         return lambda: tables
 
 
-def struct_batch(data: dict, bad: np.ndarray) -> pd.DataFrame:
-    """Struct-output batch with the null/invalid rows blanked in place:
-    typed columns (``Int64``, ``Float32``) get ``pd.NA``, object columns
-    ``None``.  Every column must be a fresh gather, since it is mutated
-    (a row-wise ``df.loc[bad, :] = None`` walked each column through
-    pandas alignment: ~6-20 ms of a ~110 ms kernel)."""
-    if bad.any():
-        for col in data.values():
-            col[bad] = None if col.dtype == object else pd.NA
-    return pd.DataFrame(data, copy=False)
-
-
 # -- field extractors --------------------------------------------------------
+
+_S, _F = pa.string(), pa.float64()
 
 
 def _names_en(d: dict | None) -> str:
@@ -205,9 +192,9 @@ def build_geoip_tables(db_dir: Path) -> dict[str, FlatTable]:
         return f"AS{num} {org}" if org else f"AS{num}"
 
     asn_fields = [
-        ("asnnum", lambda r: int(r.get("autonomous_system_number", 0)), 0),
-        ("asnorg", lambda r: r.get("autonomous_system_organization", "") or "", ""),
-        ("asn_str", _asn_str, ""),
+        ("asnnum", lambda r: int(r.get("autonomous_system_number", 0)), 0, pa.int64()),
+        ("asnorg", lambda r: r.get("autonomous_system_organization", "") or "", "", _S),
+        ("asn_str", _asn_str, "", _S),
     ]
 
     def _subdiv(r, key):
@@ -218,16 +205,16 @@ def build_geoip_tables(db_dir: Path) -> dict[str, FlatTable]:
         return _names_en(first) if key == "name" else (first.get("iso_code", "") or "")
 
     city_fields = [
-        ("city", lambda r: _names_en(r.get("city")), ""),
-        ("continent", lambda r: _names_en(r.get("continent")), ""),
-        ("country", lambda r: _names_en(r.get("country")), ""),
-        ("country_iso", lambda r: (r.get("country") or {}).get("iso_code", "") or "", ""),
-        ("latitude", lambda r: float((r.get("location") or {}).get("latitude", 0.0)), 0.0),
-        ("longitude", lambda r: float((r.get("location") or {}).get("longitude", 0.0)), 0.0),
-        ("postalcode", lambda r: (r.get("postal") or {}).get("code", "") or "", ""),
-        ("subdivision", lambda r: _subdiv(r, "name"), ""),
-        ("subdivision_iso", lambda r: _subdiv(r, "iso"), ""),
-        ("timezone", lambda r: (r.get("location") or {}).get("time_zone", "") or "", ""),
+        ("city", lambda r: _names_en(r.get("city")), "", _S),
+        ("continent", lambda r: _names_en(r.get("continent")), "", _S),
+        ("country", lambda r: _names_en(r.get("country")), "", _S),
+        ("country_iso", lambda r: (r.get("country") or {}).get("iso_code", "") or "", "", _S),
+        ("latitude", lambda r: float((r.get("location") or {}).get("latitude", 0.0)), 0.0, _F),
+        ("longitude", lambda r: float((r.get("location") or {}).get("longitude", 0.0)), 0.0, _F),
+        ("postalcode", lambda r: (r.get("postal") or {}).get("code", "") or "", "", _S),
+        ("subdivision", lambda r: _subdiv(r, "name"), "", _S),
+        ("subdivision_iso", lambda r: _subdiv(r, "iso"), "", _S),
+        ("timezone", lambda r: (r.get("location") or {}).get("time_zone", "") or "", "", _S),
     ]
     return {
         "asn": FlatTable(load_interval_table(asn_path), asn_fields),
@@ -246,12 +233,12 @@ def build_spur_tables(db_dir: Path) -> dict[str, FlatTable]:
             "SPUR_MMDB_DIR\n"
         )
     fields = [
-        ("client_count", lambda r: float(r.get("clientCount", 0.0) or 0.0), 0.0),
-        ("infrastructure", lambda r: r.get("infrastructure", "") or "", ""),
-        ("location_city", lambda r: r.get("locationCity", "") or "", ""),
-        ("location_country", lambda r: r.get("locationCountry", "") or "", ""),
-        ("location_state", lambda r: r.get("locationState", "") or "", ""),
-        ("services", lambda r: list(r.get("services") or []), []),
-        ("tag", lambda r: r.get("tag", "") or "", ""),
+        ("client_count", lambda r: float(r.get("clientCount", 0.0) or 0.0), 0.0, pa.float32()),
+        ("infrastructure", lambda r: r.get("infrastructure", "") or "", "", _S),
+        ("location_city", lambda r: r.get("locationCity", "") or "", "", _S),
+        ("location_country", lambda r: r.get("locationCountry", "") or "", "", _S),
+        ("location_state", lambda r: r.get("locationState", "") or "", "", _S),
+        ("services", lambda r: list(r.get("services") or []), [], pa.list_(_S)),
+        ("tag", lambda r: r.get("tag", "") or "", "", _S),
     ]
     return {"spur": FlatTable(load_interval_table(spur_path), fields)}

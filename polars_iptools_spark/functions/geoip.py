@@ -11,7 +11,8 @@ Semantics pinned to /root/reference/src/geoip.rs:
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
@@ -29,23 +30,18 @@ def _col(expr):
 
 
 def asn_udf(reload_mmdb: bool = False, db_dir: str | None = None):
-    """The ASN-lookup pandas UDF itself (for ``spark.udf.register`` /
+    """The ASN-lookup Arrow UDF itself (for ``spark.udf.register`` /
     SQL-text use); :func:`asn` is the Column-level sugar over it."""
     get = _DB.getter(SparkSession.getActiveSession(), reload_mmdb, db_dir)
 
-    @F.pandas_udf(StringType())
-    def _asn_udf(s: pd.Series) -> pd.Series:
+    @F.arrow_udf(StringType())
+    def _asn_udf(a: pa.Array) -> pa.Array:
         t = get()["asn"]
-        kb, fam = _ipparse.ip_keys(s)
-        valid = fam != 0
-        # strings pre-formatted once per record at table build; the
-        # batch path is a single vectorized gather
-        out = t.columns["asn_str"][t.lookup(kb, valid)]
-        # invalid (non-null unparseable) -> "" ; null stays null
-        null_in = s.isna().to_numpy()
-        out[~valid & ~null_in] = ""
-        out[null_in] = None
-        return pd.Series(out)
+        kb, fam = _ipparse.ip_keys(a)
+        # strings pre-formatted once per record at table build; invalid
+        # rows hit the "" defaults row, null rows stay null
+        null = pc.is_null(a, nan_is_null=True).to_numpy(zero_copy_only=False)
+        return t.take(t.lookup(kb, fam != 0), null, ["asn_str"])[0]
 
     return _asn_udf
 
@@ -59,26 +55,21 @@ def asn(expr: Column | str, reload_mmdb: bool = False, db_dir: str | None = None
 
 
 def full_udf(reload_mmdb: bool = False, db_dir: str | None = None):
-    """The 12-field geolocation pandas UDF itself (for
+    """The 12-field geolocation Arrow UDF itself (for
     ``spark.udf.register`` / SQL-text use); :func:`full` is the
     Column-level sugar over it."""
     get = _DB.getter(SparkSession.getActiveSession(), reload_mmdb, db_dir)
 
-    @F.pandas_udf(GEOIP_SCHEMA)
-    def _full_udf(s: pd.Series) -> pd.DataFrame:
+    @F.arrow_udf(GEOIP_SCHEMA)
+    def _full_udf(a: pa.Array) -> pa.Array:
         tabs = get()
         ta, tc = tabs["asn"], tabs["city"]
-        kb, fam = _ipparse.ip_keys(s)
+        kb, fam = _ipparse.ip_keys(a)
         valid = fam != 0
-        rows_a, rows_c = ta.lookup(kb, valid), tc.lookup(kb, valid)
-        # asnnum is stored int64 in the flat table — typed gather, no
-        # per-row unboxing
-        data = {
-            "asnnum": pd.array(ta.columns["asnnum"][rows_a], dtype="Int64"),
-            "asnorg": ta.columns["asnorg"][rows_a],
-        }
-        data.update((name, col[rows_c]) for name, col in tc.columns.items())
-        return _enrich.struct_batch(data, ~valid)
+        # null and invalid rows come out with every field null
+        fields = ta.take(ta.lookup(kb, valid), ~valid, ["asnnum", "asnorg"])
+        fields += tc.take(tc.lookup(kb, valid), ~valid)
+        return pa.StructArray.from_arrays(fields, names=GEOIP_SCHEMA.names)
 
     return _full_udf
 

@@ -5,8 +5,8 @@ Design rule: every function that *can* be pure Catalyst expressions is
 ``to_ipv4``, IPv4-only ``extract_ips`` and small-set IPv4 ``is_in`` run
 entirely inside whole-stage codegen — zero Python workers).  Only the
 operations that genuinely need real IP parsing (IPv6 canonicalization,
-16-byte addresses, mixed-family CIDR sets) drop to vectorized
-Arrow/pandas UDFs.
+16-byte addresses, mixed-family CIDR sets) drop to vectorized Arrow
+UDFs that take and return ``pa.Array``.
 
 Semantics contracts are pinned to the reference kernels, cited per
 function (file:line into /root/reference/).
@@ -21,7 +21,8 @@ import warnings
 from collections.abc import Iterable
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BinaryType, BooleanType, LongType, StringType
@@ -183,14 +184,13 @@ def to_ipv4(expr: Column | str) -> Column:
 # ---------------------------------------------------------------------------
 
 
-@F.pandas_udf(BinaryType())
-def _to_address_udf(s: pd.Series) -> pd.Series:
-    keys, fam = _ipparse.ip_keys(s)
-    out = np.full(len(fam), None, dtype=object)
-    idx = np.flatnonzero(fam)
-    # bytes from the key matrix: |S16 element access drops trailing NULs
-    out[idx] = [r.tobytes() for r in _ipparse.key_matrix(keys)[idx]]
-    return pd.Series(out)
+@F.arrow_udf(BinaryType())
+def _to_address_udf(a: pa.Array) -> pa.Array:
+    keys, fam = _ipparse.ip_keys(a)
+    fixed = pa.FixedSizeBinaryArray.from_buffers(
+        pa.binary(16), len(keys), [None, pa.py_buffer(keys)]
+    )
+    return pc.if_else(pa.array(fam != 0), fixed, None).cast(pa.binary())
 
 
 def to_address(expr: Column | str) -> Column:
@@ -203,49 +203,21 @@ def to_address(expr: Column | str) -> Column:
     return _to_address_udf(_col(expr))
 
 
-@F.pandas_udf(StringType())
-def _to_string_udf(s: pd.Series) -> pd.Series:
-    vals = s.to_numpy()
-    n = len(vals)
-    out = np.full(n, None, dtype=object)
-    first = _ipparse.first_value(vals)
-    if isinstance(first, (bytes, bytearray)):
-        # vectorized fast path for the dominant shape: 16-byte v4-mapped
-        # keys render as dotted quads straight from a (k, 16) byte
-        # matrix; only true-IPv6 rows (RFC-5952 compression needed) and
-        # odd lengths fall back to the per-row formatter
-        idx16 = np.flatnonzero(
-            np.fromiter(
-                (v is not None and len(v) == 16 for v in vals),
-                dtype=bool,
-                count=n,
-            )
-        )
-        if len(idx16):
-            M = np.frombuffer(
-                b"".join(bytes(vals[i]) for i in idx16), dtype=np.uint8
-            ).reshape(-1, 16)
-            mapped = _ipparse.is_v4_mapped(M)
-            if mapped.any():
-                out[idx16[mapped]] = _ipparse.quad_strings(M[mapped, 12:16])
-            for i in idx16[~mapped]:
-                out[i] = _ipparse.packed16_to_str(bytes(vals[i]))
-        for i in range(n):
-            v = vals[i]
-            if v is not None and len(v) != 16:
-                out[i] = _ipparse.packed16_to_str(bytes(v))
-        return pd.Series(out)
-    if isinstance(first, str):
+@F.arrow_udf(StringType())
+def _to_string_udf(a: pa.Array) -> pa.Array:
+    if _ipparse.is_text(a.type):
         raise TypeError(
             "to_string expects a typed IP column (u32 numeric or 4/16-byte "
             "binary), got strings; parse them with to_address or to_ipv4"
         )
-    # numeric u32 path — fully vectorized string build
-    nums, ok = _ipparse.u32_values(s)
-    if ok.any():
-        octs = nums[ok].astype(">u4").view(np.uint8).reshape(-1, 4)
-        out[ok] = _ipparse.quad_strings(octs)
-    return pd.Series(out)
+    keys, fam = _ipparse.ip_keys(a)
+    m = _ipparse.key_matrix(keys)
+    out = np.full(len(fam), None, dtype=object)
+    v4 = fam == 4
+    out[v4] = _ipparse.quad_strings(m[v4, 12:16])
+    for i in np.flatnonzero(fam == 6):
+        out[i] = str(ipaddress.IPv6Address(m[i].tobytes()))
+    return pa.array(out, type=pa.string())
 
 
 def to_string(expr: Column | str) -> Column:
@@ -333,21 +305,21 @@ def _broadcast_intervals(tables: tuple) -> object | None:
 
 
 def _is_in_kernel(
-    s: pd.Series,
+    a: pa.Array,
     l4: np.ndarray,
     h4: np.ndarray,
     l6: np.ndarray,
     h6: np.ndarray,
-) -> pd.Series:
+) -> pa.Array:
     """The batch membership kernel behind the is_in UDF — module-level
     so the hypothesis property suite can pin it against stdlib
     ``ipaddress`` without a SparkSession."""
-    keys, fam = _ipparse.ip_keys(s)
     # membership is defined on address text: typed (u32 / binary)
     # batches are null throughout
-    if not isinstance(_ipparse.first_value(s.to_numpy()), (str, type(None))):
-        fam[:] = 0
-    return pd.Series(_ipparse.membership(keys, fam, l4, h4, l6, h6))
+    if not _ipparse.is_text(a.type):
+        return pa.nulls(len(a), pa.bool_())
+    keys, fam = _ipparse.ip_keys(a)
+    return _ipparse.membership(keys, fam, l4, h4, l6, h6)
 
 
 def is_in(
@@ -393,9 +365,9 @@ def is_in(
     # the UDF closure captures the broadcast handle OR the tables, not both
     get = (lambda: bc.value) if bc is not None else (lambda: tables)
 
-    @F.pandas_udf(BooleanType())
-    def _is_in_udf(s: pd.Series) -> pd.Series:
-        return _is_in_kernel(s, *get())
+    @F.arrow_udf(BooleanType())
+    def _is_in_udf(a: pa.Array) -> pa.Array:
+        return _is_in_kernel(a, *get())
 
     return _is_in_udf(_col(expr))
 
@@ -542,8 +514,8 @@ def _extract_udf_v6(
 ):
     flags = (only_public, ignore_private, ignore_loopback, ignore_broadcast, only_private)
 
-    @F.pandas_udf(ArrayType(StringType()))
-    def _udf(s: pd.Series) -> pd.Series:
+    @F.arrow_udf(ArrayType(StringType()))
+    def _udf(a: pa.Array) -> pa.Array:
         run = _extract_row_fn(*flags)
         refang = re.compile(r"\[\.\]|\(\.\)|\[:\]|\(:\)")
 
@@ -552,7 +524,7 @@ def _extract_udf_v6(
                 return None
             return run(refang.sub(lambda m: "." if "." in m.group() else ":", t))
 
-        return s.map(one)
+        return pa.array([one(t) for t in a.to_pylist()], pa.list_(pa.string()))
 
     return _udf
 

@@ -8,8 +8,7 @@ src/spurdb.rs:16-28.  Requires ``spur.mmdb`` under SPUR_MMDB_DIR.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
@@ -22,21 +21,18 @@ _DB = _enrich.BroadcastedDB(_enrich.build_spur_tables, "SPUR_MMDB_DIR")
 
 
 def full_udf(reload_mmdb: bool = False, db_dir: str | None = None):
-    """The Spur-context pandas UDF itself (for ``spark.udf.register`` /
+    """The Spur-context Arrow UDF itself (for ``spark.udf.register`` /
     SQL-text use); :func:`full` is the Column-level sugar over it."""
     get = _DB.getter(SparkSession.getActiveSession(), reload_mmdb, db_dir)
 
-    @F.pandas_udf(SPUR_SCHEMA)
-    def _spur_udf(s: pd.Series) -> pd.DataFrame:
+    @F.arrow_udf(SPUR_SCHEMA)
+    def _spur_udf(a: pa.Array) -> pa.Array:
         t = get()["spur"]
-        kb, fam = _ipparse.ip_keys(s)
+        kb, fam = _ipparse.ip_keys(a)
         valid = fam != 0
-        rows = t.lookup(kb, valid)
-        data = {name: col[rows] for name, col in t.columns.items()}
-        data["client_count"] = pd.array(
-            data["client_count"].astype(np.float32), dtype="Float32"
-        )
-        return _enrich.struct_batch(data, ~valid)
+        # null and invalid rows come out with every field null
+        fields = t.take(t.lookup(kb, valid), ~valid)
+        return pa.StructArray.from_arrays(fields, names=SPUR_SCHEMA.names)
 
     return _spur_udf
 

@@ -25,6 +25,7 @@ import struct
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType
@@ -91,11 +92,10 @@ def attach_synthetic_media(df: DataFrame, id_col: str) -> DataFrame:
     arithmetic on the id so an independent SQL oracle can recompute
     every decoded field."""
 
-    @F.pandas_udf(BinaryType())
-    def _payload(ids: pd.Series) -> pd.Series:
+    @F.arrow_udf(BinaryType())
+    def _payload(ids: pa.Array) -> pa.Array:
         out = []
-        for v in ids:
-            i = int(v)
+        for i in ids.to_pylist():
             m = i % 3
             if m == 0:
                 out.append(build_bmp(16 + (i % 8) * 4, 16 + (i % 6) * 4, fill=i))
@@ -103,7 +103,7 @@ def attach_synthetic_media(df: DataFrame, id_col: str) -> DataFrame:
                 out.append(build_ppm(10 + (i % 40), 10 + (i % 30), fill=i))
             else:
                 out.append(build_wav(100 + (i % 50), fill=i))
-        return pd.Series(out)
+        return pa.array(out, pa.binary())
 
     mime = F.element_at(
         F.array(F.lit("image/bmp"), F.lit("image/x-portable-pixmap"), F.lit("audio/wav")),
@@ -199,7 +199,6 @@ def extract_media_meta(
     id_col: str = "media_id",
     media_col: str = "media",
     decode_mode: str = "fake",
-    batch_rows_hint: int = 1024,
 ) -> DataFrame:
     """mapInPandas feature extraction over binary media columns.
 

@@ -12,7 +12,7 @@ bucket get exact-scored.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -114,12 +114,12 @@ def lsh_buckets_banded(
     planes = _hyperplanes(dim, n_tables * n_planes, seed)  # (T*P, dim)
     weights = (1 << np.arange(n_planes, dtype=np.int64))
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def _buckets_udf(v: pd.Series) -> pd.Series:
-        M = np.array(v.tolist(), dtype=np.float64)  # (n, dim)
+    @F.arrow_udf(ArrayType(LongType()))
+    def _buckets_udf(v: pa.Array) -> pa.Array:
+        M = _matrix(v)  # (n, dim)
         bits = (M @ planes.T) >= 0  # (n, T*P)
         packed = bits.reshape(len(M), n_tables, n_planes) @ weights  # (n, T)
-        return pd.Series(packed.astype(np.int64).tolist())
+        return _lists(packed.astype(np.int64))
 
     return _buckets_udf(vec)
 
@@ -159,13 +159,24 @@ def ivf_assign(
                 cents[c] = members.mean(axis=0)
     cents_n = _normalize(cents)
 
-    @F.pandas_udf(IntegerType())
-    def _assign_udf(v: pd.Series) -> pd.Series:
-        M = np.array(v.tolist(), dtype=np.float64)
-        sims = _normalize(M) @ cents_n.T
-        return pd.Series(sims.argmax(axis=1).astype(np.int32))
+    @F.arrow_udf(IntegerType())
+    def _assign_udf(v: pa.Array) -> pa.Array:
+        sims = _normalize(_matrix(v)) @ cents_n.T
+        return pa.array(sims.argmax(axis=1).astype(np.int32))
 
     return embeddings.withColumn("centroid", _assign_udf(F.col(vec_col))), cents
+
+
+def _matrix(v: pa.Array) -> np.ndarray:
+    """Batch of equal-length vectors -> (n, dim) float64 matrix."""
+    flat = v.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+    return flat.reshape(len(v), -1)
+
+
+def _lists(M: np.ndarray) -> pa.Array:
+    """(n, k) matrix -> list array of its rows."""
+    offsets = np.arange(0, M.size + 1, M.shape[1], dtype=np.int32)
+    return pa.ListArray.from_arrays(offsets, M.ravel())
 
 
 def _normalize(M: np.ndarray) -> np.ndarray:
@@ -184,31 +195,24 @@ def ivf_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     seed: int = 13,
-    broadcast_probes: bool = True,
 ) -> DataFrame:
     """Approximate top-k: probe only the ``n_probe`` centroids nearest
     each query — the IVF scale path (scan cost drops to
     n_probe/n_centroids of brute force; recall governed by n_probe).
 
     Probe assignment is computed DISTRIBUTED (the same numpy-matmul
-    pandas UDF as :func:`ivf_assign`, top-``n_probe`` per query via
+    Arrow UDF as :func:`ivf_assign`, top-``n_probe`` per query via
     explode) — the query table is never collected to the driver.  The
-    probe->centroid join broadcasts the probe side by default, which
-    duplicates each query vector ``n_probe`` times: fine for the usual
-    query-batch sizes, but a probe table larger than the broadcast
-    limit must set ``broadcast_probes=False`` to get a shuffle join
-    (centroid is a fine-grained join key, so the shuffle is balanced)."""
+    probe->centroid join broadcasts the probe side."""
     from pyspark.sql.types import ArrayType, IntegerType
 
     assigned, cents = ivf_assign(embeddings, n_centroids, id_col, vec_col, seed)
     cents_n = _normalize(cents)
 
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def _probes_udf(v: pd.Series) -> pd.Series:
-        M = np.array(v.tolist(), dtype=np.float64)
-        sims = _normalize(M) @ cents_n.T
-        top = np.argsort(-sims, axis=1)[:, :n_probe]
-        return pd.Series([row.tolist() for row in top.astype(np.int32)])
+    @F.arrow_udf(ArrayType(IntegerType()))
+    def _probes_udf(v: pa.Array) -> pa.Array:
+        sims = _normalize(_matrix(v)) @ cents_n.T
+        return _lists(np.argsort(-sims, axis=1)[:, :n_probe].astype(np.int32))
 
     # same norm hoist as brute_force_topk (r07): dot/(na*nb) over
     # per-row materialized norms is bit-identical to cosine() while
@@ -219,8 +223,7 @@ def ivf_topk(
         norm(F.transform(F.col(vec_col), lambda x: x.cast("double"))).alias("_qn"),
         F.explode(_probes_udf(F.col(vec_col))).alias("centroid"),
     )
-    if broadcast_probes:
-        probes = F.broadcast(probes)
+    probes = F.broadcast(probes)
     dvec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     scored = assigned.withColumn("_n", norm(dvec)).join(probes, "centroid").select(
         F.col(query_id_col),

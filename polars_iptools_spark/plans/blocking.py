@@ -198,9 +198,7 @@ def refine_oversized_blocks(
     )
 
 
-def candidate_pairs(
-    blocked: DataFrame, max_pairs_per_record: int | None = None
-) -> DataFrame:
+def candidate_pairs(blocked: DataFrame) -> DataFrame:
     """Self-join on the (refined) blocking key, rid_a < rid_b.
 
     Both sides are explicitly hash-repartitioned on the key with a
@@ -220,12 +218,4 @@ def candidate_pairs(
     b = narrowed.select(
         [F.col(c).alias(f"{c}_b" if c != "block_key" else c) for c in cols]
     )
-    pairs = a.join(b, "block_key").where(F.col("rid_a") < F.col("rid_b"))
-    if max_pairs_per_record:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("rid_a").orderBy("rid_b")
-        pairs = pairs.withColumn("_rn", F.row_number().over(w)).where(
-            F.col("_rn") <= max_pairs_per_record
-        ).drop("_rn")
-    return pairs
+    return a.join(b, "block_key").where(F.col("rid_a") < F.col("rid_b"))

@@ -1,17 +1,19 @@
 """Candidate-pair similarity scoring.
 
 Levenshtein is Spark-native (JVM, codegen).  Jaro-Winkler has no Spark
-built-in, so it's computed in a single Arrow-batched pandas UDF over
-all feature pairs at once — one JVM↔Python crossing per batch, per the
-north_star ("batched Jaro-Winkler/Levenshtein ... in a single Arrow
-UDF").  The JW implementation is written from scratch (textbook
-definition), no external string library (none available in-sandbox).
+built-in, so it's computed in a single Arrow UDF (``pa.Array`` in and
+out) over all feature pairs at once — one JVM↔Python crossing per
+batch, per the north_star ("batched Jaro-Winkler/Levenshtein ... in a
+single Arrow UDF").  The JW implementation is written from scratch
+(textbook definition), no external string library (none available
+in-sandbox).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
@@ -238,10 +240,12 @@ def jaro_winkler_batch(
     return out
 
 
-@F.pandas_udf(DoubleType())
-def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(
-        jaro_winkler_batch(a.to_numpy(dtype=object), b.to_numpy(dtype=object))
+@F.arrow_udf(DoubleType())
+def jaro_winkler_udf(a: pa.Array, b: pa.Array) -> pa.Array:
+    return pa.array(
+        jaro_winkler_batch(
+            a.to_numpy(zero_copy_only=False), b.to_numpy(zero_copy_only=False)
+        )
     )
 
 

@@ -1,9 +1,10 @@
 """SparkSession factory tuned for this engine.
 
-Arrow is always on (every Python-side kernel in this package is a
-vectorized pandas/Arrow UDF — there are no row-at-a-time Python UDFs
-anywhere), batch size is raised for the small-row workloads typical of
-IP columns, and AQE is enabled so skewed shuffles re-plan at runtime.
+Arrow is always on (every scalar Python-side kernel in this package is
+a vectorized Arrow UDF that takes and returns ``pa.Array`` — there are
+no row-at-a-time Python UDFs anywhere), batch size is raised for the
+small-row workloads typical of IP columns, and AQE is enabled so skewed
+shuffles re-plan at runtime.
 
 At 100 TB these settings are inherited by ``spark-submit --conf``; the
 factory only fills in defaults that are safe at any scale.

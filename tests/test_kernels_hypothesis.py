@@ -5,7 +5,8 @@ independently of the JVM.
 Contracts:
 1. ``_ipparse.ip_keys`` (the one batch -> 16-byte key kernel behind
    every address UDF) agrees with stdlib ``ipaddress`` and
-   ``V4_FULLMATCH`` on text, binary and u32 batches.
+   ``V4_FULLMATCH`` on Arrow text, binary and u32 batches (string and
+   large_string, binary and large_binary, int64 and float64).
 2. ``_ipparse.find_interval`` (the one interval probe) agrees with a
    brute-force scan, on ``|S16`` keys ending in NUL bytes and on
    uint32 keys.
@@ -17,7 +18,7 @@ Contracts:
 import ipaddress
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -44,14 +45,14 @@ def _stdlib_key(addr) -> tuple[int, bytes]:
     return (4 if addr.packed[:12] == _MAPPED else 6), addr.packed
 
 
-def _check_keys(s, expect):
-    keys, fam = _ipparse.ip_keys(s)
+def _check_keys(a, expect):
+    keys, fam = _ipparse.ip_keys(a)
     m = _ipparse.key_matrix(keys)
     assert keys.dtype == np.dtype("|S16") and fam.dtype == np.int8
     assert len(keys) == len(fam) == len(expect)
     for i, (f, k) in enumerate(expect):
-        assert fam[i] == f, (i, s[i], fam[i], f)
-        assert m[i].tobytes() == (k if f else bytes(16)), (i, s[i])
+        assert fam[i] == f, (i, a[i], fam[i], f)
+        assert m[i].tobytes() == (k if f else bytes(16)), (i, a[i])
 
 
 _ip_text = st.one_of(
@@ -86,7 +87,8 @@ def test_ip_keys_text_matches_stdlib(vals):
             expect.append(_stdlib_key(addr))
         else:
             expect.append((6, addr.packed))
-    _check_keys(pd.Series(vals, dtype=object), expect)
+    for typ in (pa.string(), pa.large_string()):
+        _check_keys(pa.array(vals, typ), expect)
 
 
 _addr_bytes = st.one_of(
@@ -110,7 +112,10 @@ def test_ip_keys_binary_matches_stdlib(vals):
         else (0, b"")
         for v in vals
     ]
-    _check_keys(pd.Series(vals, dtype=object), expect)
+    for typ in (pa.binary(), pa.large_binary()):
+        _check_keys(pa.array(vals, typ), expect)
+        # a sliced array (non-zero offset) reads the same rows
+        _check_keys(pa.array([bytes(16)] + vals, typ).slice(1), expect)
 
 
 @settings(max_examples=200, deadline=None)
@@ -122,8 +127,9 @@ def test_ip_keys_binary_matches_stdlib(vals):
     st.lists(st.booleans(), max_size=40),
 )
 def test_ip_keys_u32_matches_stdlib(nums, nulls):
-    """u32: values in [0, 2**32) are IPv4; out-of-range values and NaN
-    (how a long column with nulls arrives) are family 0."""
+    """u32: values in [0, 2**32) are IPv4; null and out-of-range values
+    are family 0.  A long column arrives as int64 with nulls; a double
+    column as float64, where NaN and fractions are family 0 too."""
     vals = [None if i < len(nulls) and nulls[i] else v for i, v in enumerate(nums)]
     expect = [
         _stdlib_key(ipaddress.IPv4Address(v))
@@ -131,11 +137,11 @@ def test_ip_keys_u32_matches_stdlib(nums, nulls):
         else (0, b"")
         for v in vals
     ]
-    if any(v is None for v in vals):
-        s = pd.Series([np.nan if v is None else float(v) for v in vals], dtype=np.float64)
-    else:
-        s = pd.Series(vals, dtype=np.int64)
-    _check_keys(s, expect)
+    _check_keys(pa.array(vals, pa.int64()), expect)
+    _check_keys(pa.array(vals, pa.float64()), expect)
+    # fractions and NaN are not u32 values
+    frac = [None if v is None else v + 0.5 for v in vals] + [float("nan")]
+    _check_keys(pa.array(frac, pa.float64()), [(0, b"")] * len(frac))
 
 
 # interval bounds biased to values with trailing zero bytes
@@ -223,31 +229,15 @@ _v4ish = st.one_of(
 
 
 @settings(max_examples=300, deadline=None)
-@given(st.lists(_v4ish, max_size=30))
+@given(st.lists(st.one_of(_v4ish, st.none()), max_size=30))
 def test_parse_v4_strict_equals_regex(vals):
-    """The inet_aton + canonical-roundtrip parser accepts EXACTLY the
-    strict dotted-quad language of V4_FULLMATCH, with equal values;
-    bytes-like rows are invalid whatever their content (non-str ->
-    invalid), alone or mixed with str rows."""
-    for batch in (
-        vals,
-        [v.encode() for v in vals],
-        [bytearray(v.encode()) for v in vals],
-        [v.encode() if i % 2 else v for i, v in enumerate(vals)],
-    ):
-        arr = np.empty(len(batch), dtype=object)
-        arr[:] = batch
-        nums, mask = _ipparse.parse_v4_strict(arr)
-        # the r07 Arrow-compute fast path and the per-row fallback must
-        # agree with each other AND with the regex
-        nums_f, mask_f = _ipparse._parse_v4_strict_obj(arr)
-        assert (mask == mask_f).all()
-        assert (nums[mask] == nums_f[mask]).all()
-        for i, v in enumerate(batch):
-            if not isinstance(v, str):
-                assert not mask[i], f"{v!r}: non-str row parsed as valid"
-                continue
-            m = _ipparse.V4_FULLMATCH.match(v)
+    """The Arrow-compute strict parser accepts EXACTLY the strict
+    dotted-quad language of V4_FULLMATCH, with equal values; null is
+    invalid."""
+    for typ in (pa.string(), pa.large_string()):
+        nums, mask = _ipparse.parse_v4_strict(pa.array(vals, typ))
+        for i, v in enumerate(vals):
+            m = v is not None and _ipparse.V4_FULLMATCH.match(v)
             assert bool(mask[i]) == bool(m), f"{v!r}: strict={mask[i]} regex={bool(m)}"
             if m:
                 expect = sum(int(g) << k for g, k in zip(m.groups(), (24, 16, 8, 0)))
@@ -295,13 +285,14 @@ def test_is_in_kernel_matches_stdlib(cidrs, probes):
     v4_iv, v6_iv = iptools._compile_networks(cidrs)
     l4, h4 = _ipparse.sort_intervals(v4_iv)
     l6, h6 = _ipparse.sort_intervals(v6_iv)
-    got = iptools._is_in_kernel(pd.Series(probes, dtype=object), l4, h4, l6, h6)
     nets = [ipaddress.ip_network(c, strict=False) for c in cidrs]
     v4_nets = [n for n in nets if n.version == 4]
     v6_nets = [n for n in nets if n.version == 6]
-    for i, s in enumerate(probes):
-        exp = _expected_member(s, v4_nets, v6_nets)
-        assert got[i] == exp, (s, cidrs, got[i], exp)
+    for typ in (pa.string(), pa.large_string()):
+        got = iptools._is_in_kernel(pa.array(probes, typ), l4, h4, l6, h6).to_pylist()
+        for i, s in enumerate(probes):
+            exp = _expected_member(s, v4_nets, v6_nets)
+            assert got[i] == exp, (s, cidrs, got[i], exp)
 
 
 _word = st.text(

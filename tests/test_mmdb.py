@@ -95,7 +95,7 @@ def test_flat_table_split_v4_index():
     ::ffff:0:0/96 (served clamped to v4 keys, unclamped to v6 keys)."""
     import ipaddress
 
-    import pandas as pd
+    import pyarrow as pa
 
     from polars_iptools_spark.functions._enrich import FlatTable
     from polars_iptools_spark.functions._ipparse import ip_keys
@@ -126,13 +126,13 @@ def test_flat_table_split_v4_index():
         rec_idx=np.array([0, 1, 2], dtype=np.int64)[order],
         records=[{"v": "six"}, {"v": "wide"}, {"v": "high"}],
     )
-    ft = FlatTable(tab, [("v", lambda r: r["v"], "miss")])
+    ft = FlatTable(tab, [("v", lambda r: r["v"], "miss", pa.string())])
     # the wide interval is not fully inside the /96 -> remainder keeps
     # it; its clamped uint32 image serves the v4 side
     assert len(ft.lo4) == 1 and ft.lo4[0] == 0 and ft.hi4[0] == 0xFFFFFFFF
     assert len(ft.lo6) == 3
 
-    ips = pd.Series(
+    ips = pa.array(
         [
             "10.1.2.3",          # v4 -> wide (clamped)
             "0.0.0.0",           # v4 lower edge
@@ -145,7 +145,7 @@ def test_flat_table_split_v4_index():
     )
     kb, fam = ip_keys(ips)
     rows = ft.lookup(kb, fam != 0)
-    got = [ft.columns["v"][r] for r in rows]
+    got = [ft.columns["v"][r].as_py() for r in rows]
     assert got == ["wide", "wide", "wide", "six", "miss", "high", "wide"]
 
 
@@ -155,6 +155,8 @@ def test_flat_table_interior_nul_keys_regression():
     interior NULs — the split predicate must use array-vs-array
     comparison.  Interval here is ::ffff:0.0.128.0/115-shaped: its hi
     has interior NULs after the ffff marker."""
+    import pyarrow as pa
+
     from polars_iptools_spark.functions._enrich import FlatTable
     from polars_iptools_spark.sources.mmdb import IntervalTable
 
@@ -163,9 +165,9 @@ def test_flat_table_interior_nul_keys_regression():
     tab = IntervalTable(
         lo=lo, hi=hi, rec_idx=np.array([0], dtype=np.int64), records=[{"v": "x"}]
     )
-    ft = FlatTable(tab, [("v", lambda r: r["v"], "miss")])
+    ft = FlatTable(tab, [("v", lambda r: r["v"], "miss", pa.string())])
     assert len(ft.lo4) == 1          # the regression dropped it
     assert len(ft.lo6) == 0          # fully inside the /96
     key = np.array([b"\x00" * 10 + b"\xff\xff\x00\x00\x90\x01"], dtype="|S16")
     rows = ft.lookup(key, np.array([True]))
-    assert ft.columns["v"][rows[0]] == "x"
+    assert ft.columns["v"][rows[0]].as_py() == "x"

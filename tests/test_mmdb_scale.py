@@ -198,7 +198,7 @@ def test_v6_tiling_end_to_end(tmp_path):
     FlatTable split index: v4 keys hit the uint32 side, v6 keys the
     |S16 remainder, both matching the arithmetic oracle; outside-range
     v4 and v6 addresses miss."""
-    import pandas as pd
+    import pyarrow as pa
 
     from polars_iptools_spark.functions._enrich import build_geoip_tables
     from polars_iptools_spark.functions._ipparse import ip_keys
@@ -233,11 +233,11 @@ def test_v6_tiling_end_to_end(tmp_path):
     tests.append(("2800::1", None))       # past the v6 tiling
     assert any(e is not None for _, e in tests[-20:-2])  # v6 hits sampled
 
-    kb, fam = ip_keys(pd.Series([t[0] for t in tests]))
+    kb, fam = ip_keys(pa.array([t[0] for t in tests]))
     rows = city.lookup(kb, fam != 0)
     for (ip_s, exp), r in zip(tests, rows):
         want = f"City {exp}" if exp is not None else ""
-        assert city.columns["city"][r] == want, ip_s
+        assert city.columns["city"][r].as_py() == want, ip_s
 
     # stdlib containment agreement on sampled v6 networks
     sampled = [(i, c) for i, c in mmdb_synth._iter_v6_networks(NV6) if i % 997 == 0]

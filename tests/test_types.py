@@ -4,7 +4,7 @@ identities, null/invalid handling, metadata tagging, parquet IO."""
 
 import math
 
-import pandas as pd
+import pyarrow as pa
 import pytest
 
 import polars_iptools_spark as ip
@@ -100,7 +100,7 @@ def test_to_string_rejects_string_column(spark):
     rejects any other dtype, src/iptools.rs:323)."""
     msg = r"to_string expects a typed IP column \(u32 numeric or 4/16-byte binary\)"
     with pytest.raises(TypeError, match=msg):
-        _to_string_udf.func(pd.Series(["1234", "1.2.3.4", "::1"]))
+        _to_string_udf.func(pa.array(["1234", "1.2.3.4", "::1"]))
     df = spark.createDataFrame([("1234",), ("1.2.3.4",), ("::1",)], "ip string")
     with pytest.raises(Exception, match=msg):
         df.select(ip.to_string("ip")).collect()
