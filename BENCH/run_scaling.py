@@ -30,12 +30,6 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument("--threshold", type=float, default=0.72)
     ap.add_argument("--truth", default=None, help="truth parquet (commit, entity) to also report pairwise F1")
-    ap.add_argument(
-        "--no-persist-blocked",
-        action="store_true",
-        help="stage 02 A/B: recompute block keys from the committed "
-        "stage-01 parquet instead of persisting the blocked frame",
-    )
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -78,13 +72,7 @@ def main() -> None:
     load_start = _load()
     t0 = time.monotonic()
     with ExternalCpuMeter() as meter:
-        res = run_pipeline(
-            spark,
-            corpus,
-            args.ckpt,
-            threshold=args.threshold,
-            persist_blocked=not args.no_persist_blocked,
-        )
+        res = run_pipeline(spark, corpus, args.ckpt, threshold=args.threshold)
         n_clusters = res["clusters"].agg(F.countDistinct("cluster_id")).collect()[0][0]
     wall = time.monotonic() - t0
     calib_end = cpu_calibration()

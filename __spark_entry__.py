@@ -315,27 +315,26 @@ def _dump_geoip_intervals() -> str:
     import pyarrow.parquet as pq
     from pathlib import Path
 
-    from polars_iptools_spark.functions._enrich import build_geoip_tables
+    from polars_iptools_spark.functions._enrich import GEOIP_TABLES, FlatTable
     from polars_iptools_spark.functions._ipparse import key_matrix
     from polars_iptools_spark.sources.mmdb import load_interval_table
 
     out = _oracle_dir()
     db_dir = Path(_geolite_fixture_dir())
-    tabs = build_geoip_tables(db_dir)
-    files = {"asn": "GeoLite2-ASN.mmdb", "city": "GeoLite2-City.mmdb"}
-    for name, tab in tabs.items():
+    for name, (fname, fields) in GEOIP_TABLES.items():
         # intervals come from the RAW decoded table, not FlatTable's
         # split v4/v6 index — the oracle replicates the search from
-        # first principles, independent of the engine's layout
-        it = load_interval_table(db_dir / files[name])
+        # first principles, independent of the engine's layout; the
+        # record columns come from the same decode
+        it = load_interval_table(db_dir / fname)
         # full 32-hex bounds from the byte matrix: |S16 elements drop
         # trailing NULs, and a short hi would sort below its own key
         cols = {
             bound: [r.tobytes().hex() for r in key_matrix(getattr(it, bound))]
             for bound in ("lo", "hi")
         }
-        for fname, col in tab.columns.items():
-            cols[fname] = col.take(it.rec_idx)
+        for field, col in FlatTable(it, fields).columns.items():
+            cols[field] = col.take(it.rec_idx)
         pq.write_table(pa.table(cols), f"{out}/geoip_{name}.parquet")
     return out
 

@@ -169,56 +169,66 @@ def _names_en(d: dict | None) -> str:
     return (d.get("names") or {}).get("en", "") or ""
 
 
+def _asn_str(r) -> str:
+    # "AS{num} {org}", no trailing space when org absent
+    # (reference src/geoip.rs:85-91); not-found -> ""
+    num = int(r.get("autonomous_system_number", 0))
+    if num == 0:
+        return ""
+    org = r.get("autonomous_system_organization", "") or ""
+    return f"AS{num} {org}" if org else f"AS{num}"
+
+
+def _subdiv(r, key):
+    subs = r.get("subdivisions") or []
+    if not subs:
+        return ""
+    first = subs[0]
+    return _names_en(first) if key == "name" else (first.get("iso_code", "") or "")
+
+
+# table name -> (MMDB file, FlatTable fields); field set per the
+# reference's src/maxmind.rs:10-28 (English names, first
+# subdivision only per :224-236)
+GEOIP_TABLES = {
+    "asn": (
+        "GeoLite2-ASN.mmdb",
+        [
+            ("asnnum", lambda r: int(r.get("autonomous_system_number", 0)), 0, pa.int64()),
+            ("asnorg", lambda r: r.get("autonomous_system_organization", "") or "", "", _S),
+            ("asn_str", _asn_str, "", _S),
+        ],
+    ),
+    "city": (
+        "GeoLite2-City.mmdb",
+        [
+            ("city", lambda r: _names_en(r.get("city")), "", _S),
+            ("continent", lambda r: _names_en(r.get("continent")), "", _S),
+            ("country", lambda r: _names_en(r.get("country")), "", _S),
+            ("country_iso", lambda r: (r.get("country") or {}).get("iso_code", "") or "", "", _S),
+            ("latitude", lambda r: float((r.get("location") or {}).get("latitude", 0.0)), 0.0, _F),
+            ("longitude", lambda r: float((r.get("location") or {}).get("longitude", 0.0)), 0.0, _F),
+            ("postalcode", lambda r: (r.get("postal") or {}).get("code", "") or "", "", _S),
+            ("subdivision", lambda r: _subdiv(r, "name"), "", _S),
+            ("subdivision_iso", lambda r: _subdiv(r, "iso"), "", _S),
+            ("timezone", lambda r: (r.get("location") or {}).get("time_zone", "") or "", "", _S),
+        ],
+    ),
+}
+
+
 def build_geoip_tables(db_dir: Path) -> dict[str, FlatTable]:
-    """ASN + City flat tables; field set per
-    /root/reference/src/maxmind.rs:10-28 (English names, first
-    subdivision only per :224-236)."""
-    asn_path = db_dir / "GeoLite2-ASN.mmdb"
-    city_path = db_dir / "GeoLite2-City.mmdb"
-    for p in (asn_path, city_path):
-        if not p.exists():
+    """ASN + City flat tables (:data:`GEOIP_TABLES`)."""
+    for fname, _ in GEOIP_TABLES.values():
+        if not (db_dir / fname).exists():
             raise FileNotFoundError(
-                f"Could not open MMDB file from {p}\n"
+                f"Could not open MMDB file from {db_dir / fname}\n"
                 "Hint: specify a directory with the environment variable "
                 "MAXMIND_MMDB_DIR\n"
             )
-    def _asn_str(r) -> str:
-        # "AS{num} {org}", no trailing space when org absent
-        # (/root/reference/src/geoip.rs:85-91); not-found -> ""
-        num = int(r.get("autonomous_system_number", 0))
-        if num == 0:
-            return ""
-        org = r.get("autonomous_system_organization", "") or ""
-        return f"AS{num} {org}" if org else f"AS{num}"
-
-    asn_fields = [
-        ("asnnum", lambda r: int(r.get("autonomous_system_number", 0)), 0, pa.int64()),
-        ("asnorg", lambda r: r.get("autonomous_system_organization", "") or "", "", _S),
-        ("asn_str", _asn_str, "", _S),
-    ]
-
-    def _subdiv(r, key):
-        subs = r.get("subdivisions") or []
-        if not subs:
-            return ""
-        first = subs[0]
-        return _names_en(first) if key == "name" else (first.get("iso_code", "") or "")
-
-    city_fields = [
-        ("city", lambda r: _names_en(r.get("city")), "", _S),
-        ("continent", lambda r: _names_en(r.get("continent")), "", _S),
-        ("country", lambda r: _names_en(r.get("country")), "", _S),
-        ("country_iso", lambda r: (r.get("country") or {}).get("iso_code", "") or "", "", _S),
-        ("latitude", lambda r: float((r.get("location") or {}).get("latitude", 0.0)), 0.0, _F),
-        ("longitude", lambda r: float((r.get("location") or {}).get("longitude", 0.0)), 0.0, _F),
-        ("postalcode", lambda r: (r.get("postal") or {}).get("code", "") or "", "", _S),
-        ("subdivision", lambda r: _subdiv(r, "name"), "", _S),
-        ("subdivision_iso", lambda r: _subdiv(r, "iso"), "", _S),
-        ("timezone", lambda r: (r.get("location") or {}).get("time_zone", "") or "", "", _S),
-    ]
     return {
-        "asn": FlatTable(load_interval_table(asn_path), asn_fields),
-        "city": FlatTable(load_interval_table(city_path), city_fields),
+        name: FlatTable(load_interval_table(db_dir / fname), fields)
+        for name, (fname, fields) in GEOIP_TABLES.items()
     }
 
 

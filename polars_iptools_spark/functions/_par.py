@@ -13,9 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def ensure_parallelism(df: DataFrame, min_ratio: float = 0.5) -> DataFrame:
-    """Repartition only if the frame has materially fewer partitions
-    than the cluster has cores."""
+def ensure_parallelism(df: DataFrame) -> DataFrame:
+    """Repartition only if the frame has fewer than half as many
+    partitions as the cluster has cores."""
     try:
         target = df.sparkSession.sparkContext.defaultParallelism
         cur = df.rdd.getNumPartitions()
@@ -24,7 +24,7 @@ def ensure_parallelism(df: DataFrame, min_ratio: float = 0.5) -> DataFrame:
         # explicit repartitions at the exploding operators still pin
         # their own fan-out, so passing through is safe
         return df
-    if cur < target * min_ratio:
+    if 2 * cur < target:
         return df.repartition(target)
     return df
 

@@ -23,7 +23,7 @@ from collections.abc import Iterable
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BinaryType, BooleanType, LongType, StringType
 
@@ -235,10 +235,6 @@ def to_string(expr: Column | str) -> Column:
 # is_in — CIDR-set membership
 # ---------------------------------------------------------------------------
 
-# closures above this many bytes ship as a real Spark broadcast variable
-_BROADCAST_THRESHOLD = 1 << 20
-
-
 def _compile_networks(
     networks: Iterable[str],
 ) -> tuple[list[tuple[int, int]], list[tuple[int, int]]]:
@@ -268,40 +264,6 @@ def _compile_networks(
         else:
             v6.append((lo, hi))
     return v4, v6
-
-
-# broadcast cache keyed by (applicationId, compiled interval tuple) so
-# repeated is_in calls with the same set reuse ONE broadcast instead of
-# leaking a new one per call.  applicationId (not id(sc)) because CPython
-# can reuse a freed object's id: a new context at the same address must
-# not be served a broadcast created on a stopped one.  Eviction only
-# drops our references — Spark's ContextCleaner reclaims the broadcast
-# once no live Column plan holds it; an explicit unpersist here could
-# yank a broadcast still referenced by a live is_in column.
-_BC_CACHE: dict = {}
-
-
-def _broadcast_intervals(tables: tuple) -> object | None:
-    nbytes = sum(a.nbytes for a in tables)
-    if nbytes <= _BROADCAST_THRESHOLD:
-        return None
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        return None
-    try:
-        sc = spark.sparkContext
-        key = (sc.applicationId, tuple(a.tobytes() for a in tables))
-        bc = _BC_CACHE.get(key)
-        if bc is None:
-            if len(_BC_CACHE) > 8:
-                _BC_CACHE.clear()
-            bc = sc.broadcast(tables)
-            _BC_CACHE[key] = bc
-        return bc
-    except Exception:
-        # Spark Connect has no sparkContext — fall back to closure
-        # capture, like _enrich.BroadcastedDB.broadcast
-        return None
 
 
 def _is_in_kernel(
@@ -334,8 +296,9 @@ def is_in(
     string checks only v4 CIDRs; anything parsed as IPv6 — including
     v4-mapped text like ``::ffff:1.2.3.4`` — checks only v6 CIDRs.
     The network set is compiled once on the driver into sorted interval
-    arrays and shipped to executors — as a closure for small sets, as a
-    cached Spark broadcast above 1 MiB.
+    arrays that the UDF closure captures (PySpark itself ships a UDF
+    command above ``spark.broadcast.UDFCompressionThreshold``, 1 MiB,
+    as a broadcast).
     """
     v4_iv, v6_iv = _compile_networks(list(networks))
 
@@ -360,14 +323,10 @@ def is_in(
 
     lo4, hi4 = _ipparse.sort_intervals(v4_iv)
     lo6, hi6 = _ipparse.sort_intervals(v6_iv)
-    tables = (lo4, hi4, lo6, hi6)
-    bc = _broadcast_intervals(tables)
-    # the UDF closure captures the broadcast handle OR the tables, not both
-    get = (lambda: bc.value) if bc is not None else (lambda: tables)
 
     @F.arrow_udf(BooleanType())
     def _is_in_udf(a: pa.Array) -> pa.Array:
-        return _is_in_kernel(a, *get())
+        return _is_in_kernel(a, lo4, hi4, lo6, hi6)
 
     return _is_in_udf(_col(expr))
 

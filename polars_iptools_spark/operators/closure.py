@@ -161,7 +161,7 @@ PEEL_AUTO_THRESHOLD = 1_000_000
 
 
 def connected_components(
-    edges: DataFrame, max_iterations: int = 50, checkpoint: bool = True,
+    edges: DataFrame, max_iterations: int = 50,
     stats: dict | None = None, peel_after: int | str | None = "auto",
 ) -> DataFrame:
     """(src,dst) edge list -> (node, component) with component = the
@@ -213,9 +213,9 @@ def connected_components(
     building only since normalizing is folded into it;
     ``superstep_walls``: the per-iteration star-contract + checkpoint +
     forest-check seconds) and the resolved ``peel_after``, so a slow run
-    can be attributed to a phase instead of adjudicated by total wall.
-    Phase walls are only meaningful when ``checkpoint=True`` (eager
-    materialization forces each superstep inside its loop iteration).
+    can be attributed to a phase instead of adjudicated by total wall
+    (every superstep ends in an eager ``localCheckpoint``, so its work
+    runs inside its own loop iteration).
     """
     aligned = _aligned(edges)
     t0 = time.monotonic()
@@ -242,13 +242,10 @@ def connected_components(
             # costs one job-scheduling round-trip each — which
             # DOMINATES the post-peel supersteps, where the working set
             # is only the still-churning remnant.
-            flagged = _flag_dirty(e)
-            if checkpoint:
-                flagged = flagged.localCheckpoint(eager=True)
+            flagged = _flag_dirty(e).localCheckpoint(eager=True)
             done = flagged.where(F.col("__dirty") == 1).isEmpty()
         else:
-            if checkpoint:
-                e = e.localCheckpoint(eager=True)
+            e = e.localCheckpoint(eager=True)
             if step > 0:
                 done = _forest_check(e)[0]
             else:
@@ -263,9 +260,7 @@ def connected_components(
                     # peel superstep 0's settled stars from its
                     # materialized edges now, so that they do not ride
                     # through superstep 1's stars
-                    flagged = _flag_dirty(e)
-                    if checkpoint:
-                        flagged = flagged.localCheckpoint(eager=True)
+                    flagged = _flag_dirty(e).localCheckpoint(eager=True)
         if flagged is not None:
             if done:
                 # all edges quiet: flagged IS the final forest

@@ -36,7 +36,7 @@ class CacheScope:
             simhash_pairs(df, "id", "text", caches=caches).write.parquet(p)
         # persisted signature blocks freed here
 
-    Mirrors ``plans/pipeline.py``'s ``_to_unpersist`` pattern.
+    ``plans/pipeline.py`` releases its stage-02 persist through one too.
     """
 
     def __init__(self) -> None:

@@ -8,9 +8,9 @@ corpus (repo, path, commit, lang, content)
     — then histogram-measured refinement of oversized (Zipf-hot)
     blocks, ONE committed stage (the blocked intermediate feeds the
     histogram and the refinement join either through a persist — when
-    enrichment is UDF-priced — or by recomputing the pure-Catalyst
-    block keys over the committed stage-01 parquet, whichever is
-    cheaper; see ``persist_blocked``)
+    enrichment is UDF-priced, i.e. an MMDB is configured — or by
+    recomputing the pure-Catalyst block keys over the committed
+    stage-01 parquet, whichever is cheaper)
   → 03 candidate self-join (rid_a < rid_b, AQE-exempt repartition) +
     JVM-only score upper bound → hot candidates → batched Jaro-Winkler
     + materialized Levenshtein exact scoring, committed as ONE
@@ -40,6 +40,7 @@ from pyspark.storagelevel import StorageLevel
 
 from ..functions._par import ensure_parallelism
 from ..operators.closure import connected_components
+from ..operators.dedup import CacheScope
 from . import blocking, scoring
 from .checkpoint import StageRunner
 
@@ -55,7 +56,6 @@ def run_pipeline(
     mmdb_dir: str | None = None,
     ipv6: bool = False,
     audit_rids: bool = False,
-    persist_blocked: bool | None = None,
 ) -> dict:
     """Returns dict with 'clusters' (rid, commit, cluster_id), 'edges',
     'metrics' (per-stage lineage).
@@ -84,10 +84,8 @@ def run_pipeline(
                 "tuples share a 64-bit rid — remap the colliding records "
                 "or key them by blocking.record_id128"
             )
-    if persist_blocked is None:
-        persist_blocked = mmdb_dir is not None
     runner = StageRunner(spark, ckpt_dir)
-    _to_unpersist: list[DataFrame] = []
+    caches = CacheScope()  # releases stage 02's persist once it is committed
 
     indicators = runner.stage(
         "01_indicators",
@@ -105,13 +103,12 @@ def run_pipeline(
         else:
             blocked = blocking.with_block_key(indicators)
         # blocked feeds BOTH the histogram and the refinement join.
-        # persist_blocked=True materializes it once in executor
-        # storage; False recomputes the block keys in both passes over
-        # the committed stage-01 parquet.  Default (None) persists only
-        # when an MMDB is configured: then block keys cost a broadcast-
-        # table Arrow UDF per row and recomputation doubles the
-        # enrichment bill, whereas the pseudo-ASN path is a pure-
-        # Catalyst projection that is CHEAPER to recompute than to
+        # With an MMDB configured it is materialized once in executor
+        # storage: block keys then cost a broadcast-table Arrow UDF per
+        # row and recomputation would double the enrichment bill.
+        # Without one the block keys are recomputed in both passes over
+        # the committed stage-01 parquet: the pseudo-ASN path is a
+        # pure-Catalyst projection that is CHEAPER to recompute than to
         # persist — measured 4.7-5.0 s vs 6.3-7.1 s for the whole
         # stage at 2.4M files/local[8] across four gated A/B runs
         # (/dev/shm parquet, GC-pinned), and skipping the persist
@@ -119,16 +116,14 @@ def run_pipeline(
         # right after stage 01's memory churn (the same-JVM GC
         # pressure the stage-02 probes in BENCH/BASELINE.md measured
         # at the wide level).
-        if persist_blocked:
-            blocked = blocked.persist(StorageLevel.MEMORY_AND_DISK)
-            _to_unpersist.append(blocked)
+        if mmdb_dir:
+            blocked = caches.add(blocked.persist(StorageLevel.MEMORY_AND_DISK))
         return blocking.refine_oversized_blocks(
             blocked, blocking.block_histogram(blocked), max_block_records
         )
 
-    refined = runner.stage("02_refined", _refined)
-    for df in _to_unpersist:
-        df.unpersist()
+    with caches:
+        refined = runner.stage("02_refined", _refined)
 
     pairs = blocking.candidate_pairs(refined)
     scored = runner.stage(
@@ -236,40 +231,30 @@ def pairwise_f1(
         same_ent = _sum_pairs("base_key", "entity")
         lab.unpersist()
         tp, fp, fn = both, same_cl - both, same_ent - both
-        precision = tp / (tp + fp) if tp + fp else 1.0
-        recall = tp / (tp + fn) if tp + fn else 1.0
-        f1 = (
-            2 * precision * recall / (precision + recall)
-            if precision + recall
-            else 0.0
+    else:
+        a = lab.select(
+            F.col("base_key"),
+            F.col("rid").alias("rid_a"),
+            F.col("entity").alias("ent_a"),
+            F.col("cluster_id").alias("cl_a"),
         )
-        return {
-            "tp": tp, "fp": fp, "fn": fn,
-            "precision": precision, "recall": recall, "f1": f1,
-        }
-    a = lab.select(
-        F.col("base_key"),
-        F.col("rid").alias("rid_a"),
-        F.col("entity").alias("ent_a"),
-        F.col("cluster_id").alias("cl_a"),
-    )
-    b = lab.select(
-        F.col("base_key"),
-        F.col("rid").alias("rid_b"),
-        F.col("entity").alias("ent_b"),
-        F.col("cluster_id").alias("cl_b"),
-    )
-    pairs = (
-        a.join(b, "base_key")
-        .where(F.col("rid_a") < F.col("rid_b"))
-        .dropDuplicates(["rid_a", "rid_b"])
-    )
-    agg = pairs.agg(
-        F.sum(((F.col("ent_a") == F.col("ent_b")) & (F.col("cl_a") == F.col("cl_b"))).cast("long")).alias("tp"),
-        F.sum(((F.col("ent_a") != F.col("ent_b")) & (F.col("cl_a") == F.col("cl_b"))).cast("long")).alias("fp"),
-        F.sum(((F.col("ent_a") == F.col("ent_b")) & (F.col("cl_a") != F.col("cl_b"))).cast("long")).alias("fn"),
-    ).collect()[0]
-    tp, fp, fn = (int(agg.tp or 0), int(agg.fp or 0), int(agg.fn or 0))
+        b = lab.select(
+            F.col("base_key"),
+            F.col("rid").alias("rid_b"),
+            F.col("entity").alias("ent_b"),
+            F.col("cluster_id").alias("cl_b"),
+        )
+        pairs = (
+            a.join(b, "base_key")
+            .where(F.col("rid_a") < F.col("rid_b"))
+            .dropDuplicates(["rid_a", "rid_b"])
+        )
+        agg = pairs.agg(
+            F.sum(((F.col("ent_a") == F.col("ent_b")) & (F.col("cl_a") == F.col("cl_b"))).cast("long")).alias("tp"),
+            F.sum(((F.col("ent_a") != F.col("ent_b")) & (F.col("cl_a") == F.col("cl_b"))).cast("long")).alias("fp"),
+            F.sum(((F.col("ent_a") == F.col("ent_b")) & (F.col("cl_a") != F.col("cl_b"))).cast("long")).alias("fn"),
+        ).collect()[0]
+        tp, fp, fn = (int(agg.tp or 0), int(agg.fp or 0), int(agg.fn or 0))
     precision = tp / (tp + fp) if tp + fp else 1.0
     recall = tp / (tp + fn) if tp + fn else 1.0
     f1 = 2 * precision * recall / (precision + recall) if precision + recall else 0.0

@@ -12,8 +12,8 @@ in-sandbox).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
@@ -57,43 +57,44 @@ def jaro(s1: str, s2: str) -> float:
     return (matches / l1 + matches / l2 + (matches - t) / matches) / 3.0
 
 
-def jaro_winkler(
-    s1: str,
-    s2: str,
-    p: float = 0.1,
-    max_prefix: int = 4,
-    boost_threshold: float = 0.7,
-) -> float:
-    """Winkler's standard definition: the prefix boost applies only when
-    the Jaro similarity exceeds ``boost_threshold`` (0.7, matching
-    DuckDB's ``jaro_winkler_similarity`` used as the oracle).  Pass
-    ``boost_threshold=0.0`` for the unconditional variant."""
+# Winkler's prefix boost: scale P per shared prefix character, up to
+# MAX_PREFIX characters, applied only when the Jaro similarity exceeds
+# BOOST_THRESHOLD (0.7, matching DuckDB's ``jaro_winkler_similarity``,
+# the oracle)
+P, MAX_PREFIX, BOOST_THRESHOLD = 0.1, 4, 0.7
+
+
+def jaro_winkler(s1: str, s2: str) -> float:
+    """Winkler's standard definition (the scalar reference for
+    :func:`jaro_winkler_batch`)."""
     jw = jaro(s1, s2)
-    if jw <= boost_threshold:
+    if jw <= BOOST_THRESHOLD:
         return jw
     prefix = 0
     for a, b in zip(s1, s2):
-        if a != b or prefix >= max_prefix:
+        if a != b or prefix >= MAX_PREFIX:
             break
         prefix += 1
-    return jw + prefix * p * (1.0 - jw)
+    return jw + prefix * P * (1.0 - jw)
 
 
-def _pad_codepoints(strs: list[str]) -> tuple[np.ndarray, np.ndarray]:
-    """List of strings -> (N, Lmax) uint32 codepoint matrix (0-padded)
-    + length vector, built with one UTF-32 decode and one scatter.
+def _pad_codepoints(strs: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """Null-free string array -> (N, Lmax) uint32 codepoint matrix
+    (0-padded) + length vector, built with one UTF-32 encode and one
+    scatter.
 
     Codepoints are stored shifted +1 so the 0 padding sentinel can
     never collide with a real character: a literal NUL ('\\x00') in the
     data must compare as a character, not as end-of-string (only
     equality of cells is ever used downstream, so the shift is free)."""
     n = len(strs)
-    lens = np.fromiter((len(s) for s in strs), dtype=np.int64, count=n)
+    lens = pc.utf8_length(strs).to_numpy(zero_copy_only=False).astype(np.int64)
     lmax = max(int(lens.max()), 1) if n else 1
     M = np.zeros((n, lmax), dtype=np.uint32)
     total = int(lens.sum())
     if total:
-        codes = np.frombuffer("".join(strs).encode("utf-32-le"), dtype=np.uint32)
+        text = "".join(strs.to_numpy(zero_copy_only=False))
+        codes = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32)
         rows = np.repeat(np.arange(n), lens)
         off = np.concatenate(([0], np.cumsum(lens)[:-1]))
         cols = np.arange(total) - np.repeat(off, lens)
@@ -158,95 +159,46 @@ def _jaro_matrix(
     return res
 
 
-def jaro_winkler_batch(
-    av: np.ndarray,
-    bv: np.ndarray,
-    p: float = 0.1,
-    max_prefix: int = 4,
-    boost_threshold: float = 0.7,
-) -> np.ndarray:
-    """Jaro-Winkler over object arrays of strings (None/non-str -> 0.0).
+def jaro_winkler_batch(a: pa.Array, b: pa.Array) -> np.ndarray:
+    """Jaro-Winkler over two string (or large_string) arrays; a null
+    on either side scores 0.0.
 
-    Identical (a, b) pairs are scored once: candidate streams repeat
+    Each distinct (a, b) pair is scored once: candidate streams repeat
     repo names and path stems massively, so the unique set is typically
-    a small fraction of the batch."""
-    n = len(av)
-    out = np.zeros(n, dtype=np.float64)
-    if n == 0:
-        return out
-    # C-level factorize of the (a, b) pair: factorize each side
-    # independently, then combine the integer codes — collision-free
-    # for any string content WITHOUT NUL bytes (string-concat keys are
-    # not: a separator char can appear in a key).  pandas' string hash
-    # table treats values as C strings, so '' and '\x00' (and any
-    # pair differing only past a NUL) collapse to one code — probe for
-    # NULs with one vectorized pass and skip the dedup for such
-    # batches (never real path/repo data; correctness for the public
-    # operator).  First occurrence per combined code recovers the
-    # unique pair list without any per-row Python.
-    sa, sb = pd.Series(av), pd.Series(bv)
-    has_nul = bool(
-        sa.str.contains("\x00", regex=False, na=False).any()
-        or sb.str.contains("\x00", regex=False, na=False).any()
+    a small fraction of the batch.  Pairs are keyed by each side's
+    ``dictionary_encode`` index (Arrow hashes the full bytes, NULs
+    included), and the codepoint matrices are built once per distinct
+    string and gathered per pair."""
+    if len(a) == 0:
+        return np.zeros(0)
+    da, db = a.dictionary_encode(), b.dictionary_encode()
+    ia = da.indices.fill_null(-1).to_numpy().astype(np.int64)
+    ib = db.indices.fill_null(-1).to_numpy().astype(np.int64)
+    valid = (ia >= 0) & (ib >= 0)
+    codes = np.where(valid, ia * len(db.dictionary) + ib, -1)
+    ucodes, first, inv = np.unique(codes, return_index=True, return_inverse=True)
+    lo = int(ucodes[0] == -1)  # the null pairs' code sorts first
+    if lo == len(ucodes):
+        return np.zeros(len(a))
+    ua, ub = ia[first[lo:]], ib[first[lo:]]
+    Ma, la = _pad_codepoints(da.dictionary)
+    Mb, lb = _pad_codepoints(db.dictionary)
+    A, l1, B, l2 = Ma[ua], la[ua], Mb[ub], lb[ub]
+    jw = _jaro_matrix(A, B, l1, l2)
+    pmax = min(MAX_PREFIX, A.shape[1], B.shape[1])
+    pref_eq = (A[:, :pmax] == B[:, :pmax]) & (
+        np.arange(pmax) < np.minimum(l1, l2)[:, None]
     )
-    if has_nul:
-        valid = np.fromiter(
-            (isinstance(x, str) and isinstance(y, str) for x, y in zip(av, bv)),
-            dtype=bool,
-            count=n,
-        )
-        ucodes = codes = np.where(valid, np.arange(n, dtype=np.int64), -1)
-        first = np.arange(n)
-        ucodes, first = ucodes[valid], first[valid]
-        if not len(ucodes):
-            return out
-    else:
-        ca, _ = pd.factorize(sa)  # -1 for null/non-str
-        cb, _ = pd.factorize(sb)
-        valid = (ca >= 0) & (cb >= 0)
-        codes = np.where(
-            valid, ca.astype(np.int64) * (int(cb.max()) + 2) + cb, -1
-        )
-        ucodes, first = np.unique(codes, return_index=True)
-        if len(ucodes) and ucodes[0] == -1:  # nulls -> 0.0
-            ucodes, first = ucodes[1:], first[1:]
-        if not len(ucodes):
-            return out
-    ua, ub = av[first], bv[first]
-    uscore = np.zeros(len(ua), dtype=np.float64)
-    # identical non-empty strings score 1.0 without touching the matrix
-    eq = np.fromiter(
-        (x == y for x, y in zip(ua, ub)), dtype=bool, count=len(ua)
-    )
-    uscore[eq & (ua != "")] = 1.0
-    ne = np.flatnonzero(~eq)
-    if len(ne):
-        A, l1 = _pad_codepoints(list(ua[ne]))
-        B, l2 = _pad_codepoints(list(ub[ne]))
-        jw = _jaro_matrix(A, B, l1, l2)
-        pmax = min(max_prefix, A.shape[1], B.shape[1])
-        if pmax:
-            pref_eq = (A[:, :pmax] == B[:, :pmax]) & (
-                np.arange(pmax) < np.minimum(l1, l2)[:, None]
-            )
-            prefix = np.cumprod(pref_eq, axis=1).sum(axis=1)
-            boosted = jw + prefix * p * (1.0 - jw)
-            jw = np.where(jw > boost_threshold, boosted, jw)
-        uscore[ne] = jw
-    # scatter unique scores back through the codes; ucodes is the sorted
-    # unique code list so positions align with searchsorted
-    hit = codes >= 0
-    out[hit] = uscore[np.searchsorted(ucodes, codes[hit])]
-    return out
+    prefix = np.cumprod(pref_eq, axis=1).sum(axis=1)
+    jw = np.where(jw > BOOST_THRESHOLD, jw + prefix * P * (1.0 - jw), jw)
+    # scatter back through each row's unique-code position; the null
+    # code (if any) maps to the leading 0.0
+    return np.concatenate((np.zeros(lo), jw))[inv]
 
 
 @F.arrow_udf(DoubleType())
 def jaro_winkler_udf(a: pa.Array, b: pa.Array) -> pa.Array:
-    return pa.array(
-        jaro_winkler_batch(
-            a.to_numpy(zero_copy_only=False), b.to_numpy(zero_copy_only=False)
-        )
-    )
+    return pa.array(jaro_winkler_batch(a, b))
 
 
 def levenshtein_sim(a: Column, b: Column) -> Column:
@@ -257,11 +209,13 @@ def levenshtein_sim(a: Column, b: Column) -> Column:
     )
 
 
+# blend weights of the (ip, path, repo) similarity terms
+WEIGHTS = (0.6, 0.25, 0.15)
+
+
 def hot_candidates(
     pairs: DataFrame,
-    ip_cols: tuple[str, str] = ("ip_a", "ip_b"),
-    path_cols: tuple[str, str] = ("path_a", "path_b"),
-    weights: tuple[float, float, float] = (0.6, 0.25, 0.15),
+    weights: tuple[float, float, float] = WEIGHTS,
     threshold: float = 0.72,
 ) -> DataFrame:
     """Pairs whose score *upper bound* (JVM-only terms, perfect-JW
@@ -293,21 +247,21 @@ def hot_candidates(
     # w_ip > 0: with w_ip == 0 every unequal-IP bound EQUALS the cap,
     # and a cap equal to the threshold passes the generic filter.
     if w_ip > 0 and w_ip * 0.5 + w_path + w_repo <= threshold:
-        base = pairs.where(F.col(ip_cols[0]) == F.col(ip_cols[1])).withColumn(
+        base = pairs.where(F.col("ip_a") == F.col("ip_b")).withColumn(
             "ip_sim", F.lit(1.0)
         )
     else:
         ip_sim = (
-            F.when(F.col(ip_cols[0]) == F.col(ip_cols[1]), F.lit(1.0))
-            .otherwise(0.5 * levenshtein_sim(F.col(ip_cols[0]), F.col(ip_cols[1])))
+            F.when(F.col("ip_a") == F.col("ip_b"), F.lit(1.0))
+            .otherwise(0.5 * levenshtein_sim(F.col("ip_a"), F.col("ip_b")))
         )
         base = pairs.withColumn("ip_sim", ip_sim).where(
             w_ip * F.col("ip_sim") + (w_path + w_repo) * F.lit(1.0) >= threshold
         )
     # survivors: path equality fast-path, then real Levenshtein
     lev_path = F.when(
-        F.col(path_cols[0]) == F.col(path_cols[1]), F.lit(1.0)
-    ).otherwise(levenshtein_sim(F.col(path_cols[0]), F.col(path_cols[1])))
+        F.col("path_a") == F.col("path_b"), F.lit(1.0)
+    ).otherwise(levenshtein_sim(F.col("path_a"), F.col("path_b")))
     base = base.withColumn("lev_path", lev_path)
     upper = (
         w_ip * F.col("ip_sim")
@@ -334,19 +288,14 @@ def _jw_eq_gated(a: Column, b: Column) -> Column:
     )
 
 
-def exact_score_hot(
-    hot: DataFrame,
-    path_cols: tuple[str, str] = ("path_a", "path_b"),
-    repo_cols: tuple[str, str] = ("repo_a", "repo_b"),
-    weights: tuple[float, float, float] = (0.6, 0.25, 0.15),
-) -> DataFrame:
-    """Exact blended score over hot candidates (expects the materialized
-    ip_sim / lev_path columns from :func:`hot_candidates`)."""
-    w_ip, w_path, w_repo = weights
-    path_sim = 0.5 * _jw_eq_gated(
-        F.col(path_cols[0]), F.col(path_cols[1])
-    ) + 0.5 * F.col("lev_path")
-    repo_sim = _jw_eq_gated(F.col(repo_cols[0]), F.col(repo_cols[1]))
+def exact_score_hot(hot: DataFrame) -> DataFrame:
+    """Exact blended score (:data:`WEIGHTS`) over hot candidates
+    (expects the materialized ip_sim / lev_path columns from
+    :func:`hot_candidates` at the default weights)."""
+    w_ip, w_path, w_repo = WEIGHTS
+    jw_path = _jw_eq_gated(F.col("path_a"), F.col("path_b"))
+    path_sim = 0.5 * jw_path + 0.5 * F.col("lev_path")
+    repo_sim = _jw_eq_gated(F.col("repo_a"), F.col("repo_b"))
     return hot.withColumn(
         "score", w_ip * F.col("ip_sim") + w_path * path_sim + w_repo * repo_sim
     )

@@ -20,7 +20,7 @@ from pyspark.util import PythonEvalType
 
 import polars_iptools_spark as ip
 from polars_iptools_spark.operators.similarity import lsh_buckets_banded
-from polars_iptools_spark.plans.scoring import jaro_winkler_udf
+from polars_iptools_spark.plans.scoring import jaro_winkler, jaro_winkler_udf
 from polars_iptools_spark.sources.mmdb_writer import write_mmdb
 
 ARROW = PythonEvalType.SQL_SCALAR_ARROW_UDF
@@ -136,6 +136,41 @@ def test_large_var_types_same_rows(spark, maxmind_dir, spur_dir):
     assert small[0]["geo"]["asnnum"] == 35908
     assert small[0]["spur"]["infrastructure"] == "DATACENTER"
     assert small[4]["geo"] == dict.fromkeys(small[4]["geo"])
+
+
+def test_jaro_winkler_udf_large_var_types(spark):
+    """The scoring UDF dictionary-encodes whichever string type Spark
+    sends; both settings must match the scalar reference, with nulls
+    scoring 0.0, NULs compared as characters, equal non-empty strings
+    1.0 and equal empty strings 0.0."""
+    pairs = [
+        (None, "x"),
+        ("abc", None),
+        (None, None),
+        ("a\x00b", "ab"),
+        ("a\x00", "a"),
+        ("b", "b"),
+        ("", ""),
+        ("", "bb"),
+        ("src/a/main.py", "src/a/main.py"),
+        ("日本語テスト", "日本語のテスト"),
+        ("martha", "marhta"),
+        ("src/a/main.py", "src/a/util.py"),
+    ]
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(pairs)], "i int, a string, b string"
+    )
+    expected = [0.0 if a is None or b is None else jaro_winkler(a, b) for a, b in pairs]
+    before = spark.conf.get(LARGE)
+    try:
+        for large, typ in (("false", "string"), ("true", "large_string")):
+            spark.conf.set(LARGE, large)
+            jw = jaro_winkler_udf("a", "b").alias("jw")
+            rows = df.select("i", _batch_type("a").alias("t"), jw).orderBy("i").collect()
+            assert {r.t for r in rows} == {typ}
+            assert [r.jw for r in rows] == pytest.approx(expected, abs=1e-12), large
+    finally:
+        spark.conf.set(LARGE, before)
 
 
 def test_ip_keys_rejects_non_ip_types():

@@ -1,7 +1,7 @@
 """Transitive-closure correctness vs a networkx oracle (SURVEY.md §5),
 on hand-built graphs: chain, star, two components, self-loop,
 duplicate edges, plus randomized (fixed-seed) graphs with long and
-hex-string node ids, with and without checkpointing."""
+hex-string node ids."""
 
 import networkx as nx
 import pytest
@@ -47,14 +47,6 @@ def test_closure_random_graph(spark):
     edges = [(rnd.randrange(200), rnd.randrange(200)) for _ in range(300)]
     edges = [(a, b) for a, b in edges]
     assert spark_cc(spark, edges) == oracle(edges)
-
-
-@pytest.mark.parametrize("name", list(CASES))
-def test_closure_without_checkpoint_matches_networkx(spark, name):
-    """checkpoint=False keeps every superstep lazy (one growing plan);
-    the assignment must not depend on materialization."""
-    edges = CASES[name]
-    assert spark_cc(spark, edges, checkpoint=False) == oracle(edges)
 
 
 def test_closure_hex_string_ids(spark):

@@ -1,10 +1,11 @@
 """Two seams that only show up off the classic-SparkContext path:
 
 1. Spark Connect fallback: sessions without a ``sparkContext`` cannot
-   create broadcast variables, so ``is_in`` interval tables and the
-   enrichment FlatTables must ship via plain closure capture — with
-   identical results.  Faked here with a session object whose
-   ``sparkContext`` raises, exactly what pyspark.sql.connect does.
+   create broadcast variables, so the enrichment FlatTables must ship
+   via plain closure capture — with identical results (``is_in``
+   interval tables always ship in the UDF closure).  Faked here with a
+   session object whose ``sparkContext`` raises, exactly what
+   pyspark.sql.connect does.
 
 2. Native-vs-UDF agreement: the ≤64-CIDR pure-Catalyst ``is_in`` fast
    path and the Arrow-UDF interval path must agree on every input
@@ -19,7 +20,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 import polars_iptools_spark as ip
-from polars_iptools_spark.functions import geoip, iptools
+from polars_iptools_spark.functions import geoip
 
 
 class _ConnectishSession:
@@ -38,35 +39,6 @@ class _ConnectishSession:
         if name == "sparkContext":
             raise AttributeError("sparkContext is not supported in Spark Connect")
         return getattr(self._real, name)
-
-
-def test_is_in_closure_capture_fallback(spark, monkeypatch):
-    df = spark.createDataFrame(
-        [("8.8.8.8",), ("1.1.1.1",), ("2606:4700::1111",), ("bad",), (None,)],
-        "ip string",
-    )
-    nets = ["8.8.8.0/24", "2606:4700::/32"]  # mixed family -> UDF path
-    with monkeypatch.context() as m:
-        # force the broadcast attempt (size threshold 0) AND make OUR
-        # module's session lookup return a connect-ish session so the
-        # attempt fails into closure capture.  Only iptools' imported
-        # SparkSession symbol is patched — pyspark's classic UDF
-        # internals (which a real Connect client replaces wholesale)
-        # keep the real session.
-        m.setattr(iptools, "_BROADCAST_THRESHOLD", 0)
-        m.setattr(
-            iptools,
-            "SparkSession",
-            types.SimpleNamespace(
-                getActiveSession=lambda: _ConnectishSession(spark)
-            ),
-        )
-        col = ip.is_in("ip", nets)
-    got = {r.ip: r.m for r in df.select("ip", col.alias("m")).collect()}
-    assert got["8.8.8.8"] is True
-    assert got["1.1.1.1"] is False
-    assert got["2606:4700::1111"] is True
-    assert got["bad"] is None and got[None] is None
 
 
 def test_geoip_closure_capture_fallback(spark, monkeypatch, maxmind_dir):

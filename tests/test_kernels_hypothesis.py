@@ -303,8 +303,8 @@ _word = st.text(
 @settings(max_examples=150, deadline=None)
 @given(st.lists(st.tuples(_word, _word), min_size=1, max_size=30))
 def test_jw_batch_matches_scalar(pairs):
-    a = np.array([p[0] for p in pairs], dtype=object)
-    b = np.array([p[1] for p in pairs], dtype=object)
+    a = pa.array([p[0] for p in pairs], pa.string())
+    b = pa.array([p[1] for p in pairs], pa.string())
     batch = scoring.jaro_winkler_batch(a, b)
     for i, (x, y) in enumerate(pairs):
         expect = scoring.jaro_winkler(x, y)

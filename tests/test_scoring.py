@@ -5,7 +5,7 @@ query)."""
 
 import random
 
-import numpy as np
+import pyarrow as pa
 import pytest
 
 from polars_iptools_spark.plans.scoring import (
@@ -34,8 +34,8 @@ def _random_pairs(n=3000, seed=7):
 
 def test_batch_matches_scalar():
     pairs = _random_pairs()
-    av = np.array([p[0] for p in pairs], dtype=object)
-    bv = np.array([p[1] for p in pairs], dtype=object)
+    av = pa.array([p[0] for p in pairs], pa.string())
+    bv = pa.array([p[1] for p in pairs], pa.string())
     got = jaro_winkler_batch(av, bv)
     for i, (a, b) in enumerate(pairs):
         assert abs(jaro_winkler(a, b) - got[i]) < 1e-12, (a, b)
@@ -44,8 +44,8 @@ def test_batch_matches_scalar():
 def test_batch_matches_duckdb():
     duckdb = pytest.importorskip("duckdb")
     pairs = _random_pairs(seed=11)
-    av = np.array([p[0] for p in pairs], dtype=object)
-    bv = np.array([p[1] for p in pairs], dtype=object)
+    av = pa.array([p[0] for p in pairs], pa.string())
+    bv = pa.array([p[1] for p in pairs], pa.string())
     got = jaro_winkler_batch(av, bv)
     con = duckdb.connect()
     con.execute("CREATE TABLE t(i INT, a VARCHAR, b VARCHAR)")
@@ -60,8 +60,8 @@ def test_batch_matches_duckdb():
 
 
 def test_nulls_and_edge_content():
-    av = np.array([None, "abc", None, "", "a\x00b", "日本語テスト"], dtype=object)
-    bv = np.array(["x", None, None, "", "ab", "日本語のテスト"], dtype=object)
+    av = pa.array([None, "abc", None, "", "a\x00b", "日本語テスト"], pa.string())
+    bv = pa.array(["x", None, None, "", "ab", "日本語のテスト"], pa.string())
     got = jaro_winkler_batch(av, bv)
     assert got[0] == got[1] == got[2] == 0.0
     assert got[3] == 0.0  # both-empty -> 0.0 (DuckDB convention)
@@ -72,8 +72,8 @@ def test_nulls_and_edge_content():
 def test_nul_bytes_do_not_collide_pairs():
     # regression: string-concat pair keys collapsed ('b','b') with
     # ('','bb') because pandas concat drops NUL separators
-    av = np.array(["b", ""], dtype=object)
-    bv = np.array(["b", "bb"], dtype=object)
+    av = pa.array(["b", ""], pa.string())
+    bv = pa.array(["b", "bb"], pa.string())
     got = jaro_winkler_batch(av, bv)
     assert got[0] == 1.0
     assert got[1] == jaro_winkler("", "bb") == 0.0
@@ -86,7 +86,7 @@ def test_winkler_boost_gated_at_0_7():
     assert j <= 0.7
     assert jaro_winkler(a, b) == j
     got = jaro_winkler_batch(
-        np.array([a], dtype=object), np.array([b], dtype=object)
+        pa.array([a], pa.string()), pa.array([b], pa.string())
     )
     assert got[0] == j
     # high-jaro prefix pair: boost applies
@@ -95,8 +95,8 @@ def test_winkler_boost_gated_at_0_7():
 
 
 def test_identical_strings_fast_path():
-    av = np.array(["same/path.py"] * 5 + ["x"], dtype=object)
-    bv = np.array(["same/path.py"] * 5 + ["y"], dtype=object)
+    av = pa.array(["same/path.py"] * 5 + ["x"], pa.string())
+    bv = pa.array(["same/path.py"] * 5 + ["y"], pa.string())
     got = jaro_winkler_batch(av, bv)
     assert (got[:5] == 1.0).all()
     assert got[5] == 0.0
