@@ -1,9 +1,10 @@
 """Local stand-in for the driver's correctness gate: run every
 __spark_entry__ query on Spark and its oracle on DuckDB at sf0.01,
-compare row count + order-insensitive values.
+compare row count + order-insensitive values.  Exits 1 when any query
+fails (or the SF dir does not exist).
 
 Usage: [SPARK_GRAFT_CPUS=4] python BENCH/check_correctness.py [sf_dir] [query ...]
-(local[SPARK_GRAFT_CPUS], default 16)."""
+(local[SPARK_GRAFT_CPUS], default: all cores)."""
 import os, sys, math
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
@@ -12,8 +13,10 @@ from polars_iptools_spark.session import get_spark
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 only = sys.argv[2:] if len(sys.argv) > 2 else None
+if not os.path.isdir(SF):
+    sys.exit(f"no such SF dir: {SF}")
 
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 spark = get_spark(master=f"local[{CPUS}]", shuffle_partitions=CPUS)
 spark.sparkContext.setLogLevel("ERROR")
 E._ensure_importable(spark)  # executor imports independent of launch cwd
@@ -62,3 +65,4 @@ for name, fn in qs.items():
     print(f"{name}: OK ({len(a)} rows)")
 print("FAILS:", fails if fails else "none")
 spark.stop()
+sys.exit(1 if fails else 0)

@@ -12,7 +12,7 @@ pass criterion is supersteps staying O(log diameter) and the warm wall
 staying within a small multiple of the uniform-corpus closure stage.
 
 Usage: python BENCH/closure_giant.py [--nodes 9600000] [--giant-frac 0.01]
-       [--cpus N] [--driver-memory 48g] [--out BENCH/closure_giant_result.json]
+       [--cpus N] [--driver-memory 6g] [--out BENCH/closure_giant_result.json]
 """
 
 from __future__ import annotations
@@ -31,25 +31,24 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--nodes", type=int, default=9_600_000)
     ap.add_argument("--giant-frac", type=float, default=0.01)
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    ap.add_argument("--driver-memory", default="48g")
+    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)))
+    ap.add_argument("--driver-memory", default="6g")
     ap.add_argument(
         "--out", default=str(Path(__file__).resolve().parent / "closure_giant_result.json")
     )
     args = ap.parse_args()
 
     import __spark_entry__ as entry
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from polars_iptools_spark.operators.closure import connected_components
+    from polars_iptools_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .config("spark.sql.shuffle.partitions", str(int(args.cpus) * 2))
-        .config("spark.driver.memory", args.driver_memory)
-        .appName("closure_giant")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="closure_giant",
+        master=f"local[{args.cpus}]",
+        shuffle_partitions=int(args.cpus) * 2,
+        extra_conf={"spark.driver.memory": args.driver_memory},
     )
     spark.sparkContext.setLogLevel("ERROR")
     entry._ensure_importable(spark)

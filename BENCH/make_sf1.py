@@ -19,6 +19,7 @@ Scale-up semantics (documented for the bench record):
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 from pathlib import Path
 
@@ -32,7 +33,7 @@ def main() -> None:
     ap.add_argument("--copies", type=int, default=10)
     ap.add_argument(
         "--tables", default="lineitem,documents,embeddings",
-        help="comma list; doc-op ladders can skip lineitem",
+        help="comma list; document/embedding-only runs can skip lineitem",
     )
     args = ap.parse_args()
     tables = set(args.tables.split(","))
@@ -40,8 +41,9 @@ def main() -> None:
     from polars_iptools_spark.session import get_spark
     from pyspark.sql import functions as F
 
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     spark = get_spark(
-        app_name="make_sf1", master="local[32]",
+        app_name="make_sf1", master=f"local[{cpus}]",
         extra_conf={"spark.ui.enabled": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -57,7 +59,7 @@ def main() -> None:
         big_li = parts[0]
         for p in parts[1:]:
             big_li = big_li.unionByName(p)
-        big_li.repartition(32).write.mode("overwrite").parquet(str(out / "lineitem.parquet"))
+        big_li.repartition(cpus).write.mode("overwrite").parquet(str(out / "lineitem.parquet"))
         counts["lineitem"] = spark.read.parquet(str(out / "lineitem.parquet")).count()
 
     if "documents" in tables:
@@ -72,7 +74,7 @@ def main() -> None:
         big_d = parts[0]
         for p in parts[1:]:
             big_d = big_d.unionByName(p)
-        big_d.repartition(32).write.mode("overwrite").parquet(str(out / "documents.parquet"))
+        big_d.repartition(cpus).write.mode("overwrite").parquet(str(out / "documents.parquet"))
         counts["documents"] = spark.read.parquet(str(out / "documents.parquet")).count()
 
     if "embeddings" in tables:
@@ -106,7 +108,7 @@ def main() -> None:
         big_e = parts[0]
         for p in parts[1:]:
             big_e = big_e.unionByName(p)
-        big_e.repartition(32).write.mode("overwrite").parquet(str(out / "embeddings.parquet"))
+        big_e.repartition(cpus).write.mode("overwrite").parquet(str(out / "embeddings.parquet"))
         counts["embeddings"] = spark.read.parquet(str(out / "embeddings.parquet")).count()
 
     print(counts)

@@ -1,22 +1,32 @@
-"""Production-scale MMDB stress: synthesize a GeoLite2-shaped DB pair
-at deployment size (default ~2M city networks over 120k distinct
-records + 500k ASN networks over 70k — a real GeoLite2-City carries
-~3.5M/~120k), then measure the three numbers the toy fixtures never
-exercised:
+"""Production-scale MMDB stress: synthesize a deployment-sized database,
+then measure the three numbers the toy fixtures never exercised:
 
   1. driver decode wall (tree enumeration + record decode + FlatTable)
   2. broadcast payload size (pickled flat tables)
-  3. per-batch lookup throughput (geoip.full over sf0.1-derived IPs)
+  3. per-batch lookup throughput (the enrichment UDF over sf0.1-derived
+     IPs, plus the |S16 v6 remainder path)
 
-plus arithmetic-oracle spot checks so the big DB is evidence, not just
-load.  Writes BENCH/mmdb_scale_result.json and prints one JSON line.
+plus arithmetic-oracle spot checks (the tiling oracle recomputes the
+expected record index for an address with zero MMDB machinery), so the
+big DB is evidence, not just load.
 
-Usage: python BENCH/mmdb_scale.py [--city-networks N] [--keep-dir D]
+``--db geolite`` (default) writes a GeoLite2-City/ASN pair: ~2M city
+networks over 120k distinct records + 500k ASN networks over 70k (a real
+GeoLite2-City carries ~3.5M/~120k), and BENCH/mmdb_scale_result.json.
+``--db spur`` writes a ``spur.mmdb`` of 1.5M v4 + 300k v6 networks over
+100k camelCase feed records (a real Spur anonymous feed carries ~1-2M
+entries), and BENCH/spur_scale_result.json.  ``--networks``,
+``--records`` and ``--v6-networks`` size the City table or the Spur
+feed; the ``--asn-*`` sizes apply to GeoLite2 only.  Prints one JSON
+line.
+
+Usage: python BENCH/mmdb_scale.py [--db geolite|spur] [--networks N] [--keep-dir D]
 """
 
 from __future__ import annotations
 
 import argparse
+import ipaddress
 import json
 import os
 import pickle
@@ -25,48 +35,113 @@ import sys
 import tempfile
 import time
 from pathlib import Path
+from typing import Callable, NamedTuple
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import numpy as np
 
+from polars_iptools_spark.functions import _enrich, geoip, spur
+from polars_iptools_spark.sources import mmdb_synth
+
+
+class Db(NamedTuple):
+    files: tuple[str, ...]
+    sizes: tuple[int, int, int]  # default (networks, records, v6 networks)
+    result: str
+    write: Callable  # (db_dir, args) -> per-file stats
+    build: Callable  # db_dir -> {name: FlatTable}
+    table: str  # flat table the oracle spot checks read
+    expect: Callable  # record index or None -> {column: value}
+    full: Callable  # the enrichment UDF the lookup times
+    num: str  # struct fields the lookup aggregates
+    text: str
+
+
+def _spur_expect(exp: int | None) -> dict:
+    """Fields record ``exp`` carries, including the every-5th-record
+    tag hole (``mmdb_synth.spur_record``)."""
+    if exp is None:
+        return {"tag": "", "location_city": ""}
+    return {
+        "tag": f"tag{exp % 40}" if exp % 5 != 0 else "",
+        "location_city": f"City {exp % 9000}",
+    }
+
+
+DBS = {
+    "geolite": Db(
+        files=("GeoLite2-City.mmdb", "GeoLite2-ASN.mmdb"),
+        sizes=(1_900_000, 120_000, 400_000),
+        result="mmdb_scale_result.json",
+        write=lambda d, a: mmdb_synth.write_synthetic_geolite(
+            d,
+            n_city_networks=a.networks,
+            n_city_records=a.records,
+            n_asn_networks=a.asn_networks,
+            n_asn_records=a.asn_records,
+            n_city_v6_networks=a.v6_networks,
+            n_asn_v6_networks=a.asn_v6_networks,
+        ),
+        build=_enrich.build_geoip_tables,
+        table="city",
+        expect=lambda exp: {"city": f"City {exp}" if exp is not None else ""},
+        full=geoip.full,
+        num="asnnum",
+        text="city",
+    ),
+    "spur": Db(
+        files=("spur.mmdb",),
+        sizes=(1_500_000, 100_000, 300_000),
+        result="spur_scale_result.json",
+        write=lambda d, a: mmdb_synth.write_synthetic_spur(
+            d, n_networks=a.networks, n_records=a.records, n_v6_networks=a.v6_networks
+        ),
+        build=_enrich.build_spur_tables,
+        table="spur",
+        expect=_spur_expect,
+        full=spur.full,
+        num="client_count",
+        text="tag",
+    ),
+}
+
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--city-networks", type=int, default=1_900_000)
-    ap.add_argument("--city-records", type=int, default=120_000)
+    ap.add_argument("--db", choices=sorted(DBS), default="geolite")
+    ap.add_argument("--networks", type=int, help="default: per --db")
+    ap.add_argument("--records", type=int, help="default: per --db")
+    ap.add_argument("--v6-networks", type=int, help="default: per --db")
     ap.add_argument("--asn-networks", type=int, default=500_000)
     ap.add_argument("--asn-records", type=int, default=70_000)
-    ap.add_argument("--city-v6-networks", type=int, default=400_000)
     ap.add_argument("--asn-v6-networks", type=int, default=100_000)
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8)))
     ap.add_argument("--keep-dir", default=None, help="reuse/keep DB dir instead of a temp dir")
     ap.add_argument("--reps", type=int, default=3)
     args = ap.parse_args()
+    db = DBS[args.db]
+    for flag, default in zip(("networks", "records", "v6_networks"), db.sizes):
+        if getattr(args, flag) is None:
+            setattr(args, flag, default)
 
-    from polars_iptools_spark.sources import mmdb_synth
+    from BENCH.sysload import cpu_calibration
     from polars_iptools_spark.sources.mmdb import MMDBFile
 
     result: dict = {"config": vars(args).copy()}
+    # host-epoch witness (see sysload.cpu_calibration): walls in this
+    # record are only comparable across records at like calibration
+    result["calib_start"] = cpu_calibration()
 
-    db_dir = Path(args.keep_dir) if args.keep_dir else Path(tempfile.mkdtemp(prefix="mmdb_scale_"))
+    db_dir = Path(args.keep_dir) if args.keep_dir else Path(tempfile.mkdtemp(prefix=f"{args.db}_scale_"))
     cleanup = args.keep_dir is None
     try:
         # ---- 1. synthesize ------------------------------------------------
-        if not (db_dir / "GeoLite2-City.mmdb").exists():
+        if not (db_dir / db.files[0]).exists():
             t0 = time.time()
-            stats = mmdb_synth.write_synthetic_geolite(
-                db_dir,
-                n_city_networks=args.city_networks,
-                n_city_records=args.city_records,
-                n_asn_networks=args.asn_networks,
-                n_asn_records=args.asn_records,
-                n_city_v6_networks=args.city_v6_networks,
-                n_asn_v6_networks=args.asn_v6_networks,
-            )
+            result["files"] = db.write(db_dir, args)
             result["write_sec"] = round(time.time() - t0, 2)
-            result["files"] = stats
         else:
             result["files"] = {
                 p.name: {"bytes": p.stat().st_size} for p in db_dir.glob("*.mmdb")
@@ -74,7 +149,7 @@ def main() -> None:
 
         # ---- 2. driver decode wall ---------------------------------------
         decode = {}
-        for name in ("GeoLite2-City.mmdb", "GeoLite2-ASN.mmdb"):
+        for name in db.files:
             t0 = time.time()
             f = MMDBFile(db_dir / name)
             tab = f.enumerate_intervals()
@@ -87,10 +162,8 @@ def main() -> None:
             del tab, f
         result["decode"] = decode
 
-        from polars_iptools_spark.functions import _enrich
-
         t0 = time.time()
-        tables = _enrich.build_geoip_tables(db_dir)
+        tables = db.build(db_dir)
         result["flat_tables_build_sec"] = round(time.time() - t0, 2)
         result["split_index"] = {
             name: {"v4_intervals": int(len(t.lo4)), "v6_intervals": int(len(t.lo6))}
@@ -103,100 +176,88 @@ def main() -> None:
         del payload
 
         # ---- 3. driver-side spot checks vs the arithmetic oracle ---------
-        city = tables["city"]
-        checked = 0
-        for a in range(4096, args.city_networks * 8192 // 4, 7_919 * 4096):
-            key = np.array([(0xFFFF << 32 | a).to_bytes(16, "big")], dtype="|S16")
-            rows = city.lookup(key, np.array([True]))
-            exp = mmdb_synth.expected_city_record_index(
-                a, args.city_networks, args.city_records
+        tab = tables[db.table]
+
+        def check(addr: int, exp: int | None) -> None:
+            rows = tab.lookup(
+                np.array([addr.to_bytes(16, "big")], dtype="|S16"), np.array([True])
             )
-            got = city.columns["city"][rows[0]].as_py()
-            want = f"City {exp}" if exp is not None else ""
-            assert got == want, (a, got, want)
+            for col, want in db.expect(exp).items():
+                got = tab.columns[col][rows[0]].as_py()
+                assert got == want, (hex(addr), col, got, want)
+
+        checked = 0
+        for a in range(4096, args.networks * 8192 // 4, 7_919 * 4096):
+            check(0xFFFF << 32 | a, mmdb_synth.expected_city_record_index(a, args.networks, args.records))
             checked += 1
         result["oracle_spot_checks"] = checked
         span = mmdb_synth._V6_BLOCK_SPAN
         checked6 = 0
-        for rel in range(0, args.city_v6_networks * span // 4, 6007 * span // 16 + 1):
+        for rel in range(0, args.v6_networks * span // 4, 6007 * span // 16 + 1):
             ai = mmdb_synth.V6_BASE + rel
-            key = np.array([ai.to_bytes(16, "big")], dtype="|S16")
-            rows = city.lookup(key, np.array([True]))
-            exp = mmdb_synth.expected_city_v6_record_index(
-                ai, args.city_networks, args.city_v6_networks, args.city_records
-            )
-            got = city.columns["city"][rows[0]].as_py()
-            want = f"City {exp}" if exp is not None else ""
-            assert got == want, (hex(ai), got, want)
+            check(ai, mmdb_synth.expected_city_v6_record_index(
+                ai, args.networks, args.v6_networks, args.records
+            ))
             checked6 += 1
         result["oracle_spot_checks_v6"] = checked6
-        del tables
+        del tables, tab
 
         # ---- 4. Spark lookup throughput ----------------------------------
         import __spark_entry__ as entry
-        from pyspark.sql import SparkSession
+        from pyspark.sql import functions as F
 
-        spark = (
-            SparkSession.builder.master(f"local[{args.cpus}]")
-            .config("spark.sql.shuffle.partitions", str(int(args.cpus)))
-            .config("spark.driver.memory", "48g")
-            .config("spark.sql.session.timeZone", "UTC")
-            .appName("mmdb_scale")
-            .getOrCreate()
+        from polars_iptools_spark.session import get_spark
+
+        spark = get_spark(
+            app_name=f"{args.db}_scale", master=f"local[{args.cpus}]",
+            shuffle_partitions=args.cpus,
         )
         spark.sparkContext.setLogLevel("ERROR")
         entry._ensure_importable(spark)
-        from polars_iptools_spark.functions import geoip
-
-        # sf0.1 lineitem is a single row-group -> 3 scan partitions;
-        # spread the cached input so the lookup measurement uses every
-        # core (the kernel under test is the UDF, not the scan)
-        ips = entry._derived_ips(spark, args.sf_dir).repartition(int(args.cpus) * 2).cache()
-        n_rows = ips.count()
-        result["lookup_rows"] = n_rows
 
         # driver-side decode + broadcast registration paid once, OUTSIDE
         # the per-rep lookup timer (it is reported as its own number)
         t0 = time.time()
-        gcol = geoip.full("ip", db_dir=str(db_dir)).alias("g")
+        col = db.full("ip", db_dir=str(db_dir)).alias("r")
         result["enrich_init_sec"] = round(time.time() - t0, 2)
 
-        from pyspark.sql import functions as F
+        def lookup(df, prefix: str) -> None:
+            """Time ``args.reps`` lookups over ``df``'s ``ip`` column."""
+            n = df.count()
+            reps = []
+            for _ in range(args.reps):
+                t0 = time.time()
+                # aggregate over the VALUES: a bare count() would let
+                # Catalyst prune the whole (deterministic) UDF projection
+                # and time nothing but the row count
+                agg = df.select(col).agg(
+                    F.count(F.when(F.col(f"r.{db.num}") > 0, 1)).alias("hits"),
+                    F.sum(F.length(f"r.{db.text}")).alias("chars"),
+                ).collect()[0]
+                reps.append(round(time.time() - t0, 3))
+                assert agg["chars"] is not None
+            med = sorted(reps)[len(reps) // 2]
+            result[f"{prefix}_rows"] = n
+            result[f"{prefix}_reps_sec"] = reps
+            result[f"{prefix}_median_sec"] = med
+            result[f"{prefix}_rows_per_sec"] = int(n / med)
+            # sanity: how many of the keys the DB resolves
+            result[f"{prefix}_resolved"] = (
+                df.select(col).where(f"r.{db.num} > 0 or r.{db.text} <> ''").count()
+            )
 
-        reps = []
-        for r in range(args.reps):
-            t0 = time.time()
-            out = ips.select(gcol).select("g.country", "g.asnnum")
-            # aggregate over the VALUES — a bare count() would let
-            # Catalyst prune the whole (deterministic) UDF projection
-            # and time nothing but the row count
-            agg = out.agg(
-                F.count(F.when(F.col("asnnum") > 0, 1)).alias("hits"),
-                F.sum(F.length("country")).alias("chars"),
-            ).collect()[0]
-            reps.append(round(time.time() - t0, 3))
-            assert agg["chars"] is not None
-        # sanity: the big DB actually resolves most derived valid IPs
-        hit = (
-            ips.select(gcol)
-            .where("g.asnnum > 0 or g.country <> '' ")
-            .count()
-        )
-        result["lookup_reps_sec"] = reps
-        med = sorted(reps)[len(reps) // 2]
-        result["lookup_median_sec"] = med
-        result["lookup_rows_per_sec"] = int(n_rows / med)
-        result["resolved_rows"] = hit
+        # sf0.1 lineitem is a single row-group -> 3 scan partitions;
+        # spread the cached input so the lookup measurement uses every
+        # core (the kernel under test is the UDF, not the scan)
+        ips = entry._derived_ips(spark, args.sf_dir).repartition(args.cpus * 2).cache()
+        lookup(ips, "lookup")
 
         # ---- 5. v6 remainder-path throughput -----------------------------
         # the derived sf rows are v4; measure the |S16 remainder side
         # with its own 600k-key column inside the synthesized 2600::/12
         # tiling (driver-built strings, executor-side lookups)
-        if args.city_v6_networks:
-            import ipaddress
-
-            span6 = mmdb_synth._V6_BLOCK_SPAN
-            hi = args.city_v6_networks * span6 // 4
+        if args.v6_networks:
+            hi = args.v6_networks * span // 4
             step6 = max(hi // 600_000, 1)
             v6_strs = [
                 str(ipaddress.IPv6Address(mmdb_synth.V6_BASE + rel))
@@ -204,36 +265,17 @@ def main() -> None:
             ][:600_000]
             v6df = (
                 spark.createDataFrame([(s,) for s in v6_strs], "ip string")
-                .repartition(int(args.cpus) * 2)
+                .repartition(args.cpus * 2)
                 .cache()
             )
-            n6 = v6df.count()
-            reps6 = []
-            for r in range(args.reps):
-                t0 = time.time()
-                agg = (
-                    v6df.select(gcol)
-                    .select("g.city", "g.asnnum")
-                    .agg(
-                        F.count(F.when(F.col("city") != "", 1)).alias("hits"),
-                        F.sum(F.length("city")).alias("chars"),
-                    )
-                    .collect()[0]
-                )
-                reps6.append(round(time.time() - t0, 3))
-            result["lookup_v6_rows"] = n6
-            result["lookup_v6_reps_sec"] = reps6
-            med6 = sorted(reps6)[len(reps6) // 2]
-            result["lookup_v6_median_sec"] = med6
-            result["lookup_v6_rows_per_sec"] = int(n6 / med6)
-            result["lookup_v6_resolved"] = int(agg["hits"])
+            lookup(v6df, "lookup_v6")
         spark.stop()
     finally:
         if cleanup:
             shutil.rmtree(db_dir, ignore_errors=True)
 
-    out_path = Path(__file__).resolve().parent / "mmdb_scale_result.json"
-    out_path.write_text(json.dumps(result, indent=2))
+    result["calib_end"] = cpu_calibration()
+    (Path(__file__).resolve().parent / db.result).write_text(json.dumps(result, indent=2))
     print(json.dumps(result))
 
 

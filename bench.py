@@ -1,31 +1,24 @@
 """Headline benchmark: one JSON line on stdout.
 
+    python bench.py [--queries a,b,...] [--plans DIR]
+
 Runs the engine's representative queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default all
 cores).  Each query is forced with a cheap aggregate so timing measures
-the full plan, not collect serialization.
+the full plan, not collect serialization.  ``--queries`` runs a subset,
+and only the inputs that subset reads are built; ``--plans DIR`` writes
+each query's formatted physical plan to ``DIR/<query>.txt``.
 
-Every query runs $SPARK_GRAFT_BENCH_REPS times (default 3) and the
-reported per-query number is the MEDIAN; per-rep raw times and the min
-ride along under "reps"/"min".
-
-Self-defending record protocol: the sandbox has noisy-neighbor phases
-where bursts arrive MID-RUN, so a clean gate-open does not imply a
-clean run (round 5's official record opened at load 0.2 and ended at
-10.2 — 3.3x the engine's quiet-window cost).  The whole measured body
-therefore RETRIES (up to $SPARK_GRAFT_BENCH_ATTEMPTS, default 4) until
-the start load AND the attempt's directly-measured external CPU
-(total /proc/stat busy minus our own process tree — immune to the
-bench's own burst, unlike loadavg-at-end) both clear their gates; the
-accepted attempt is the record.  If no clean window appears within the attempt
-budget, the record falls back to CROSS-ATTEMPT PER-QUERY MINIMA (the
-documented adjudication bound: minima bracket the true engine cost)
-and says so in "window_clean"/"adjudication" — the JSON itself always
-carries the evidence a reader needs, never prose elsewhere.
+Every query runs $SPARK_GRAFT_BENCH_REPS times (default 3).  The record
+holds the median per query, every rep and the minimum, plus the host
+(load at start and end, external cores busy during the run, a sha256
+calibration, see BENCH/sysload.py).  The host fields are recorded for
+the reader and never gate or repeat a run.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import math
 import os
@@ -33,13 +26,16 @@ import statistics
 import sys
 import tempfile
 import time
+from typing import Callable, NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
 import polars_iptools_spark as ip  # noqa: E402
+from BENCH.sysload import ExternalCpuMeter, cpu_calibration  # noqa: E402
 from polars_iptools_spark.operators import dedup, similarity  # noqa: E402
 from polars_iptools_spark.plans.pipeline import run_pipeline  # noqa: E402
 from polars_iptools_spark.plans.scoring import jaro_winkler_udf  # noqa: E402
@@ -47,210 +43,154 @@ from polars_iptools_spark.session import get_spark  # noqa: E402
 from polars_iptools_spark.sources.corpus import synth_corpus  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)))
 REPS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
-ATTEMPTS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_ATTEMPTS", "4")))
-GATE = float(os.environ.get("SPARK_GRAFT_BENCH_LOADGATE", "3.0"))
-# acceptance gate on average EXTERNAL cores busy during the attempt
-# (total /proc/stat busy minus our own process tree — loadavg-at-end is
-# contaminated by the bench's own burst, this is not).  1.5 of 32 cores
-# ≈ a 5% worst-case tax on a fully-parallel stage.
-EXT_GATE = float(os.environ.get("SPARK_GRAFT_BENCH_EXTGATE", "1.5"))
-# total wall budget for gate-waits + retries; one attempt always runs
-DEADLINE = float(os.environ.get("SPARK_GRAFT_BENCH_DEADLINE", "1800"))
-# minimum parallel sha256 throughput (MB/s, all cores) to START an
-# attempt: host epochs exist where parallel capacity halves (measured
-# 6,988 vs 16,250 MB/s an hour apart) while external CPU reads clean —
-# walls recorded in a degraded epoch say nothing about the engine.
-# Bounded by the same per-attempt maxwait, so a persistently degraded
-# host still produces a (calibration-stamped) record.  0 disables.
-CALIB_GATE = float(os.environ.get("SPARK_GRAFT_BENCH_CALIBGATE", "9000"))
-MAXMIND = entrymod._geolite_fixture_dir()
+PIPELINE_FILES = int(os.environ.get("SPARK_GRAFT_PIPELINE_FILES", "60000"))
 
 
-def force(df) -> int:
+def force(df: DataFrame) -> int:
     """Execute the whole plan, returning a row count."""
     return df.agg(F.count(F.lit(1))).collect()[0][0]
 
 
-from BENCH.sysload import (  # noqa: E402
-    cpu_calibration,
-    proc_tree_jiffies as _proc_tree_jiffies,
-    total_busy_jiffies as _total_busy_jiffies,
-)
-
-
-def wait_for_quiet_window(deadline_ts: float) -> float:
-    """Bounded wait for BOTH a low 1-min load and a healthy host epoch
-    (parallel sha256 calibration above CALIB_GATE) before timing
-    anything; capped per-attempt at
-    $SPARK_GRAFT_BENCH_LOADGATE_MAXWAIT seconds (default 240) and by
-    the overall deadline.  Returns seconds actually waited."""
-    max_wait = float(os.environ.get("SPARK_GRAFT_BENCH_LOADGATE_MAXWAIT", "240"))
-    if GATE <= 0:
-        return 0.0
-    t0 = time.monotonic()
-    while time.monotonic() - t0 < max_wait and time.monotonic() < deadline_ts:
-        if os.getloadavg()[0] > GATE:
-            time.sleep(5)
-            continue
-        if CALIB_GATE > 0:
-            key = f"sha256_{int(CPUS)}t_mb_s"
-            if cpu_calibration(int(CPUS)).get(key, 0) < CALIB_GATE:
-                time.sleep(20)
-                continue
-        break
-    return round(time.monotonic() - t0, 1)
-
-
-def setup_inputs(spark) -> dict:
-    """Cache the bench inputs once; reused verbatim by every attempt."""
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").cache()
-    li.count()
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").cache()
-    n_docs = docs.count()
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").cache()
-    n_emb = emb.count()
-    ips = entrymod._derived_ips(spark, SF_DIR).cache()
-    n_ips = ips.count()
-    texts = entrymod._derived_texts(spark, SF_DIR).cache()
-    texts.count()
-    n_files = int(os.environ.get("SPARK_GRAFT_PIPELINE_FILES", "60000"))
+def _corpus(spark) -> DataFrame:
     corpus, _ = synth_corpus(
         spark,
-        n_entities=n_files // 3,
+        n_entities=PIPELINE_FILES // 3,
         records_per_entity=3,
-        n_blocks=max(n_files // 600, 10),
+        n_blocks=max(PIPELINE_FILES // 600, 10),
     )
-    corpus = corpus.cache()
-    corpus.count()
-    return {
-        "docs": docs, "emb": emb, "ips": ips, "texts": texts,
-        "corpus": corpus, "n_docs": n_docs, "n_emb": n_emb,
-        "n_ips": n_ips, "n_files": n_files,
-    }
+    return corpus
 
 
-def run_attempt(spark, inp: dict) -> tuple[dict, dict, dict]:
-    """One full pass over the headline queries; returns
-    (timings, reps, extras)."""
-    docs, emb, ips, texts = inp["docs"], inp["emb"], inp["ips"], inp["texts"]
-    n_docs, n_emb, n_ips = inp["n_docs"], inp["n_emb"], inp["n_ips"]
+# Each input is read, cached and counted once, before any query is timed.
+INPUTS: dict[str, Callable] = {
+    "ips": lambda spark: entrymod._derived_ips(spark, SF_DIR),
+    "texts": lambda spark: entrymod._derived_texts(spark, SF_DIR),
+    "docs": lambda spark: spark.read.parquet(f"{SF_DIR}/documents.parquet"),
+    "emb": lambda spark: spark.read.parquet(f"{SF_DIR}/embeddings.parquet"),
+    "corpus": _corpus,
+}
 
-    timings: dict[str, float] = {}
-    reps: dict[str, list[float]] = {}
-    extras: dict[str, float] = {}
 
-    def bench(name, fn):
-        runs = []
-        for _ in range(REPS):
-            t0 = time.monotonic()
-            fn()
-            runs.append(round(time.monotonic() - t0, 3))
-        reps[name] = runs
-        timings[name] = round(statistics.median(runs), 3)
+class Query(NamedTuple):
+    """A bench query.  ``prepare(inp, rows, extras)`` runs once, untimed,
+    and returns the callable each rep times: it builds the DataFrame
+    that ``force`` executes.  ``rate`` names the extras key that gets the
+    first input's rows per second of the median."""
 
-    # scalar ops, pure JVM (rows: lineitem-derived)
-    bench(
-        "scalar_native",
-        lambda: force(
-            ips.select(
-                ip.is_valid("ip").alias("v"),
-                ip.is_private("ip").alias("p"),
-                ip.ipv4_to_numeric("ip").alias("n"),
-            ).where("v or p or n > 0")
-        ),
-    )
-    extras["scalar_native_rows_per_sec"] = round(n_ips / timings["scalar_native"])
+    inputs: tuple[str, ...]
+    prepare: Callable
+    rate: str | None
 
-    # Arrow-UDF typed round-trip
-    bench(
-        "typed_roundtrip_udf",
-        lambda: force(
-            ips.select(ip.to_string(ip.to_address("ip")).alias("c")).where(
-                "c is not null"
-            )
-        ),
-    )
 
-    # CIDR membership (mixed family -> broadcast searchsorted UDF)
+QUERIES: dict[str, Query] = {}
+
+
+def query(*inputs: str, rate: str | None = None):
+    def register(prepare):
+        QUERIES[prepare.__name__] = Query(inputs, prepare, rate)
+        return prepare
+
+    return register
+
+
+# scalar ops, pure JVM (rows: lineitem-derived)
+@query("ips", rate="scalar_native_rows_per_sec")
+def scalar_native(inp, rows, extras):
+    return lambda: inp["ips"].select(
+        ip.is_valid("ip").alias("v"),
+        ip.is_private("ip").alias("p"),
+        ip.ipv4_to_numeric("ip").alias("n"),
+    ).where("v or p or n > 0")
+
+
+# Arrow-UDF typed round-trip
+@query("ips")
+def typed_roundtrip_udf(inp, rows, extras):
+    return lambda: inp["ips"].select(
+        ip.to_string(ip.to_address("ip")).alias("c")
+    ).where("c is not null")
+
+
+# CIDR membership (mixed family -> searchsorted UDF)
+@query("ips", rate="is_in_rows_per_sec")
+def is_in_udf(inp, rows, extras):
     nets = ["8.8.8.0/24", "10.0.0.0/8", "100.64.0.0/10", "2606:4700::/32"] + [
         f"{o}.0.0.0/8" for o in range(20, 60)
     ]
-    bench("is_in_udf", lambda: force(ips.where(ip.is_in("ip", nets))))
-    extras["is_in_rows_per_sec"] = round(n_ips / timings["is_in_udf"])
+    return lambda: inp["ips"].where(ip.is_in("ip", nets))
 
-    # extraction, JVM-side v4 path over indicator-salted documents
-    bench(
-        "extract_ips_native",
-        lambda: force(
-            texts.select(F.explode(ip.extract_public_ips("itext")).alias("x"))
-        ),
-    )
-    extras["extract_docs_per_sec"] = round(n_docs / timings["extract_ips_native"])
 
-    # extraction, Arrow-UDF v6 path
-    bench(
-        "extract_ips_v6_udf",
-        lambda: force(
-            texts.select(F.explode(ip.extract_ips("itext", ipv6=True)).alias("x"))
-        ),
+# extraction, JVM-side v4 path over indicator-salted documents
+@query("texts", rate="extract_docs_per_sec")
+def extract_ips_native(inp, rows, extras):
+    return lambda: inp["texts"].select(
+        F.explode(ip.extract_public_ips("itext")).alias("x")
     )
 
-    # geo enrichment (broadcast interval table)
-    bench(
-        "geoip_full",
-        lambda: force(
-            ips.select(ip.geoip.full("ip", db_dir=MAXMIND).alias("g")).where(
-                "g.asnnum is not null"
-            )
-        ),
-    )
-    extras["geoip_rows_per_sec"] = round(n_ips / timings["geoip_full"])
 
-    # dedup family over documents
-    bench(
-        "minhash_lsh",
-        lambda: force(
-            dedup.minhash_lsh_pairs(
-                docs, "doc_id", "text", k=3, num_hashes=32, bands=8, threshold=0.5
-            )
-        ),
-    )
-    bench(
-        "simhash_pairs",
-        lambda: force(dedup.simhash_pairs(docs, "doc_id", "text", 3, 4)),
+# extraction, Arrow-UDF v6 path
+@query("texts")
+def extract_ips_v6_udf(inp, rows, extras):
+    return lambda: inp["texts"].select(
+        F.explode(ip.extract_ips("itext", ipv6=True)).alias("x")
     )
 
-    # ANN top-k over embeddings
-    q = emb.where("vec_id < 8").select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    bench("ann_topk", lambda: force(similarity.brute_force_topk(emb, q, k=10)))
 
-    # banded multi-table embedding LSH (bucket UDF + guarded pair join).
-    # n_planes scales with the corpus so expected bucket occupancy stays
-    # ~32 vectors (standard LSH sizing): a FIXED plane count at 10x the
-    # vectors means 100x the candidate pairs per bucket, and the bench
-    # measures the mis-parameterization, not the operator.  At the
-    # sf0.1 reference scale (2,000 vectors) this resolves to the
-    # historical n_planes=6, keeping round-over-round comparability.
-    n_planes = max(6, math.ceil(math.log2(max(inp["n_emb"], 64) / 32)))
+# geo enrichment (broadcast interval table) over the in-repo GeoLite2
+# test pair
+@query("ips", rate="geoip_rows_per_sec")
+def geoip_full(inp, rows, extras):
+    db_dir = entrymod._geolite_fixture_dir()
+    return lambda: inp["ips"].select(
+        ip.geoip.full("ip", db_dir=db_dir).alias("g")
+    ).where("g.asnnum is not null")
+
+
+# dedup family over documents
+@query("docs")
+def minhash_lsh(inp, rows, extras):
+    return lambda: dedup.minhash_lsh_pairs(
+        inp["docs"], "doc_id", "text", k=3, num_hashes=32, bands=8, threshold=0.5
+    )
+
+
+@query("docs")
+def simhash_pairs(inp, rows, extras):
+    return lambda: dedup.simhash_pairs(inp["docs"], "doc_id", "text", 3, 4)
+
+
+# ANN top-k over embeddings
+@query("emb")
+def ann_topk(inp, rows, extras):
+    emb = inp["emb"]
+    q = emb.where("vec_id < 8").select(F.col("vec_id").alias("query_id"), "embedding")
+    return lambda: similarity.brute_force_topk(emb, q, k=10)
+
+
+# banded multi-table embedding LSH (bucket UDF + guarded pair join).
+# n_planes scales with the corpus so expected bucket occupancy stays
+# ~32 vectors (standard LSH sizing): a FIXED plane count at 10x the
+# vectors means 100x the candidate pairs per bucket, and the bench
+# measures the mis-parameterization, not the operator.  At the sf0.1
+# reference scale (2,000 vectors) this resolves to n_planes=6.
+@query("emb")
+def ann_lsh_banded(inp, rows, extras):
+    emb = inp["emb"]
+    n_planes = max(6, math.ceil(math.log2(max(rows["emb"], 64) / 32)))
     dim = len(emb.select("embedding").first()[0])
-    bench(
-        "ann_lsh_banded",
-        lambda: force(
-            similarity.lsh_near_duplicates(
-                emb, dim=dim, threshold=0.3, n_tables=16, n_planes=n_planes
-            )
-        ),
-    )
     extras["ann_lsh_n_planes"] = n_planes
+    return lambda: similarity.lsh_near_duplicates(
+        emb, dim=dim, threshold=0.3, n_tables=16, n_planes=n_planes
+    )
 
-    # vectorized Jaro-Winkler kernel: 600k path-shaped pairs (~350k
-    # unique after the batch factorize)
+
+# vectorized Jaro-Winkler kernel: one path-shaped pair per derived IP row
+@query("ips", rate="jw_pairs_per_sec")
+def scoring_jw_udf(inp, rows, extras):
     r = F.col("rid")
-    jw_pairs = ips.select(
+    jw_pairs = inp["ips"].select(
         F.concat(
             F.lit("src/module"), (r % 37).cast("string"),
             F.lit("/handler"), (r % 97).cast("string"), F.lit(".py"),
@@ -260,206 +200,118 @@ def run_attempt(spark, inp: dict) -> tuple[dict, dict, dict]:
             F.lit("/handler"), ((r + 13) % 97).cast("string"), F.lit("_v2.py"),
         ).alias("s_b"),
     )
-    bench(
-        "scoring_jw_udf",
-        lambda: force(
-            jw_pairs.select(jaro_winkler_udf("s_a", "s_b").alias("jw")).where(
-                "jw >= 0"
-            )
-        ),
-    )
-    extras["jw_pairs_per_sec"] = round(n_ips / timings["scoring_jw_udf"])
-
-    # end-to-end record-linkage pipeline on the synthetic corpus;
-    # each rep gets a FRESH checkpoint dir (a reused one would resume
-    # instantly and time nothing)
-    def _pipeline_rep():
-        res = run_pipeline(spark, inp["corpus"], tempfile.mkdtemp(prefix="bench_plc_"))
-        res["clusters"].agg(F.count(F.lit(1))).collect()
-
-    bench("pipeline_e2e", _pipeline_rep)
-    extras["pipeline_files_per_sec"] = round(
-        inp["n_files"] / timings["pipeline_e2e"], 1
+    return lambda: jw_pairs.select(jaro_winkler_udf("s_a", "s_b").alias("jw")).where(
+        "jw >= 0"
     )
 
-    # Full-parallelism engine numbers (extras only — the 12 headline
-    # walls above stay round-over-round comparable).  The driver's
-    # sf0.1 parquet is a single row-group, so the cached inputs above
-    # have ~3 partitions and every per-row wall is a 3-core number; the
-    # sf1.0 ladder (BENCH/BASELINE.md §3b) showed the same operators
-    # running 10x the rows in the same wall once partitioned.  These
-    # reps measure the operators on the SAME data spread across all
-    # cores.
-    def _med(fn):
-        runs = []
-        for _ in range(REPS):
-            t0 = time.monotonic()
-            fn()
-            runs.append(time.monotonic() - t0)
-        return statistics.median(runs)
 
-    ips_par = ips.repartition(int(CPUS)).cache()
-    ips_par.count()
-    w = _med(
-        lambda: force(
-            ips_par.select(
-                ip.is_valid("ip").alias("v"),
-                ip.is_private("ip").alias("p"),
-                ip.ipv4_to_numeric("ip").alias("n"),
-            ).where("v or p or n > 0")
+# end-to-end record-linkage pipeline on the synthetic corpus; each rep
+# gets a FRESH checkpoint dir (a reused one would resume instantly and
+# time nothing) and records its StageRunner stage walls
+@query("corpus", rate="pipeline_files_per_sec")
+def pipeline_e2e(inp, rows, extras):
+    walls = extras.setdefault("pipeline_stage_walls", [])
+
+    def rep():
+        res = run_pipeline(
+            inp["corpus"].sparkSession, inp["corpus"], tempfile.mkdtemp(prefix="bench_plc_")
         )
+        walls.append({k: v.get("wall_sec") for k, v in res["metrics"].items()})
+        return res["clusters"]
+
+    return rep
+
+
+def parse_args(argv=None) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument(
+        "--queries", default=",".join(QUERIES),
+        help="comma-separated subset of: " + ", ".join(QUERIES),
     )
-    extras["scalar_par_rows_per_sec"] = round(n_ips / w)
-    w = _med(
-        lambda: force(
-            ips_par.select(ip.geoip.full("ip", db_dir=MAXMIND).alias("g")).where(
-                "g.asnnum is not null"
-            )
-        )
-    )
-    extras["geoip_par_rows_per_sec"] = round(n_ips / w)
-    ips_par.unpersist()
-
-    texts_par = texts.repartition(int(CPUS)).cache()
-    texts_par.count()
-    w = _med(
-        lambda: force(
-            texts_par.select(F.explode(ip.extract_ips("itext", ipv6=True)).alias("x"))
-        )
-    )
-    extras["extract_v6_par_docs_per_sec"] = round(n_docs / w)
-    texts_par.unpersist()
-
-    return timings, reps, extras
+    ap.add_argument("--plans", metavar="DIR", help="write each query's formatted plan here")
+    args = ap.parse_args(argv)
+    args.queries = [q for q in args.queries.split(",") if q]
+    unknown = [q for q in args.queries if q not in QUERIES]
+    if unknown:
+        ap.error(f"unknown queries {unknown}; valid: {', '.join(QUERIES)}")
+    return args
 
 
-def main() -> None:
-    deadline_ts = time.monotonic() + DEADLINE
+def setup_inputs(spark, names: set[str]) -> tuple[dict, dict]:
+    """Read, cache and count the named inputs, in ``INPUTS`` order."""
+    inp, rows = {}, {}
+    for name in INPUTS:
+        if name in names:
+            inp[name] = INPUTS[name](spark).cache()
+            rows[name] = inp[name].count()
+    return inp, rows
+
+
+def main(argv=None) -> None:
+    args = parse_args(argv)
+    selected = {name: QUERIES[name] for name in QUERIES if name in args.queries}
     spark = get_spark(
         app_name="bench",
         master=f"local[{CPUS}]",
-        shuffle_partitions=int(CPUS),
+        shuffle_partitions=CPUS,
         extra_conf={"spark.ui.enabled": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
     # executors must import the package regardless of the launch cwd
     entrymod._ensure_importable(spark)
-    inp = setup_inputs(spark)
+    inp, rows = setup_inputs(spark, {i for q in selected.values() for i in q.inputs})
+    if args.plans:
+        os.makedirs(args.plans, exist_ok=True)
 
-    attempts: list[dict] = []
-    accepted: dict | None = None
-    hz = os.sysconf("SC_CLK_TCK")
-    for i in range(ATTEMPTS):
-        gate_waited = wait_for_quiet_window(deadline_ts)
-        load_at_start = round(os.getloadavg()[0], 2)
-        # fixed pure-CPU probe: host epochs exist where every wall
-        # inflates uniformly ~1.35x while external CPU reads clean
-        # (memory-bandwidth / SMT contention the guest cannot see) —
-        # the parallel calibration number lets a reader normalize this
-        # record against another epoch's (BENCH/sysload.py)
-        calib = cpu_calibration(int(CPUS))
-        busy0, tree0 = _total_busy_jiffies(), _proc_tree_jiffies()
-        t_run0 = time.monotonic()
-        timings, reps, extras = run_attempt(spark, inp)
-        elapsed = time.monotonic() - t_run0
-        busy1, tree1 = _total_busy_jiffies(), _proc_tree_jiffies()
-        load_at_end = [round(x, 2) for x in os.getloadavg()[:2]]
-        # average EXTERNAL cores busy during the attempt: total machine
-        # busy minus our own process tree (python + Spark JVM + Arrow
-        # workers).  Unlike loadavg-at-end this is not contaminated by
-        # the bench's own burst and has no decay lag — it is the direct
-        # measurement of the neighbor interference the gate exists for.
-        ext_cores = max(0.0, (busy1 - busy0) - (tree1 - tree0)) / (elapsed * hz)
-        att = {
-            "attempt": i + 1,
-            "total": round(sum(timings.values()), 3),
-            "load_at_start": load_at_start,
-            "load_at_end": load_at_end,
-            "external_cores_avg": round(ext_cores, 2),
-            "cpu_calibration": calib,
-            "loadgate_waited_s": gate_waited,
-            "timings": timings,
-            "reps": reps,
-            "extras": extras,
-        }
-        attempts.append(att)
-        if load_at_start <= GATE and ext_cores <= EXT_GATE:
-            accepted = att
-            break
-        if time.monotonic() >= deadline_ts:
-            break
+    timings: dict[str, float] = {}
+    reps: dict[str, list[float]] = {}
+    extras: dict = {}
 
-    window_clean = accepted is not None
-    if accepted is None:
-        # No clean window: cross-attempt per-query minima bracket the
-        # true engine cost (documented adjudication protocol,
-        # BENCH/BASELINE.md §3); extras come from the least-loaded
-        # attempt so derived throughputs stay self-consistent.
-        minima = {
-            q: min(min(a["reps"][q]) for a in attempts)
-            for q in attempts[0]["timings"]
-        }
-        least_loaded = min(attempts, key=lambda a: a["external_cores_avg"])
-        accepted = {
-            "total": round(sum(minima.values()), 3),
-            "load_at_start": least_loaded["load_at_start"],
-            "load_at_end": least_loaded["load_at_end"],
-            "external_cores_avg": least_loaded["external_cores_avg"],
-            "cpu_calibration": least_loaded["cpu_calibration"],
-            "loadgate_waited_s": least_loaded["loadgate_waited_s"],
-            "timings": minima,
-            "reps": {q: [v for a in attempts for v in a["reps"][q]] for q in minima},
-            "extras": least_loaded["extras"],
-        }
+    def bench(name: str, q: Query) -> None:
+        build = q.prepare(inp, rows, extras)
+        runs = []
+        for _ in range(REPS):
+            t0 = time.monotonic()
+            df = build()
+            force(df)
+            runs.append(round(time.monotonic() - t0, 3))
+        reps[name] = runs
+        timings[name] = round(statistics.median(runs), 3)
+        if q.rate:
+            extras[q.rate] = round(rows[q.inputs[0]] / timings[name], 1)
+        if args.plans:
+            plan = spark._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
+            with open(os.path.join(args.plans, f"{name}.txt"), "w") as fh:
+                fh.write(plan)
+
+    load_at_start = round(os.getloadavg()[0], 2)
+    calib = cpu_calibration(CPUS)
+    with ExternalCpuMeter() as meter:
+        for name, q in selected.items():
+            bench(name, q)
+    load_at_end = [round(x, 2) for x in os.getloadavg()[:2]]
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     print(
         json.dumps(
             {
                 "metric": "headline_queries_total",
-                "value": accepted["total"],
+                "value": round(sum(timings.values()), 3),
                 "unit": "sec",
-                "queries": accepted["timings"],
+                "queries": timings,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-                "cpus": int(CPUS),
-                "docs": inp["n_docs"],
-                "derived_ip_rows": inp["n_ips"],
-                "rep_protocol": (
-                    f"median of {REPS}"
-                    if window_clean
-                    else f"cross-attempt minima over {len(attempts)} attempts x {REPS} reps"
-                ),
-                # a clean start does not imply a clean run in this
-                # shared sandbox (neighbor bursts arrive mid-flight) —
-                # the record is only accepted when the start load AND
-                # the directly-measured external CPU during the run
-                # clear the gates, else the whole body retries
-                "window_clean": window_clean,
-                "adjudication": (
-                    "accepted attempt: start load and measured external "
-                    "CPU during the run both under gate"
-                    if window_clean
-                    else "NO clean window in the attempt budget; per-query "
-                    "cross-attempt minima (lower-bound bracket of engine cost)"
-                ),
-                "load_at_start": accepted["load_at_start"],
-                "load_at_end": accepted["load_at_end"],
-                "external_cores_avg": accepted["external_cores_avg"],
-                "cpu_calibration": accepted["cpu_calibration"],
-                "loadgate_waited_s": accepted["loadgate_waited_s"],
-                "attempts": len(attempts),
-                "attempt_history": [
-                    {k: a[k] for k in (
-                        "attempt", "total", "load_at_start",
-                        "load_at_end", "external_cores_avg",
-                        "loadgate_waited_s",
-                    )}
-                    for a in attempts
-                ],
-                "gates": {"start_load": GATE, "external_cores": EXT_GATE},
-                "reps": accepted["reps"],
-                "min": {k: min(v) for k, v in accepted["reps"].items()},
-                "extras": accepted["extras"],
+                "cpus": CPUS,
+                "input_rows": rows,
+                "rep_protocol": f"median of {REPS}",
+                "load_at_start": load_at_start,
+                "load_at_end": load_at_end,
+                "external_cores_avg": meter.external_cores_avg,
+                "cpu_calibration": calib,
+                "reps": reps,
+                "min": {k: min(v) for k, v in reps.items()},
+                "extras": extras,
             }
         )
     )

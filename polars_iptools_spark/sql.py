@@ -31,18 +31,12 @@ def column_sql(col: Column) -> str:
     tree's own ``sql()`` form).  Valid for pure-Catalyst expressions;
     a Column wrapping a Python UDF renders a name SQL cannot resolve —
     use :func:`register_sql_functions` for those ops instead."""
-    jc = col._jc
-    try:
-        # Spark 3.x: Column exposes the Catalyst Expression directly
-        text = jc.expr().sql()
-    except Exception:
-        # Spark 4.x classic: the JVM Column wraps a ColumnNode; the
-        # session's converter lowers it to a Catalyst Expression whose
-        # sql() form is parseable text (node().sql() is display-only —
-        # it renders prefix operators SQL cannot parse)
-        spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
-        text = spark._jsparkSession.expression(jc).sql()
-    return _rewrite_lambdas(text)
+    # the JVM Column wraps a ColumnNode; the session's converter lowers
+    # it to a Catalyst Expression whose sql() form is parseable text
+    # (node().sql() is display-only: it renders prefix operators SQL
+    # cannot parse)
+    spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
+    return _rewrite_lambdas(spark._jsparkSession.expression(col._jc).sql())
 
 
 def _rewrite_lambdas(text: str) -> str:

@@ -1,0 +1,56 @@
+"""bench.py's command line and query registry, checked without Spark."""
+
+import importlib.util
+import subprocess
+import sys
+from pathlib import Path
+
+import pytest
+
+REPO = Path(__file__).resolve().parents[1]
+DOC_QUERIES = ["minhash_lsh", "simhash_pairs", "ann_topk", "ann_lsh_banded"]
+
+
+@pytest.fixture(scope="module")
+def bench():
+    spec = importlib.util.spec_from_file_location("bench", REPO / "bench.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_import_has_no_side_effects():
+    # the GeoLite2 fixture is written, and Spark started, only by a run
+    code = (
+        "import __spark_entry__ as e\n"
+        "def boom(): raise AssertionError('GeoLite2 fixture resolved at import')\n"
+        "e._geolite_fixture_dir = boom\n"
+        "import bench\n"
+        "from pyspark import SparkContext\n"
+        "assert SparkContext._active_spark_context is None\n"
+    )
+    subprocess.run([sys.executable, "-c", code], cwd=REPO, check=True, timeout=300)
+
+
+def test_unknown_query_fails_listing_valid_names(bench, capsys):
+    with pytest.raises(SystemExit) as exc:
+        bench.parse_args(["--queries", "scalar_native,no_such_query"])
+    assert exc.value.code != 0
+    err = capsys.readouterr().err
+    assert "no_such_query" in err
+    assert all(name in err for name in bench.QUERIES)
+
+
+def test_queries_subset_parses(bench):
+    args = bench.parse_args(["--queries", ",".join(DOC_QUERIES), "--plans", "p"])
+    assert args.queries == DOC_QUERIES and args.plans == "p"
+    assert bench.parse_args([]).queries == list(bench.QUERIES)
+
+
+def test_declared_inputs_are_input_builders(bench):
+    assert len(bench.QUERIES) == 12
+    for name, q in bench.QUERIES.items():
+        assert q.inputs and set(q.inputs) <= set(bench.INPUTS), name
+    # the document/embedding operators read neither lineitem nor the corpus
+    doc_inputs = {i for name in DOC_QUERIES for i in bench.QUERIES[name].inputs}
+    assert doc_inputs == {"docs", "emb"}

@@ -4,8 +4,8 @@ the Spark enrichment path, spot-checked against the synthesizer's
 arithmetic oracle and stdlib ``ipaddress`` containment.
 
 (The full 1.9M-network stress with decode wall / broadcast size /
-throughput lives in BENCH/mmdb_scale.py; this test keeps the same
-machinery permanently green at a CI-sized 120k networks.)
+throughput is ``BENCH/mmdb_scale.py --db geolite``; this test keeps the
+same machinery permanently green at a CI-sized 120k networks.)
 """
 
 import ipaddress

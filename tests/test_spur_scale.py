@@ -4,8 +4,8 @@ through ``spur.full`` on Spark, spot-checked against the synthesizer's
 arithmetic tiling oracle.
 
 (The full 1.5M-entry stress with decode wall / broadcast size /
-throughput lives in BENCH/spur_scale.py; this test keeps the same
-machinery permanently green at a CI-sized 100k entries — geoip got
+throughput is ``BENCH/mmdb_scale.py --db spur``; this test keeps the
+same machinery permanently green at a CI-sized 100k entries — geoip got
 this treatment in round 4, spur shares the FlatTable code path but
 deserves its own measured axis, VERDICT r5 Missing #3.)
 """
