@@ -11,17 +11,19 @@ each query's formatted physical plan to ``DIR/<query>.txt``.
 
 Every query runs $SPARK_GRAFT_BENCH_REPS times (default 3).  The record
 holds the median per query, every rep and the minimum, plus the host
-(load at start and end, external cores busy during the run, a sha256
-calibration, see BENCH/sysload.py).  The host fields are recorded for
-the reader and never gate or repeat a run.
+(load at start and end, and external cores busy during the run, see
+BENCH/sysload.py).  The host fields are recorded for the reader and
+never gate or repeat a run.
 """
 
 from __future__ import annotations
 
 import argparse
+import atexit
 import json
 import math
 import os
+import shutil
 import statistics
 import sys
 import tempfile
@@ -35,7 +37,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
 import polars_iptools_spark as ip  # noqa: E402
-from BENCH.sysload import ExternalCpuMeter, cpu_calibration  # noqa: E402
+from BENCH.sysload import ExternalCpuMeter  # noqa: E402
 from polars_iptools_spark.operators import dedup, similarity  # noqa: E402
 from polars_iptools_spark.plans.pipeline import run_pipeline  # noqa: E402
 from polars_iptools_spark.plans.scoring import jaro_winkler_udf  # noqa: E402
@@ -207,14 +209,18 @@ def scoring_jw_udf(inp, rows, extras):
 
 # end-to-end record-linkage pipeline on the synthetic corpus; each rep
 # gets a FRESH checkpoint dir (a reused one would resume instantly and
-# time nothing) and records its StageRunner stage walls
+# time nothing) and records its StageRunner stage walls.  The dirs are
+# removed at exit, not after each rep: force() reads the clusters from
+# them after rep() returns, inside the timed span.
 @query("corpus", rate="pipeline_files_per_sec")
 def pipeline_e2e(inp, rows, extras):
     walls = extras.setdefault("pipeline_stage_walls", [])
+    root = tempfile.mkdtemp(prefix="bench_plc_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
 
     def rep():
         res = run_pipeline(
-            inp["corpus"].sparkSession, inp["corpus"], tempfile.mkdtemp(prefix="bench_plc_")
+            inp["corpus"].sparkSession, inp["corpus"], tempfile.mkdtemp(dir=root)
         )
         walls.append({k: v.get("wall_sec") for k, v in res["metrics"].items()})
         return res["clusters"]
@@ -287,7 +293,6 @@ def main(argv=None) -> None:
                 fh.write(plan)
 
     load_at_start = round(os.getloadavg()[0], 2)
-    calib = cpu_calibration(CPUS)
     with ExternalCpuMeter() as meter:
         for name, q in selected.items():
             bench(name, q)
@@ -308,7 +313,6 @@ def main(argv=None) -> None:
                 "load_at_start": load_at_start,
                 "load_at_end": load_at_end,
                 "external_cores_avg": meter.external_cores_avg,
-                "cpu_calibration": calib,
                 "reps": reps,
                 "min": {k: min(v) for k, v in reps.items()},
                 "extras": extras,

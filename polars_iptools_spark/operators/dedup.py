@@ -14,29 +14,30 @@ the join), which is the standard skew guard for document dedup.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from ..functions._par import ensure_parallelism, pinned_partitions
 
 
 class CacheScope:
-    """Owner-scoped release for the intermediate frames this module
-    persists (minhash shingle sets, every :func:`_bucket_pairs` frame).
+    """Owner-scoped release for the one intermediate frame this module
+    persists: the minhash shingle sets, which feed three differently
+    shaped consumers (signatures, and both sides of the verification
+    join).
 
-    The one cache contract: those frames always persist.  The handles
-    are internal to the returned lazy plans, so the pair functions
-    cannot unpersist them after materialization — they stay in Spark's
-    CacheManager until LRU eviction or session end, unless released
-    through a scope or ``spark.catalog.clearCache()``.  Batch drivers
-    processing many corpora in one session pass a scope and release it
-    once the result is materialized::
+    The handle is internal to the returned lazy plan, so
+    :func:`minhash_lsh_pairs` cannot unpersist it after
+    materialization — it stays in Spark's CacheManager until LRU
+    eviction or session end, unless released through a scope or
+    ``spark.catalog.clearCache()``.  Batch drivers processing many
+    corpora in one session pass a scope and release it once the result
+    is materialized::
 
         with CacheScope() as caches:
-            simhash_pairs(df, "id", "text", caches=caches).write.parquet(p)
-        # persisted signature blocks freed here
-
-    ``plans/pipeline.py`` releases its stage-02 persist through one too.
+            minhash_lsh_pairs(df, "id", "text", caches=caches).write.parquet(p)
+        # persisted shingle sets freed here
     """
 
     def __init__(self) -> None:
@@ -59,13 +60,6 @@ class CacheScope:
 
     def __exit__(self, *exc) -> None:
         self.release()
-
-
-def _persist(df: DataFrame, caches: "CacheScope | None") -> DataFrame:
-    from pyspark.storagelevel import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    return caches.add(df) if caches is not None else df
 
 
 def normalized(text: Column) -> Column:
@@ -105,16 +99,13 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 def _drop_hot_keys(df: DataFrame, keys: list[str], max_rows: int | None) -> DataFrame:
     """The one skew guard: drop the rows whose ``keys`` value more than
     ``max_rows`` rows hold (a key shared by k rows makes a self-join on
-    it emit O(k²) pairs).  The hot set stays distributed; only the
-    anti-join side is broadcast.  Output leads with ``keys``."""
+    it emit O(k²) pairs).  One ``count() OVER (PARTITION BY keys)``
+    pass: the input is read once, and the output stays hash-partitioned
+    on ``keys``, so a self-join on them needs no further exchange."""
     if not max_rows:
         return df
-    hot = (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("c"))
-        .where(F.col("c") > max_rows)
-    )
-    return df.join(F.broadcast(hot.select(*keys)), keys, "left_anti")
+    n = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    return df.withColumn("_n", n).where(F.col("_n") <= max_rows).drop("_n")
 
 
 def _shingle_index(
@@ -197,7 +188,6 @@ def _minhash_sig_array(shs: Column, num_hashes: int) -> Column:
 def _bucket_pairs(
     buckets: DataFrame,
     max_bucket_size: int | None,
-    caches: CacheScope | None = None,
     shuffle_pairs: int | None = None,
     verify: tuple[str, Column, Column] | None = None,
 ) -> DataFrame:
@@ -211,14 +201,10 @@ def _bucket_pairs(
     computed from the carried ``x.*`` / ``y.*`` columns and rows failing
     ``keep`` dropped BEFORE the pair dedup.
 
-    The bucket frame always persists: it feeds the hot-bucket histogram
-    and both self-join sides, and its producing subtree (a signature
-    fold or the hyperplane-matmul Arrow UDF) would otherwise run once
-    per consumer (3x in the r07 plan audit).  Release follows the
-    :class:`CacheScope` contract."""
-    buckets = _drop_hot_keys(
-        _persist(buckets, caches), ["band", "bucket"], max_bucket_size
-    )
+    Nothing persists: both self-join sides are the same guarded
+    subtree, so AQE reuses its one exchange and the producing subtree
+    (a signature fold or the hyperplane-matmul Arrow UDF) runs once."""
+    buckets = _drop_hot_keys(buckets, ["band", "bucket"], max_bucket_size)
     cols = [F.col("x.doc").alias("doc_a"), F.col("y.doc").alias("doc_b")]
     if verify:
         name, value, keep = verify
@@ -262,9 +248,9 @@ def minhash_lsh_pairs(
     """MinHash + banded LSH candidate generation, then exact Jaccard
     verification of candidates only (shingle→minhash→band→bucket-join).
 
-    The shingle-set frame and the bucket frame always persist; pass a
-    :class:`CacheScope` as ``caches`` to release both after
-    materialization, or call ``spark.catalog.clearCache()``.
+    The shingle-set frame always persists; pass a :class:`CacheScope`
+    as ``caches`` to release it after materialization, or call
+    ``spark.catalog.clearCache()``.
     """
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
@@ -277,18 +263,21 @@ def minhash_lsh_pairs(
         )
     else:
         sets = shingle_sets(df, id_col, text_col, k)
-    # the (filtered) shingle-set subtree feeds signatures, both sides of
-    # the bucket self-join and both sides of the verification join —
-    # without a materialization point Spark recomputes it per reference
-    # (measured 5x on large corpora)
-    sets = _persist(sets, caches)
+    # the (filtered) shingle-set subtree feeds the signatures and both
+    # sides of the verification join, three differently shaped
+    # consumers that share no exchange — without a materialization
+    # point Spark recomputes it per reference (measured 5x on large
+    # corpora)
+    sets = sets.persist(StorageLevel.MEMORY_AND_DISK)
+    if caches is not None:
+        caches.add(sets)
     sigs = sets.select(
         "doc", "shs", _minhash_sig_array(F.col("shs"), num_hashes).alias("_sig")
     )
     # band hash = xxhash64 of the band's signature-array SLICE (xxhash64
     # hashes arrays structurally) — no per-element column extraction;
     # ONE posexplode pass instead of a bands-way union, so the signature
-    # subtree is evaluated once per join side, not once per band
+    # subtree is evaluated once, not once per band
     band_hashes = F.array(
         *[
             F.xxhash64(F.slice("_sig", b * rows_per_band + 1, rows_per_band))
@@ -298,7 +287,7 @@ def minhash_lsh_pairs(
     buckets = sigs.select(
         "doc", F.posexplode(band_hashes).alias("band", "bucket")
     )
-    cand = _bucket_pairs(buckets, max_bucket_size, caches=caches)
+    cand = _bucket_pairs(buckets, max_bucket_size)
     # verify candidates with exact shingle Jaccard — join the per-doc
     # shingle *sets* onto the (small) candidate list and intersect
     # per-pair, instead of re-joining the full inverted index (which
@@ -387,9 +376,9 @@ def simhash_pairs(
 
     The 8-byte signature RIDES THROUGH the bucket self-join (carry small
     metadata instead of re-joining it), so hamming is verified before
-    the pair dedup with no join back to the signatures.  The segment
-    frame always persists; release it through ``caches``
-    (:class:`CacheScope`) or ``spark.catalog.clearCache()``."""
+    the pair dedup with no join back to the signatures.  It persists
+    nothing: ``caches`` is kept for callers that pass a scope, and
+    nothing is added to it."""
     assert bands > max_hamming, "pigeonhole needs bands > max_hamming"
     sigs = simhash(df, id_col, text_col)
     seg_bits = 64 // bands
@@ -408,7 +397,6 @@ def simhash_pairs(
     return _bucket_pairs(
         segs,
         max_bucket_size,
-        caches=caches,
         verify=("hamming", hamming, F.col("hamming") <= max_hamming),
     )
 

@@ -5,14 +5,14 @@ distribution is Zipf-skewed by construction (one ASN / one /24 can
 dominate), and AQE's skew handling covers joins but not the groupBy —
 so oversized blocks are handled explicitly:
 
-1. a cheap ``groupBy(block_key).count()`` histogram is computed first;
-2. blocks above ``max_block_records`` get a *recall-preserving key
-   refinement*: the full indicator IP is appended to the key.  Records
-   of the same entity always share the exact indicator, so no true
-   pair is lost, while the quadratic pair blow-up of a hot /24 is cut
-   to per-IP groups;
-3. the histogram is broadcast (it is tiny relative to the corpus) and
-   the pair self-join runs on the refined key with AQE skew-join on.
+1. each row's block size is one ``count() OVER (PARTITION BY
+   block_key)`` window over the blocked frame, read once;
+2. rows of blocks above ``max_block_records`` get a *recall-preserving
+   key refinement*: the full indicator IP is appended to the key.
+   Records of the same entity always share the exact indicator, so no
+   true pair is lost, while the quadratic pair blow-up of a hot /24 is
+   cut to per-IP groups;
+3. the pair self-join runs on the refined key with AQE skew-join on.
 
 This is the measured-salt strategy of SURVEY.md §4.2: the refinement
 *is* the salt, chosen from data, not guessed.
@@ -20,7 +20,7 @@ This is the measured-salt strategy of SURVEY.md §4.2: the refinement
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import iptools
@@ -177,24 +177,17 @@ def with_block_key(indicators: DataFrame, asn_col: Column | None = None) -> Data
     )
 
 
-def block_histogram(blocked: DataFrame) -> DataFrame:
-    return blocked.groupBy("block_key").agg(F.count(F.lit(1)).alias("block_rows"))
-
-
 def refine_oversized_blocks(
-    blocked: DataFrame, histogram: DataFrame, max_block_records: int = 256
+    blocked: DataFrame, max_block_records: int = 256
 ) -> DataFrame:
-    hot = histogram.where(F.col("block_rows") > max_block_records)
-    return (
-        blocked.join(F.broadcast(hot), "block_key", "left")
-        .withColumn(
-            "block_key",
-            F.when(
-                F.col("block_rows").isNotNull(),
-                F.concat_ws("|", "block_key", "ip"),
-            ).otherwise(F.col("block_key")),
-        )
-        .drop("block_rows")
+    """Append ``|ip`` to the key of every row whose block holds more
+    than ``max_block_records`` rows (the module docstring's steps 1-2)."""
+    n = F.count(F.lit(1)).over(Window.partitionBy("block_key"))
+    return blocked.withColumn(
+        "block_key",
+        F.when(n > max_block_records, F.concat_ws("|", "block_key", "ip")).otherwise(
+            F.col("block_key")
+        ),
     )
 
 

@@ -5,12 +5,8 @@ corpus (repo, path, commit, lang, content)
     (JVM-side for IPv4)
   → 02 enrich + block on (asn, /24 or /48 prefix, lang) — broadcast
     interval trie (GeoLite2 ASN when configured, pseudo-ASN otherwise)
-    — then histogram-measured refinement of oversized (Zipf-hot)
-    blocks, ONE committed stage (the blocked intermediate feeds the
-    histogram and the refinement join either through a persist — when
-    enrichment is UDF-priced, i.e. an MMDB is configured — or by
-    recomputing the pure-Catalyst block keys over the committed
-    stage-01 parquet, whichever is cheaper)
+    — then window-counted refinement of oversized (Zipf-hot) blocks,
+    ONE committed stage that reads the blocked intermediate once
   → 03 candidate self-join (rid_a < rid_b, AQE-exempt repartition) +
     JVM-only score upper bound → hot candidates → batched Jaro-Winkler
     + materialized Levenshtein exact scoring, committed as ONE
@@ -36,11 +32,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..functions._par import ensure_parallelism
 from ..operators.closure import connected_components
-from ..operators.dedup import CacheScope
 from . import blocking, scoring
 from .checkpoint import StageRunner
 
@@ -70,11 +64,11 @@ def run_pipeline(
     (repo, path, commit), hence the same rid — emit duplicate
     (rid, ip) indicator rows rather than paying a corpus-wide
     dropDuplicates shuffle.  Final clusters stay correct (the closure's
-    edge normalize dedups), but block_histogram counts are inflated
-    (possibly triggering refinement early) and affected pairs are
-    scored up to 4x.  If duplicate rows are expected, dedup the corpus
-    once upstream on (repo, path, commit) — cheaper than a wide
-    (rid, ip) dropDuplicates here.
+    edge normalize dedups), but the block sizes the skew guard counts
+    are inflated (possibly triggering refinement early) and affected
+    pairs are scored up to 4x.  If duplicate rows are expected, dedup
+    the corpus once upstream on (repo, path, commit) — cheaper than a
+    wide (rid, ip) dropDuplicates here.
     """
     if audit_rids:
         n_bad = blocking.audit_rid_collisions(corpus)
@@ -85,7 +79,6 @@ def run_pipeline(
                 "or key them by blocking.record_id128"
             )
     runner = StageRunner(spark, ckpt_dir)
-    caches = CacheScope()  # releases stage 02's persist once it is committed
 
     indicators = runner.stage(
         "01_indicators",
@@ -102,28 +95,9 @@ def run_pipeline(
             )
         else:
             blocked = blocking.with_block_key(indicators)
-        # blocked feeds BOTH the histogram and the refinement join.
-        # With an MMDB configured it is materialized once in executor
-        # storage: block keys then cost a broadcast-table Arrow UDF per
-        # row and recomputation would double the enrichment bill.
-        # Without one the block keys are recomputed in both passes over
-        # the committed stage-01 parquet: the pseudo-ASN path is a
-        # pure-Catalyst projection that is CHEAPER to recompute than to
-        # persist — measured 4.7-5.0 s vs 6.3-7.1 s for the whole
-        # stage at 2.4M files/local[8] across four gated A/B runs
-        # (/dev/shm parquet, GC-pinned), and skipping the persist
-        # removes a whole-indicator-table executor-storage allocation
-        # right after stage 01's memory churn (the same-JVM GC
-        # pressure the stage-02 probes in BENCH/BASELINE.md measured
-        # at the wide level).
-        if mmdb_dir:
-            blocked = caches.add(blocked.persist(StorageLevel.MEMORY_AND_DISK))
-        return blocking.refine_oversized_blocks(
-            blocked, blocking.block_histogram(blocked), max_block_records
-        )
+        return blocking.refine_oversized_blocks(blocked, max_block_records)
 
-    with caches:
-        refined = runner.stage("02_refined", _refined)
+    refined = runner.stage("02_refined", _refined)
 
     pairs = blocking.candidate_pairs(refined)
     scored = runner.stage(

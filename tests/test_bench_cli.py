@@ -1,6 +1,7 @@
 """bench.py's command line and query registry, checked without Spark."""
 
 import importlib.util
+import os
 import subprocess
 import sys
 from pathlib import Path
@@ -54,3 +55,26 @@ def test_declared_inputs_are_input_builders(bench):
     # the document/embedding operators read neither lineitem nor the corpus
     doc_inputs = {i for name in DOC_QUERIES for i in bench.QUERIES[name].inputs}
     assert doc_inputs == {"docs", "emb"}
+
+
+def test_pipeline_checkpoint_dirs_removed_at_exit(tmp_path):
+    # each pipeline_e2e rep writes a fresh checkpoint dir; none may
+    # outlive the process (run_pipeline is faked: no Spark)
+    code = (
+        "import os, sys, types\n"
+        "import bench\n"
+        "def fake(spark, corpus, ckpt):\n"
+        "    open(os.path.join(ckpt, 'part'), 'w').write('x')\n"
+        "    print(ckpt)\n"
+        "    return {'metrics': {}, 'clusters': None}\n"
+        "bench.run_pipeline = fake\n"
+        "corpus = types.SimpleNamespace(sparkSession=None)\n"
+        "rep = bench.pipeline_e2e({'corpus': corpus}, {}, {})\n"
+        "rep(); rep()\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, check=True, timeout=300,
+        capture_output=True, text=True, env={**os.environ, "TMPDIR": str(tmp_path)},
+    ).stdout.split()
+    assert len(out) == 2 and all(p.startswith(str(tmp_path)) for p in out)
+    assert list(tmp_path.iterdir()) == []

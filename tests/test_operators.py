@@ -154,8 +154,9 @@ def test_simhash_pairs_match_bruteforce_sweep(spark):
 
 
 def test_cache_scope_releases_dedup_storage(spark, docs):
-    """CacheScope frees the persisted signature/shingle-set blocks after
-    materialization (owner-scoped release instead of leak-until-LRR)."""
+    """CacheScope frees the persisted minhash shingle sets after
+    materialization (owner-scoped release instead of leak-until-LRU);
+    simhash_pairs takes a scope but persists nothing."""
     with dedup.CacheScope() as caches:
         pairs = dedup.simhash_pairs(
             docs, "doc_id", "text", max_hamming=10, bands=16, caches=caches
@@ -166,10 +167,9 @@ def test_cache_scope_releases_dedup_storage(spark, docs):
         assert {(r.doc_a, r.doc_b) for r in pairs.collect()} >= {(0, 2)}
         assert {(r.doc_a, r.doc_b) for r in lsh.collect()} >= {(0, 2)}
         handles = list(caches._frames)
-        # simhash signatures + minhash shingle sets + minhash bucket
-        # frame (r07: _bucket_pairs materializes its input once so the
-        # signature fold is not re-evaluated per self-join side)
-        assert len(handles) == 3
+        # the minhash shingle sets only: the bucket self-join reuses
+        # one exchange instead of reading a persisted frame
+        assert len(handles) == 1
         assert all(h.storageLevel.useMemory for h in handles)
     # scope exit unpersisted every registered frame
     assert not caches._frames

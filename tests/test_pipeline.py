@@ -167,10 +167,10 @@ def test_skew_refinement_triggers(spark, corpus_truth):
     corpus, truth = corpus_truth
     ind = blocking.extract_indicators(corpus)
     blocked = blocking.with_block_key(ind)
-    hist = blocking.block_histogram(blocked)
+    hist = blocked.groupBy("block_key").agg(F.count(F.lit(1)).alias("block_rows"))
     cap = 40
     assert hist.where(F.col("block_rows") > cap).count() > 0
-    refined = blocking.refine_oversized_blocks(blocked, hist, cap)
+    refined = blocking.refine_oversized_blocks(blocked, cap)
     # refined keys are strictly finer: same-entity records (same ip)
     # still share a key
     joined = refined.join(truth, "commit").select("entity", "ip", "block_key")
@@ -178,6 +178,43 @@ def test_skew_refinement_triggers(spark, corpus_truth):
         F.countDistinct("block_key").alias("nk")
     )
     assert per_entity.where(F.col("nk") > 1).count() == 0
+
+
+@pytest.mark.parametrize("cap", [1, 2, 5, 40])
+def test_skew_guards_cap_boundary(spark, cap):
+    """Both window-count guards at the cap boundary: a key with exactly
+    ``cap`` rows is kept by ``_drop_hot_keys`` and not refined by
+    ``refine_oversized_blocks``; a key with ``cap + 1`` rows is dropped
+    or gets ``|ip`` appended.  Expected sets come from a Python count."""
+    from collections import Counter
+
+    from polars_iptools_spark.operators import dedup
+
+    sizes = sorted({1, cap, cap + 1, 3 * cap})
+    rows = [
+        (len(sizes) * i + b, b, size, f"10.0.{b}.{i}", f"k{b}|{size}")
+        for b, size in enumerate(sizes)
+        for i in range(size)
+    ]
+    df = spark.createDataFrame(
+        rows, "doc long, band int, bucket int, ip string, block_key string"
+    )
+    held = Counter((band, bucket) for _, band, bucket, _, _ in rows)
+    assert {cap, cap + 1} <= set(held.values())
+
+    kept = {
+        r.doc for r in dedup._drop_hot_keys(df, ["band", "bucket"], cap).collect()
+    }
+    assert kept == {d for d, band, bucket, _, _ in rows if held[(band, bucket)] <= cap}
+
+    refined = {
+        r.doc: r.block_key
+        for r in blocking.refine_oversized_blocks(df, cap).collect()
+    }
+    assert refined == {
+        d: f"{key}|{ip}" if held[(band, bucket)] > cap else key
+        for d, band, bucket, ip, key in rows
+    }
 
 
 def test_ipv6_block_prefix(spark):

@@ -3,6 +3,8 @@ engine scale are asserted, not assumed — native ops stay inside
 whole-stage codegen (no Python workers), filters and projections reach
 the parquet scan, small sides broadcast."""
 
+import re
+
 import pyspark.sql.functions as F
 
 import polars_iptools_spark as ip
@@ -153,18 +155,29 @@ def test_ngram_index_join_has_aqe_exempt_repartition(spark):
     assert pairs.count() >= 0  # and it still executes
 
 
-def test_simhash_pairs_persists_signature_subtree(spark):
-    """The signature fold feeds banding + both verify-join sides; the
-    persist must actually take effect so the scan+fold is computed once
-    (InMemoryTableScan present, and more than one consumer of it)."""
+def final_plan_of(df) -> str:
+    """The AQE final plan, after executing ``df`` itself (the string
+    also holds the initial plan; that part is cut off)."""
+    df.collect()
+    plan = plan_of(df)
+    assert "isFinalPlan=true" in plan, plan[:400]
+    return plan.split("== Initial Plan ==")[0]
+
+
+def test_simhash_pairs_evaluates_signature_subtree_once(spark):
+    """The signature fold feeds both bucket self-join sides; without a
+    persist the second side must reuse the first side's exchange, so
+    the scan+fold is computed once."""
+    # repeated texts, so the pair stream is not empty and AQE keeps the
+    # join in its final plan
     df = spark.createDataFrame(
-        [(i, f"words alpha beta {i}") for i in range(10)],
+        [(i, f"words alpha beta {i % 4}") for i in range(10)],
         "doc_id long, text string",
     )
     pairs = dedup.simhash_pairs(df, "doc_id", "text", max_hamming=3, bands=4)
-    plan = plan_of(pairs)
-    assert plan.count("InMemoryTableScan") >= 2, plan[:400]
-    pairs.count()
+    plan = final_plan_of(pairs)
+    assert "ReusedExchange" in plan, plan
+    assert "InMemoryTableScan" not in plan, plan
 
 
 def test_minhash_hot_guard_has_no_collect_set(spark):
@@ -188,12 +201,37 @@ def test_minhash_hot_guard_has_no_collect_set(spark):
     pairs.count()  # and the guarded plan still executes
 
 
+def test_minhash_guard_reads_shingles_once(spark):
+    """The guarded shingle index is exploded once and counted by one
+    window: no second explode for a hot-shingle histogram and no
+    broadcast anti-join against a hot set."""
+    df = spark.createDataFrame(
+        [(i, f"common words everywhere plus unique{i} tail{i}") for i in range(30)],
+        "doc_id long, text string",
+    )
+    pairs = dedup.minhash_lsh_pairs(
+        df, "doc_id", "text", k=2, num_hashes=8, bands=4,
+        threshold=0.5, max_shingle_freq=5,
+    )
+    plan = plan_of(pairs)
+    # the plan string repeats the cached shingle-set plan under every
+    # InMemoryTableScan, so count distinct explode nodes
+    explodes = {
+        re.sub(r"^[\s:|+-]*", "", line)
+        for line in plan.splitlines()
+        if "Generate explode" in line
+    }
+    assert len(explodes) == 1, plan
+    assert "LeftAnti" not in plan and "BroadcastExchange" not in plan, plan
+    pairs.count()
+
+
 def test_bucket_pairs_input_is_materialized_once(spark):
-    """r07 optimization: the (doc, band, bucket) frame feeds the
-    hot-bucket histogram and BOTH self-join sides; _bucket_pairs must
-    persist it so the expensive producing subtree (signature fold /
-    hyperplane-matmul UDF) is evaluated once, not once per consumer —
-    all three consumers must read an InMemoryTableScan."""
+    """The (doc, band, bucket) frame feeds the window-count guard and
+    BOTH self-join sides; its expensive producing subtree (signature
+    fold / hyperplane-matmul UDF) must be evaluated once, not once per
+    consumer — one ArrowEvalPython in the AQE final plan, the second
+    self-join side reading a ReusedExchange."""
     import numpy as np
 
     rng = np.random.default_rng(3)
@@ -204,6 +242,6 @@ def test_bucket_pairs_input_is_materialized_once(spark):
     pairs = similarity.lsh_near_duplicates(
         df, dim=8, threshold=0.5, n_tables=4, n_planes=4
     )
-    plan = plan_of(pairs)
-    assert plan.count("InMemoryTableScan") >= 3, plan[:600]
-    pairs.count()  # and it still executes
+    plan = final_plan_of(pairs)
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "ReusedExchange" in plan, plan
