@@ -108,16 +108,12 @@ def _drop_hot_keys(df: DataFrame, keys: list[str], max_rows: int | None) -> Data
     return df.withColumn("_n", n).where(F.col("_n") <= max_rows).drop("_n")
 
 
-def _shingle_index(
-    df: DataFrame, id_col: str, text_col: str, k: int, max_shingle_freq: int | None
-) -> DataFrame:
-    """One (doc, sh) row per distinct shingle of each doc, hot shingles
-    dropped by :func:`_drop_hot_keys`."""
-    idx = ensure_parallelism(df).select(
+def _shingle_index(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
+    """One (doc, sh) row per distinct shingle of each doc."""
+    return ensure_parallelism(df).select(
         F.col(id_col).alias("doc"),
         F.explode(F.array_distinct(word_shingles(F.col(text_col), k))).alias("sh"),
     )
-    return _drop_hot_keys(idx, ["sh"], max_shingle_freq)
 
 
 def ngram_jaccard_pairs(
@@ -133,11 +129,15 @@ def ngram_jaccard_pairs(
     Inverted-index join: |intersection| by counting shared shingles,
     |union| = |A|+|B|-|∩| from per-doc set sizes.
     """
-    idx = _shingle_index(df, id_col, text_col, k, max_shingle_freq)
-    sizes = idx.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
     # the self-join's output explodes quadratically per shingle: pin
-    # its fan-out (same reason as blocking.candidate_pairs)
-    idx = idx.repartition(pinned_partitions(df), "sh")
+    # its fan-out (same reason as blocking.candidate_pairs).  The hot
+    # guard's window runs on top of this exchange, so one shuffle on
+    # ``sh`` serves the guard and the self-join
+    idx = _shingle_index(df, id_col, text_col, k).repartition(
+        pinned_partitions(df), "sh"
+    )
+    idx = _drop_hot_keys(idx, ["sh"], max_shingle_freq)
+    sizes = idx.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
     a = idx.select(F.col("doc").alias("doc_a"), "sh")
     b = idx.select(F.col("doc").alias("doc_b"), "sh")
     common = (
@@ -257,7 +257,9 @@ def minhash_lsh_pairs(
     if max_shingle_freq:
         # hot-shingle guard on the exploded index, re-collected per doc
         sets = (
-            _shingle_index(df, id_col, text_col, k, max_shingle_freq)
+            _drop_hot_keys(
+                _shingle_index(df, id_col, text_col, k), ["sh"], max_shingle_freq
+            )
             .groupBy("doc")
             .agg(F.collect_list("sh").alias("shs"))
         )

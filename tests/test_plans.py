@@ -144,7 +144,8 @@ def test_ngram_index_join_has_aqe_exempt_repartition(spark):
     user repartition on the join key: its output explodes quadratically
     per shingle, and without the AQE-coalescing-exempt exchange the
     blow-up serializes onto a handful of tasks (same guard as
-    blocking.candidate_pairs)."""
+    blocking.candidate_pairs).  The default hot-shingle guard's window
+    reads that same exchange: no second shuffle on ``sh``."""
     df = spark.createDataFrame(
         [(i, f"alpha beta gamma delta {i}") for i in range(20)],
         "doc_id long, text string",
@@ -152,6 +153,9 @@ def test_ngram_index_join_has_aqe_exempt_repartition(spark):
     pairs = dedup.ngram_jaccard_pairs(df, "doc_id", "text", k=2, threshold=0.3)
     plan = plan_of(pairs)
     assert "REPARTITION_BY_NUM" in plan
+    assert "Window [count(1)" in plan, plan
+    sh_exchanges = re.findall(r"Exchange hashpartitioning\(sh#\d+, \d+\), (\w+)", plan)
+    assert sh_exchanges and set(sh_exchanges) == {"REPARTITION_BY_NUM"}, plan
     assert pairs.count() >= 0  # and it still executes
 
 
