@@ -101,7 +101,7 @@ def _drop_hot_keys(df: DataFrame, keys: list[str], max_rows: int | None) -> Data
     ``max_rows`` rows hold (a key shared by k rows makes a self-join on
     it emit O(k²) pairs).  One ``count() OVER (PARTITION BY keys)``
     pass: the input is read once, and the output stays hash-partitioned
-    on ``keys``, so a self-join on them needs no further exchange."""
+    on ``keys``, so a join or window on them needs no further exchange."""
     if not max_rows:
         return df
     n = F.count(F.lit(1)).over(Window.partitionBy(*keys))
@@ -198,20 +198,32 @@ def _bucket_pairs(
     their other bands.
 
     ``verify``: optional ``(name, value, keep)`` pair column, ``value``
-    computed from the carried ``x.*`` / ``y.*`` columns and rows failing
-    ``keep`` dropped BEFORE the pair dedup.
+    computed from the carried ``x.*`` / ``y.*`` columns (``x`` the
+    smaller doc) and rows failing ``keep`` dropped BEFORE the pair
+    dedup.
 
-    Nothing persists: both self-join sides are the same guarded
-    subtree, so AQE reuses its one exchange and the producing subtree
-    (a signature fold or the hyperplane-matmul Arrow UDF) runs once."""
+    No self-join and nothing persists: each row collects the earlier
+    docs of its bucket in a window on the guard's exchange, so the
+    producing subtree (a signature fold or the hyperplane-matmul Arrow
+    UDF) runs once, also over a cached input, where a self-join's two
+    sides would each run it (AQE reuses no exchange above a cached
+    scan).  A bucket of k rows collects k(k-1)/2 elements, as many as
+    a self-join emits rows."""
     buckets = _drop_hot_keys(buckets, ["band", "bucket"], max_bucket_size)
+    row = F.struct(*[c for c in buckets.columns if c not in ("band", "bucket")])
+    earlier = (
+        Window.partitionBy("band", "bucket")
+        .orderBy("doc")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
     cols = [F.col("x.doc").alias("doc_a"), F.col("y.doc").alias("doc_b")]
     if verify:
         name, value, keep = verify
         cols.append(value.alias(name))
     pairs = (
-        buckets.alias("x")
-        .join(buckets.alias("y"), ["band", "bucket"])
+        buckets.select(row.alias("y"), F.collect_list(row).over(earlier).alias("xs"))
+        .select(F.explode("xs").alias("x"), "y")
+        # equal ids (a doc listed twice in one bucket) pair with nothing
         .where(F.col("x.doc") < F.col("y.doc"))
         .select(*cols)
     )
@@ -376,7 +388,7 @@ def simhash_pairs(
     least one identical segment when bands > max_hamming) and pair
     through :func:`_bucket_pairs`, verifying hamming with bit_count.
 
-    The 8-byte signature RIDES THROUGH the bucket self-join (carry small
+    The 8-byte signature RIDES THROUGH the bucket pairing (carry small
     metadata instead of re-joining it), so hamming is verified before
     the pair dedup with no join back to the signatures.  It persists
     nothing: ``caches`` is kept for callers that pass a scope, and

@@ -272,10 +272,10 @@ def lsh_near_duplicates(
             lsh_buckets_banded(F.col(vec_col), dim, n_tables, n_planes, seed)
         ).alias("band", "bucket"),
     )
-    # both _bucket_pairs self-join sides reuse one exchange of the
-    # windowed (doc, band, bucket) frame, so the hyperplane-matmul Arrow
-    # UDF runs once; the vector column is projected OUT before the
-    # explode so that exchange carries 24 bytes/row, not the embedding.
+    # _bucket_pairs reads the (doc, band, bucket) frame once, so the
+    # hyperplane-matmul Arrow UDF runs once; the vector column is
+    # projected OUT before the explode so that the guard's exchange
+    # carries 24 bytes/row, not the embedding.
     # shuffle_pairs pins the candidate partitioning so the per-pair JVM
     # dot below runs at full cluster parallelism instead of on the ~1
     # task AQE's byte-based coalescing would leave for this byte-small,

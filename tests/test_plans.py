@@ -169,19 +169,23 @@ def final_plan_of(df) -> str:
 
 
 def test_simhash_pairs_evaluates_signature_subtree_once(spark):
-    """The signature fold feeds both bucket self-join sides; without a
-    persist the second side must reuse the first side's exchange, so
-    the scan+fold is computed once."""
+    """The signature fold feeds every bucket pair; with no persist and
+    no self-join it must run once, also over a cached input (where two
+    join sides would not share an exchange)."""
     # repeated texts, so the pair stream is not empty and AQE keeps the
-    # join in its final plan
+    # pairing in its final plan
     df = spark.createDataFrame(
         [(i, f"words alpha beta {i % 4}") for i in range(10)],
         "doc_id long, text string",
     )
-    pairs = dedup.simhash_pairs(df, "doc_id", "text", max_hamming=3, bands=4)
-    plan = final_plan_of(pairs)
-    assert "ReusedExchange" in plan, plan
-    assert "InMemoryTableScan" not in plan, plan
+    for cached in (False, True):
+        src = df.cache() if cached else df
+        pairs = dedup.simhash_pairs(src, "doc_id", "text", max_hamming=3, bands=4)
+        plan = final_plan_of(pairs)
+        assert plan.count("xxhash64(lambda") == 1, plan
+        assert "Join" not in plan, plan
+        assert plan.count("InMemoryTableScan") == int(cached), plan
+    df.unpersist()
 
 
 def test_minhash_hot_guard_has_no_collect_set(spark):
@@ -219,11 +223,12 @@ def test_minhash_guard_reads_shingles_once(spark):
     )
     plan = plan_of(pairs)
     # the plan string repeats the cached shingle-set plan under every
-    # InMemoryTableScan, so count distinct explode nodes
+    # InMemoryTableScan, so count distinct shingle-explode nodes (the
+    # bucket pairing explodes its collected lists too)
     explodes = {
         re.sub(r"^[\s:|+-]*", "", line)
         for line in plan.splitlines()
-        if "Generate explode" in line
+        if "Generate explode(" in line and "explode(xs#" not in line
     }
     assert len(explodes) == 1, plan
     assert "LeftAnti" not in plan and "BroadcastExchange" not in plan, plan
@@ -232,10 +237,10 @@ def test_minhash_guard_reads_shingles_once(spark):
 
 def test_bucket_pairs_input_is_materialized_once(spark):
     """The (doc, band, bucket) frame feeds the window-count guard and
-    BOTH self-join sides; its expensive producing subtree (signature
-    fold / hyperplane-matmul UDF) must be evaluated once, not once per
-    consumer — one ArrowEvalPython in the AQE final plan, the second
-    self-join side reading a ReusedExchange."""
+    every bucket pair; its expensive producing subtree (signature fold /
+    hyperplane-matmul UDF) must be evaluated once, not once per
+    consumer — one ArrowEvalPython in the AQE final plan, also when the
+    input is cached."""
     import numpy as np
 
     rng = np.random.default_rng(3)
@@ -243,9 +248,10 @@ def test_bucket_pairs_input_is_materialized_once(spark):
         [(i, rng.standard_normal(8).tolist()) for i in range(30)],
         "vec_id long, embedding array<double>",
     )
-    pairs = similarity.lsh_near_duplicates(
-        df, dim=8, threshold=0.5, n_tables=4, n_planes=4
-    )
-    plan = final_plan_of(pairs)
-    assert plan.count("ArrowEvalPython") == 1, plan
-    assert "ReusedExchange" in plan, plan
+    for cached in (False, True):
+        pairs = similarity.lsh_near_duplicates(
+            df.cache() if cached else df, dim=8, threshold=0.5, n_tables=4, n_planes=4
+        )
+        plan = final_plan_of(pairs)
+        assert plan.count("ArrowEvalPython") == 1, plan
+    df.unpersist()
