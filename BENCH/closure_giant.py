@@ -10,6 +10,11 @@ passes: the first (cold) pass also pays JVM warm-up and code
 generation, so the second (warm) pass is the closure's own wall.  The
 pass criterion is supersteps staying O(log diameter) and the warm wall
 staying within a small multiple of the uniform-corpus closure stage.
+Each pass records the closure's ``stats``: per-superstep walls and
+working-set edges, and the edges and hook rounds of the driver finish
+when it ran (at entry for inputs of at most
+``closure.LOCAL_FINISH_EDGES`` rows, else on the first small enough
+remnant).
 
 Usage: python BENCH/closure_giant.py [--nodes 9600000] [--giant-frac 0.01]
        [--cpus N] [--driver-memory 6g] [--out BENCH/closure_giant_result.json]
@@ -100,6 +105,9 @@ def main() -> None:
             "normalize_s": stats.get("normalize_s"),
             "peel_after": stats.get("peel_after"),
             "superstep_walls": stats.get("superstep_walls"),
+            "superstep_edges": stats.get("superstep_edges"),
+            "local_edges": stats.get("local_edges"),
+            "local_rounds": stats.get("local_rounds"),
         }
 
     load_start = loadavg()

@@ -9,8 +9,11 @@ the full plan, not collect serialization.  ``--queries`` runs a subset,
 and only the inputs that subset reads are built; ``--plans DIR`` writes
 each query's formatted physical plan to ``DIR/<query>.txt``.
 
-Every query runs $SPARK_GRAFT_BENCH_REPS times (default 3).  The record
-holds the median per query, every rep and the minimum, plus the host
+Every query runs $SPARK_GRAFT_BENCH_REPS times (default 3).  Before
+each rep, untimed, every cached frame is released and the query's
+inputs are cached and counted again, so no rep reads what an earlier
+rep persisted.  The record holds the median per query, every rep and
+the minimum, plus the host
 (load at start and end, and external cores busy during the run, see
 BENCH/sysload.py).  The host fields are recorded for the reader and
 never gate or repeat a run.
@@ -253,6 +256,14 @@ def setup_inputs(spark, names: set[str]) -> tuple[dict, dict]:
     return inp, rows
 
 
+def fresh_cache(spark, inp: dict, names: tuple[str, ...]) -> None:
+    """Release every cached frame, then cache and count ``names`` again:
+    what a rep persisted must not make the next rep a cache hit."""
+    spark.catalog.clearCache()
+    for name in names:
+        inp[name].cache().count()
+
+
 def main(argv=None) -> None:
     args = parse_args(argv)
     selected = {name: QUERIES[name] for name in QUERIES if name in args.queries}
@@ -277,6 +288,7 @@ def main(argv=None) -> None:
         build = q.prepare(inp, rows, extras)
         runs = []
         for _ in range(REPS):
+            fresh_cache(spark, inp, q.inputs)
             t0 = time.monotonic()
             df = build()
             force(df)

@@ -1,7 +1,8 @@
 """Distributed connected components via alternating large-star /
 small-star contractions (Kiveris et al., "Connected Components in
 MapReduce and Beyond", SOCC'14 — public algorithm, re-derived here on
-the Spark DataFrame API).
+the Spark DataFrame API), finished on the driver once the working edge
+set is small.
 
 Why this shape at 100 TB: each star is one hash-partitioned pass — the
 per-node minimum is a window over the rows as they are partitioned,
@@ -9,18 +10,32 @@ never a groupBy joined back against the edge set — so a superstep is
 three shuffles (large-star window, small-star window, small-star
 dedup); edge count shrinks monotonically toward star graphs, and
 convergence is detected by checking the 2-level-forest termination
-state directly (one constant-size aggregation — no driver-side edge
-collection, and no extra changed-nothing superstep).  Lineage is
-truncated per superstep with ``localCheckpoint`` or plans grow
-exponentially (SURVEY.md §4.2).
+state directly (one constant-size aggregation, and no extra
+changed-nothing superstep).  Lineage is truncated per superstep with
+``localCheckpoint`` or plans grow exponentially (SURVEY.md §4.2).
+
+Why the driver finish: a superstep costs its shuffles and jobs whatever
+the edge count, so on a small graph, or on the remnant a high-diameter
+component leaves after the bulk has settled, the closure is bound by
+job latency, not compute.  Once the working set holds at most
+``LOCAL_FINISH_EDGES`` edges — at entry, or at any superstep's forest
+check — it is collected and closed by one vectorized NumPy
+hook-and-pointer-jump pass (the Shiloach–Vishkin / FastSV scheme,
+Zhang, Azad & Hu, SIAM PP 2020).  The driver never holds more than
+that bound of edge rows (plus one at entry).
 """
 
 from __future__ import annotations
 
 import time
+from functools import reduce
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 
 def _aligned(edges: DataFrame) -> DataFrame:
@@ -143,7 +158,7 @@ def _forest_check(edges: DataFrame, loops: DataFrame | None = None) -> tuple[boo
     One constant-size aggregation over the per-node sides, no driver
     edge collection.  The edge count (the sum of ``s``) and the count
     of self-loop nodes missing from the edges ride along in the same
-    job, so resolving ``peel_after="auto"`` and the self-loop contract
+    job, so the switch to the driver finish and the self-loop contract
     cost no job of their own."""
     row = (
         _node_sides(edges, loops)
@@ -157,18 +172,83 @@ def _forest_check(edges: DataFrame, loops: DataFrame | None = None) -> tuple[boo
     return row["bad"] == 0, row["edges"], row["loop_only"]
 
 
-PEEL_AUTO_THRESHOLD = 1_000_000
+# Largest working edge set finished on the driver.  The collected
+# remnant is an Arrow table of at most this many rows; the NumPy pass
+# over 1M edges takes about 0.4 s and 150 MB.
+LOCAL_FINISH_EDGES = 1_000_000
+
+
+def _hook_and_jump(u: np.ndarray, v: np.ndarray, n: int) -> tuple[np.ndarray, int]:
+    """(label, rounds) for ``n`` dense nodes joined by the edges
+    ``(u[i], v[i])``: label[x] = the smallest node of x's component.
+
+    Each round hooks every node's parent and the node itself to the
+    smallest parent across its edges (``np.minimum.at``), then
+    pointer-jumps until every node points at its tree's root.  Labels
+    only decrease and label[x] <= x throughout, so the parent pointers
+    stay acyclic, and a round that changes nothing leaves every edge
+    inside one tree whose root is its smallest node.  Hooking makes the
+    round count grow with log(diameter); plain min-label propagation
+    needs one round per hop of the diameter."""
+    f = np.arange(n, dtype=u.dtype)
+    rounds = 0
+    while True:
+        rounds += 1
+        # f is a star forest here (the identity at first), so the
+        # parent f[x] is also x's grandparent
+        fu, fv = f[u], f[v]
+        g = f.copy()
+        np.minimum.at(g, np.concatenate([fu, fv, u, v]), np.concatenate([fv, fu, fv, fu]))
+        while True:
+            gg = g[g]
+            if np.array_equal(gg, g):
+                break
+            g = gg
+        if np.array_equal(g, f):
+            return f, rounds
+        f = g
+
+
+def _local_components(spark, tbl: pa.Table, id_type) -> tuple[DataFrame, int]:
+    """(node, component) of the null-free ``src``/``dst`` edges in
+    ``tbl``, closed on the driver; also returns the hook rounds.
+
+    Node ids are ranked in Spark's ordering of ``id_type`` (Arrow sorts
+    integers by value and strings by UTF-8 bytes, as Spark does), so the
+    smallest dense index of a component is its minimum id.  Self-loops,
+    duplicates and both orientations need no special case: a self-loop
+    node comes back as its own component."""
+    ids = pa.concat_arrays([tbl["src"].combine_chunks(), tbl["dst"].combine_chunks()])
+    nodes = pc.unique(ids)
+    nodes = nodes.take(pc.array_sort_indices(nodes))
+    dense = pc.index_in(ids, value_set=nodes).to_numpy()
+    m = tbl.num_rows
+    label, rounds = _hook_and_jump(dense[:m], dense[m:], len(nodes))
+    out = pa.table({"node": nodes, "component": nodes.take(label)})
+    schema = StructType([StructField("node", id_type), StructField("component", id_type)])
+    return spark.createDataFrame(out, schema), rounds
 
 
 def connected_components(
     edges: DataFrame, max_iterations: int = 50,
-    stats: dict | None = None, peel_after: int | str | None = "auto",
+    stats: dict | None = None, peel_after: int | None = 0,
 ) -> DataFrame:
     """(src,dst) edge list -> (node, component) with component = the
-    minimum node id of the connected component.
+    minimum node id of the connected component, in Spark's ordering of
+    the id type.  Rows with a null ``src`` or ``dst`` are dropped.
 
     Nodes appearing only in self-loops / isolated are still returned
     (component = themselves).
+
+    Driver finish: the input is first probed with
+    ``limit(LOCAL_FINISH_EDGES + 1).toArrow()`` (one job).  When it
+    holds at most ``LOCAL_FINISH_EDGES`` rows, no Spark superstep runs:
+    the rows are closed on the driver (:func:`_hook_and_jump`) and come
+    back as a local DataFrame.  Otherwise the Spark supersteps run, and
+    as soon as a superstep's forest check counts a working set of at
+    most ``LOCAL_FINISH_EDGES`` edges, that remnant is collected,
+    closed on the driver and unioned with the peeled stars.  The count
+    comes with the check, so the switch costs no job of its own.
 
     ``peel_after``: from this superstep on, stars that have fully
     settled are MOVED OUT of the working edge set instead of being
@@ -186,39 +266,63 @@ def connected_components(
     both operators, so freezing it early yields exactly the edges the
     final forest would contain.
 
-    The peel's extra per-superstep joins are a fixed cost while its
-    benefit scales with the settled mass, so the default (``"auto"``)
-    resolves by size, from the edge count that superstep 0's forest
-    check returns with its verdict (no job of its own).  When that
-    count is ≥ ``PEEL_AUTO_THRESHOLD`` it resolves to 0: superstep 0's
-    settled stars are split off its materialized edges right after the
-    check, and every later superstep peels (at corpus scale the bulk
-    of an entity-resolution graph is small clusters that are star
-    forests within one contraction — measured 45 s vs 67 s on the
-    9.8M-node giant input).  Else it resolves to 2, so that small /
-    near-clique workloads that converge in ≤2 supersteps never pay the
-    joins (peeling from superstep 0 added 0.25-0.35 s to the linkage
-    pipeline's closure stage).  Pass an int to pin the first peeling
-    superstep, or ``None`` to disable peeling.
+    The default 0 splits superstep 0's settled stars off its
+    materialized edges right after its forest check, and every later
+    superstep peels in the same job as its check: at corpus scale the
+    bulk of an entity-resolution graph is small clusters that are star
+    forests within one contraction (measured 45 s vs 67 s for peeling
+    from superstep 2 on the 9.8M-node giant input).  Small and
+    near-clique inputs, where the peel's joins would be a fixed cost
+    with no benefit, never reach a peel: they finish on the driver.
+    Pass a larger int to start peeling later, or ``None`` to disable
+    peeling.
 
     There is no separate normalize pass: superstep 0 reads the input
     minus its self-loops, duplicates and both orientations included
     (large_star unions both orientations, small_star dedups its own
     output).
 
-    ``stats``: optional dict that receives ``{"supersteps": k}`` — the
+    ``stats``: optional dict that receives ``supersteps`` — the
     scale-evidence hook (superstep count is the O(log diameter) bound
-    a giant component must not break) — plus driver-measured phase
-    walls (``normalize_s``: the driver seconds before superstep 0, plan
-    building only since normalizing is folded into it;
-    ``superstep_walls``: the per-iteration star-contract + checkpoint +
-    forest-check seconds) and the resolved ``peel_after``, so a slow run
-    can be attributed to a phase instead of adjudicated by total wall
-    (every superstep ends in an eager ``localCheckpoint``, so its work
-    runs inside its own loop iteration).
+    a giant component must not break), counting the driver finish as
+    one — plus driver-measured phase walls, so a slow run can be
+    attributed to a phase instead of adjudicated by total wall:
+    ``normalize_s`` (driver seconds before the first superstep: plan
+    building, plus the entry probe when the input is over the bound)
+    and ``superstep_walls`` (per superstep, the star-contract +
+    checkpoint + forest-check seconds, and last the driver finish's
+    collect + NumPy + ``createDataFrame`` seconds; every Spark
+    superstep ends in an eager ``localCheckpoint``, so its work runs
+    inside its own loop iteration).  It also receives ``peel_after``,
+    ``superstep_edges`` (the working-set size at each Spark forest
+    check) and, when the driver finish ran, ``local_edges`` (the
+    null-free rows it closed) and ``local_rounds`` (its hook rounds).
     """
     aligned = _aligned(edges)
+    spark = aligned.sparkSession
+    id_type = aligned.schema["src"].dataType
     t0 = time.monotonic()
+    if stats is not None:
+        stats.update(superstep_walls=[], superstep_edges=[], peel_after=peel_after)
+
+    def finish_locally(tbl: pa.Table, t0: float) -> DataFrame:
+        # the Spark path drops null ends in its src != dst / src == dst
+        # filters; here they are dropped explicitly
+        tbl = tbl.drop_null()
+        out, rounds = _local_components(spark, tbl, id_type)
+        if stats is not None:
+            stats["superstep_walls"].append(round(time.monotonic() - t0, 2))
+            stats["supersteps"] = len(stats["superstep_walls"])
+            stats["local_edges"] = tbl.num_rows
+            stats["local_rounds"] = rounds
+        return out
+
+    head = aligned.limit(LOCAL_FINISH_EDGES + 1).toArrow()
+    if head.num_rows <= LOCAL_FINISH_EDGES:
+        if stats is not None:
+            stats["normalize_s"] = 0.0
+        return finish_locally(head, t0)
+    del head  # the supersteps may run for minutes: do not hold the probe's rows
     # superstep 0 reads the raw edges: duplicates and either
     # orientation are absorbed by large_star's union of both
     # orientations and small_star's dedup
@@ -226,37 +330,31 @@ def connected_components(
     loops = aligned.where(F.col("src") == F.col("dst")).select(F.col("src").alias("node"))
     if stats is not None:
         stats["normalize_s"] = round(time.monotonic() - t0, 2)
-        stats["superstep_walls"] = []
-        stats["peel_after"] = peel_after
     frozen: list[DataFrame] = []
+    local = None
     for step in range(max_iterations):
         t0 = time.monotonic()
         e = _small_star(_large_star(e))
         flagged = None
-        if step > 0 and isinstance(peel_after, int) and step >= peel_after:
+        if step > 0 and peel_after is not None and step >= peel_after:
             # ONE materialization job per superstep: the contract, the
             # violation aggregation, the dirty-root derivation and the
-            # flag join all live in the same plan, and the done-probe
+            # flag join all live in the same plan, and the dirty count
             # + peel split are cheap filters over the checkpointed
             # result.  Splitting these into separate eager checkpoints
             # costs one job-scheduling round-trip each — which
             # DOMINATES the post-peel supersteps, where the working set
             # is only the still-churning remnant.
             flagged = _flag_dirty(e).localCheckpoint(eager=True)
-            done = flagged.where(F.col("__dirty") == 1).isEmpty()
+            n_edges = flagged.where(F.col("__dirty") == 1).count()
+            done = n_edges == 0
         else:
             e = e.localCheckpoint(eager=True)
-            if step > 0:
-                done = _forest_check(e)[0]
-            else:
-                # superstep 0 always checks: its check also resolves
-                # "auto" and finds the self-loop-only nodes
-                done, n_edges, n_loop_only = _forest_check(e, loops)
-                if peel_after == "auto":
-                    peel_after = 0 if n_edges >= PEEL_AUTO_THRESHOLD else 2
-                    if stats is not None:
-                        stats["peel_after"] = peel_after
-                if peel_after == 0 and not done:
+            # superstep 0's check also finds the self-loop-only nodes
+            done, n_edges, loop_only = _forest_check(e, None if step else loops)
+            if step == 0:
+                n_loop_only = loop_only
+                if peel_after == 0 and not done and n_edges > LOCAL_FINISH_EDGES:
                     # peel superstep 0's settled stars from its
                     # materialized edges now, so that they do not ride
                     # through superstep 1's stars
@@ -272,26 +370,28 @@ def connected_components(
                 e = flagged.where(F.col("__dirty") == 1).select("src", "dst")
         if stats is not None:
             stats["superstep_walls"].append(round(time.monotonic() - t0, 2))
+            stats["superstep_edges"].append(n_edges)
+            stats["supersteps"] = step + 1
         if done:
-            if stats is not None:
-                stats["supersteps"] = step + 1
+            break
+        if n_edges <= LOCAL_FINISH_EDGES:
+            local = finish_locally(e.toArrow(), time.monotonic())
             break
     else:
         raise RuntimeError(f"closure did not converge in {max_iterations} supersteps")
-    # converged: edges (working set + peeled stars) are (node, root)
-    # stars.  In a 2-level forest no dst is ever a src
-    # (_forest_check), so the root set is EXACTLY distinct(dst) —
-    # emitting roots from the converged star edges replaces the
-    # previous all-nodes path, an O(2|E|) union+dedup over the RAW
-    # input plus an O(|V|) anti-join, with a dedup over |components|
-    # rows.  At the 9.8M-node giant-closure input that all-nodes path
-    # was a 13M-row shuffle + 9.8M-row anti-join spent almost entirely
-    # on re-deriving what the forest already states.
-    for fr in frozen:
-        e = e.union(fr)
-    assign = e.select(F.col("src").alias("node"), F.col("dst").alias("component"))
-    roots = e.select(F.col("dst").alias("node"), F.col("dst").alias("component"))
-    out = assign.union(roots.dropDuplicates())
+    # converged: the working set (unless finished locally) and the
+    # peeled stars are (node, root) stars, which state every node's
+    # component with no pass over the raw input.  In a 2-level forest
+    # no dst is ever a src (_forest_check), so the roots are exactly
+    # distinct(dst).
+    stars = frozen if local is not None else [e, *frozen]
+    out = local
+    if stars:
+        e = reduce(DataFrame.union, stars)
+        assign = e.select(F.col("src").alias("node"), F.col("dst").alias("component"))
+        roots = e.select(F.col("dst").alias("node"), F.col("dst").alias("component"))
+        forest = assign.union(roots.dropDuplicates())
+        out = forest if out is None else out.union(forest)
     # Contract: nodes appearing ONLY in self-loops still come back as
     # their own singleton component.  Superstep 0 drops src==dst rows,
     # so such nodes never reach the forest; superstep 0's forest check

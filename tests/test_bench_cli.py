@@ -78,3 +78,34 @@ def test_pipeline_checkpoint_dirs_removed_at_exit(tmp_path):
     ).stdout.split()
     assert len(out) == 2 and all(p.startswith(str(tmp_path)) for p in out)
     assert list(tmp_path.iterdir()) == []
+
+
+def test_fresh_cache_releases_then_recaches_inputs(bench):
+    # before each rep: every cached frame released first, then only the
+    # query's own inputs cached and counted again (fakes: no Spark)
+    calls = []
+
+    class Frame:
+        def __init__(self, name):
+            self.name = name
+
+        def cache(self):
+            calls.append(("cache", self.name))
+            return self
+
+        def count(self):
+            calls.append(("count", self.name))
+            return 0
+
+    class Catalog:
+        def clearCache(self):
+            calls.append(("clearCache",))
+
+    class Spark:
+        catalog = Catalog()
+
+    inp = {"docs": Frame("docs"), "emb": Frame("emb"), "ips": Frame("ips")}
+    bench.fresh_cache(Spark(), inp, ("docs", "emb"))
+    assert calls == [
+        ("clearCache",), ("cache", "docs"), ("count", "docs"), ("cache", "emb"), ("count", "emb"),
+    ]
